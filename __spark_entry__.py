@@ -65,14 +65,19 @@ def _driver_covered() -> set[str]:
 # they can never displace a genuinely-unproven query out of the
 # window (pinned in tests/test_entry_ordering.py).
 _REPROVE_CHANGED = [
-    # r9: compact() now garbage-collects old generations and the two
-    # erasure queries run it with keep_generations=0 (physical-erasure
-    # path); the streaming SMTs gained within-batch dedup + corpus-
-    # pool exclusion, changing the replay queries' drop semantics.
-    "dedup_lsh_index_erasure",
-    "embedding_pq_index_erasure",
+    # the three index SMTs now run one shared skeleton
+    # (index_base.StreamingDedup) over one id-set value, and add()
+    # commits the membership table last — every query that drives an
+    # index SMT re-proves first.
     "streaming_dedup_replay",
     "streaming_semdedup_replay",
+    "streaming_dedup_within_batch_replay",
+    "streaming_semdedup_within_batch_replay",
+    "streaming_fingerprint_dedup_replay",
+    "streaming_fingerprint_fallback_minhash",
+    "index_retention_audit",
+    "embedding_pq_retention_audit",
+    "fingerprint_retention_audit",
 ]
 
 

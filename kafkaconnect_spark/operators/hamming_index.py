@@ -101,14 +101,15 @@ every match — only the remedy is sized to the measured disease.
 from __future__ import annotations
 
 import json
-import os
-import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafkaconnect_spark.operators import index_fs as ifs
 from kafkaconnect_spark.operators.index_base import (
+    IdSet,
+    StreamingDedup,
     _clear_manifestless_debris,
     _commit_generation_table,
     _gc_locked,
@@ -120,16 +121,15 @@ from kafkaconnect_spark.operators.index_base import (
     _table_path,
     _write_manifest,
     _writer_lock,
+    as_id_set,
+    band_self_pairs,
     delete_ids,
-    drop_ids_filter,
-    ids_from_rows,
-    inline_ids,
     inline_rows,
     late_tombstones,
     membership_probe,
-    small_tombstone_ids,
     snapshot_tombstones,
     stage_pair_then_move,
+    tombstone_set,
 )
 
 _HAM_TABLES = ("hashes", "bands", "tombstones")
@@ -332,17 +332,18 @@ def match(
     index_dir: str,
     new_hashes: DataFrame,
     max_hamming: int | None = None,
-    exclude_ids: DataFrame | None = None,
+    exclude_ids: DataFrame | IdSet | None = None,
     hot_df_cap: int | None = DEFAULT_HOT_DF_CAP,
     max_hot_pairs: int = DEFAULT_MAX_HOT_PAIRS,
     hot_route_min_pairs: int = SKEW_WARN_PAIRS,
-    exclude_id_list: list | None = None,
     precollected_rows: list | None = None,
 ) -> DataFrame:
     """Read-only near-dup fingerprint pairs (id_new, id_corpus,
     hamming ≤ max_hamming) of a batch against the CURRENT generation.
-    Tombstoned — and ``exclude_ids`` — corpus ids never become
-    candidates.
+    Tombstoned — and ``exclude_ids`` (an IdSet, or a one-column
+    frame) — corpus ids never become candidates.
+    ``precollected_rows``: the batch's (id, hash) rows when the caller
+    already collected them (the streaming SMT) — skips the collect.
 
     Plan shape (the r10 hot-value routing, sized r11 — see the module
     docstring): band the batch (narrow), then ONE union-tagged
@@ -379,8 +380,6 @@ def match(
     (the pure-equi-join r9 plan, unmeasured); ``hot_route_min_pairs=0``
     forces routing whenever any value is hot (the tests' exactness
     A/B)."""
-    import warnings
-
     from pyspark import StorageLevel
 
     from kafkaconnect_spark.operators.dedup import _track_cached
@@ -455,23 +454,10 @@ def match(
         .drop("band_bucket")
     )
     tomb_dir = _table_path(index_dir, "tombstones", v)
-    # r11: a small tombstone log (common: empty) inlines to a literal
-    # filter, an oversized one keeps the anti-join — see index_base
-    tomb_ids = small_tombstone_ids(spark, tomb_dir)
-    if tomb_ids is not None:
-        idx_b = drop_ids_filter(idx_b, id_col, tomb_ids)
-    else:
-        tomb = _maybe_broadcast_tombstones(
-            spark.read.parquet(tomb_dir), tomb_dir
-        )
-        idx_b = idx_b.join(tomb, id_col, "left_anti")
-    if exclude_id_list is not None:
-        idx_b = drop_ids_filter(idx_b, id_col, exclude_id_list)
-    elif exclude_ids is not None:
-        excl = F.broadcast(
-            exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)).distinct()
-        )
-        idx_b = idx_b.join(excl, id_col, "left_anti")
+    idx_b = tombstone_set(spark, tomb_dir).drop_from(idx_b, id_col)
+    exclude = as_id_set(exclude_ids)
+    if exclude is not None:
+        idx_b = exclude.drop_from(idx_b, id_col)
     # -- band-value histogram: the routing + skew guard. With the
     # batch's multiplicities already counted driver-side the cluster
     # half shrinks to a corpus-only agg over idx_b pruned by a literal
@@ -722,10 +708,14 @@ def match(
 def add(
     spark: SparkSession, index_dir: str, new_hashes: DataFrame
 ) -> None:
-    """Stage the batch's hash/band deltas into the current generation
-    (hashes first — a fingerprint without bands is merely invisible to
-    candidate generation, the same crash-ordering argument as
-    lsh_index)."""
+    """Stage the batch's hash/band deltas into the current generation.
+    The hashes table — the MEMBERSHIP table the streaming SMT probes —
+    is committed LAST: a crash between the two renames leaves bands
+    without a hash, which candidate generation finds but verify cannot
+    score (invisible, as if absent), and membership reads the id as
+    absent, so the SMT's replay re-appends it. Committing hashes first
+    made a half-appended id read as present: the replay skipped it and
+    it never gained bands (the same argument as lsh_index)."""
     with _writer_lock(index_dir):
         m = _read_manifest(index_dir)
         npb = _check_geometry(m["bits"], m["bands"], m["max_hamming"])
@@ -738,10 +728,10 @@ def add(
             "band_bucket", _band_bucket_expr(m["band_buckets"])
         ).repartition(m["band_buckets"], "band_bucket")
         # staging writes overlap (guide §2.6); commit order keeps the
-        # crash contract — hashes BEFORE bands
+        # crash contract — bands BEFORE hashes
         stage_pair_then_move(
             spark, index_dir, m["version"],
-            (hd, "hashes", "hash_bucket"), (bd, "bands", "band_bucket"),
+            (bd, "bands", "band_bucket"), (hd, "hashes", "hash_bucket"),
         )
 
 
@@ -808,16 +798,123 @@ def drop_generations(index_dir: str, keep: int = 1) -> dict:
         return _gc_locked(index_dir, m, keep, _HAM_TABLES)
 
 
-def _membership(
-    spark: SparkSession, index_dir: str, ids_df: DataFrame, m: dict,
-    ids_list: list | None = None,
-) -> DataFrame:
-    """Bucket-pruned membership probe over the stored hash table
-    (index_base.membership_probe with this module's geometry)."""
-    return membership_probe(
-        spark, index_dir, ids_df, m["version"], "hashes",
-        m["hash_buckets"], "hash_bucket", ids_list=ids_list,
-    )
+_UNSET = object()  # hot_df_cap=None means "disable the guard", so the
+# transform needs a distinct "use match's default" sentinel
+
+
+class _FingerprintDedup(StreamingDedup):
+    """FingerprintDedupIndex plug-in for index_base.StreamingDedup: the
+    batch's (id, hash) rows are collected ONCE with its ids and serve
+    the within-batch guard and the corpus match's driver-side banding
+    (guide §8 — decide with small rows); self-candidates share a
+    (band, band_val) and verify by exact Hamming distance.
+
+    Within-batch guard (r11): the self-join is batch-bounded but NOT
+    skew-bounded — on template-text corpora hot band values put
+    Σ n·(n−1) past the line the corpus match enforces, so the batch is
+    refused with HotPairRefusalError before any join materializes.
+    A refusal from the guard or from match() reroutes the whole batch
+    through the MinHash fallback when one is configured."""
+
+    cols = ("id_new", "id_corpus", "hamming")
+    row_width = 2
+    read_manifest = staticmethod(_read_manifest)
+    refusals = (HotPairRefusalError,)
+
+    def keyed(self, b):
+        from kafkaconnect_spark.operators.dedup import simhash_hex64
+
+        m, rid = b.m, f"value.{self.id_field}"
+        b.mh = self.max_hamming if self.max_hamming is not None else m["max_hamming"]
+        b.npb = _check_geometry(m["bits"], m["bands"], b.mh)
+        if self.hash_field is not None:
+            # a NULL or wrong-width fingerprint can never band-match: the
+            # record passes through as a survivor but never enters the
+            # index (a null band_val lands in the hive default partition
+            # — r9 ADVICE #2)
+            h = F.col(f"value.{self.hash_field}")
+            return b.records.where(h.isNotNull() & (F.length(h) == m["bits"] // 4)).select(
+                F.col(rid).alias(m["id_col"]), h.alias(m["hash_col"])
+            ), rid
+        if m["bits"] != 64:  # simhash_hex64 emits 16 nibbles (r9 ADVICE #1)
+            raise ValueError(
+                f"text_field mode derives 64-bit SimHash but the index at "
+                f"{self.index_dir} was built with bits={m['bits']}; rebuild it at "
+                "bits=64 or supply hash_field with matching-width fingerprints"
+            )
+        i, t = F.col(rid).alias(m["id_col"]), F.col(f"value.{self.text_field}").alias("_t")
+        sim = simhash_hex64(b.records.select(i, t), text_col="_t", id_col=m["id_col"])
+        return sim.withColumnRenamed("simhash_hex", m["hash_col"]), rid
+
+    def sign(self, b, hold):
+        m = b.m
+        b.hashes = hold(b.keyed)
+        b.banded = _banded(b.hashes, m["bands"], b.npb, m["id_col"], m["hash_col"])
+        valid = b.ids.ids is not None and _valid_batch_rows(b.rows, m["bits"] // 4)
+        b.valid_rows = b.rows if valid else None
+
+    def guard(self, b):
+        from collections import Counter
+
+        if self.match_kw.get("hot_df_cap", DEFAULT_HOT_DF_CAP) is None:
+            return  # hot_df_cap=None disables the guard, both halves
+        line = self.match_kw.get("max_hot_pairs", DEFAULT_MAX_HOT_PAIRS)
+        if b.valid_rows is not None:  # replay the banding driver-side
+            w = b.npb
+            vm = Counter(
+                (k, h[k * w:(k + 1) * w]) for _i, h in b.valid_rows for k in range(b.m["bands"])
+            ).values()
+        else:
+            counts = b.banded.groupBy("band", "band_val").count()
+            vm = [r[0] for r in counts.where("count > 1").select("count").collect()]
+        est = sum(n * (n - 1) for n in vm)
+        if est > line:
+            raise HotPairRefusalError(
+                f"within-batch band-collision volume {est:,} exceeds max_hot_pairs="
+                f"{line:,}: these fingerprints cannot discriminate within one batch — "
+                "text near-dup belongs to lsh_index (MinHash); or raise max.hot.pairs."
+            )
+
+    def membership(self, b):
+        return membership_probe(
+            b.spark, self.index_dir, b.ids, b.m["version"], "hashes",
+            b.m["hash_buckets"], "hash_bucket", b.m["id_col"],
+        )
+
+    def self_pairs(self, b):
+        i, h = b.m["id_col"], b.m["hash_col"]
+        ha = b.hashes.select(F.col(i).alias("id_new"), F.col(h).alias("__ha"))
+        hb = b.hashes.select(F.col(i).alias("id_corpus"), F.col(h).alias("__hb"))
+        return (
+            band_self_pairs(b.banded, i, "band_val")
+            .join(ha, "id_new").join(hb, "id_corpus")
+            .select("id_new", "id_corpus", _hamming_expr("__ha", "__hb").alias("hamming"))
+            .where(F.col("hamming") <= b.mh)
+        )
+
+    def match(self, b, drops):
+        # the survivors' rows: the collected batch minus the drops
+        gone, rows = set(drops.ids or ()), b.valid_rows if drops.ids is not None else None
+        return match(
+            b.spark, self.index_dir, drops.drop_from(b.hashes, b.m["id_col"]),
+            max_hamming=b.mh, exclude_ids=b.ids, **self.match_kw,
+            precollected_rows=None if rows is None else [r for r in rows if r[0] not in gone],
+        )
+
+    def add(self, b, skip):
+        add(b.spark, self.index_dir, skip.drop_from(b.hashes, b.m["id_col"]))
+
+    def reroute(self, exc):
+        if self.fallback_index_dir is None:
+            return None
+        from kafkaconnect_spark.operators.lsh_index import streaming_dedup_transform
+
+        # the refusal fires before any report/append: the fingerprint
+        # index is untouched, and the WHOLE batch gets the MinHash answer
+        d = self.fallback_index_dir
+        warnings.warn(f"hamming_index fingerprint SMT: {exc} Rerouting the batch "
+                      f"through the MinHash fallback index at {d}", stacklevel=3)
+        return streaming_dedup_transform(d, self.id_field, self.text_field)
 
 
 _UNSET = object()  # hot_df_cap=None means "disable the guard", so the
@@ -825,362 +922,57 @@ _UNSET = object()  # hot_df_cap=None means "disable the guard", so the
 
 
 def streaming_fingerprint_dedup_transform(
-    index_dir: str,
-    id_field: str = "doc_id",
-    hash_field: str | None = None,
-    text_field: str | None = None,
-    max_hamming: int | None = None,
-    append_survivors: bool = True,
-    hot_df_cap: int | None = _UNSET,
-    max_hot_pairs: int | None = None,
-    hot_route_min_pairs: int | None = None,
-    fallback_index_dir: str | None = None,
+    index_dir: str, id_field: str = "doc_id", hash_field: str | None = None,
+    text_field: str | None = None, max_hamming: int | None = None,
+    hot_df_cap: int | None = _UNSET, max_hot_pairs: int | None = None,
+    hot_route_min_pairs: int | None = None, fallback_index_dir: str | None = None,
 ):
     """DataFrame→DataFrame SMT: deduplicate a micro-batch of
     FINGERPRINT records within the batch and against the persisted
     Hamming index — the third modality of the streaming×index fusion
     (text shingles → DedupIndex, embeddings → SemDeDupIndex,
-    fixed-width fingerprints → this). Spec form:
+    fixed-width fingerprints → this). Semantics, replay argument and
+    plug-in contract: index_base.StreamingDedup. Spec form:
 
         {"type": "kafkaconnect_spark.FingerprintDedupIndex",
          "index.dir": "...", "id.field": "doc_id",
          "hash.field": "phash",          # hex fingerprint in value…
          "text.field": "text",           # …OR derive 64-bit SimHash
-         "max.hamming": "4",
-         "append.survivors": "true"}
+         "max.hamming": "4"}
 
     Exactly ONE of ``hash_field`` / ``text_field`` is given: with
     hash_field the records already carry the hex fingerprint (e.g. an
     upstream aHash extractor on an image stream); with text_field the
-    64-bit SimHash hex is derived per record
-    (dedup.simhash_hex64 — narrow, batch-sized). The index manifest
-    must have been built with matching geometry (bits=64 for the
-    simhash path).
-
-    Semantics per batch — the r9 within-batch structure shared with
-    the other two SMTs (see lsh_index.streaming_dedup_transform for
-    the full replay-idempotency argument, which transfers verbatim):
-    (1) within-batch self-dedup: band the batch against ITSELF, verify
-    exact Hamming, resolve near-dup groups by the shared winner rule
-    (indexed mate beats fresh; lowest id among equals); (2) corpus
-    match of the self-survivors with the batch's own ids EXCLUDED
-    from the candidate pool; (3) the drop report is materialized
-    under the index BEFORE survivors are added; survivors already
-    present are not re-added, so replays leave stored state
-    byte-identical.
+    64-bit SimHash hex is derived per record (dedup.simhash_hex64 —
+    narrow, batch-sized), against an index built with bits=64.
 
     Refusal fallback (r11 — the judge's "make the escape hatch
-    executable"): ``match`` REFUSES past ``max_hot_pairs`` hot
-    distinct-hash pairs, naming the MinHash index as the right tool
-    for text whose fingerprints cannot discriminate. With
+    executable"): ``match`` and the within-batch guard REFUSE past
+    ``max_hot_pairs``, naming the MinHash index as the right tool for
+    text whose fingerprints cannot discriminate. With
 
         "fallback.index": "minhash",
         "fallback.index.dir": "<lsh index dir>"
 
     (kwarg ``fallback_index_dir``) the refusal is CAUGHT and the whole
-    micro-batch reroutes through
-    ``lsh_index.streaming_dedup_transform`` over that index — the
-    batch's output, drop report, and survivor appends are then exactly
-    the LSH-only answer (reports land under the FALLBACK index; the
-    refused fingerprint index is left untouched, nothing half-written
-    — the refusal fires before this transform's report/append).
-    Text-field mode only: a fallback needs raw text to shingle, which
-    a bare fingerprint stream does not carry. ``hot_df_cap`` /
+    micro-batch reroutes through ``lsh_index.streaming_dedup_transform``
+    over that index — output, drop report (under the FALLBACK index)
+    and appends are exactly the LSH-only answer; the refused
+    fingerprint index is left untouched. Text-field mode only: a
+    fallback needs raw text to shingle. ``hot_df_cap`` /
     ``max_hot_pairs`` / ``hot_route_min_pairs`` pass through to
     ``match`` (spec keys ``hot.df.cap`` / ``max.hot.pairs`` /
-    ``hot.route.min.pairs``) so a deployment can place the refusal
-    line; unset values use match's defaults."""
-    import uuid as _uuid
-    import warnings
-
+    ``hot.route.min.pairs``); unset values use match's defaults."""
     if (hash_field is None) == (text_field is None):
-        raise ValueError(
-            "exactly one of hash_field / text_field must be given"
-        )
-    _match_kw: dict = {}
+        raise ValueError("exactly one of hash_field / text_field must be given")
+    if fallback_index_dir is not None and text_field is None:
+        raise ValueError("fallback.index=minhash requires text.field mode: the MinHash "
+                         "fallback shingles raw text, which a hash.field stream lacks")
+    match_kw = {"max_hot_pairs": max_hot_pairs, "hot_route_min_pairs": hot_route_min_pairs}
+    match_kw = {k: v for k, v in match_kw.items() if v is not None}
     if hot_df_cap is not _UNSET:
-        _match_kw["hot_df_cap"] = hot_df_cap
-    if max_hot_pairs is not None:
-        _match_kw["max_hot_pairs"] = max_hot_pairs
-    if hot_route_min_pairs is not None:
-        _match_kw["hot_route_min_pairs"] = hot_route_min_pairs
-    if fallback_index_dir is not None:
-        if text_field is None:
-            raise ValueError(
-                "fallback.index=minhash requires text.field mode: the "
-                "MinHash fallback shingles raw text, which a "
-                "hash.field fingerprint stream does not carry"
-            )
-        from kafkaconnect_spark.operators.lsh_index import (
-            streaming_dedup_transform as _lsh_smt,
-        )
-
-        _fallback = _lsh_smt(
-            fallback_index_dir,
-            id_field=id_field,
-            text_field=text_field,
-            append_survivors=append_survivors,
-        )
-    else:
-        _fallback = None
-
-    def _apply(records: DataFrame) -> DataFrame:
-        spark = records.sparkSession
-        from pyspark import StorageLevel
-
-        from kafkaconnect_spark.operators.dedup import (
-            release_cached,
-            simhash_hex64,
-        )
-        from kafkaconnect_spark.operators.index_base import (
-            _auto_compact_reports,
-            _winner_rule_drops,
-        )
-
-        _auto_compact_reports(spark, index_dir)
-        m = _read_manifest(index_dir)
-        id_col, hash_col = m["id_col"], m["hash_col"]
-        mh = max_hamming if max_hamming is not None else m["max_hamming"]
-        npb = _check_geometry(m["bits"], m["bands"], mh)
-        if hash_field is not None:
-            # records with a NULL or wrong-width fingerprint can never
-            # band-match, so without this filter they would ALWAYS
-            # survive and be appended with a junk hash into the stored
-            # tables (null band_val lands in the hive default
-            # partition, polluting membership counts — r9 ADVICE #2).
-            # They still pass through as survivors; they just never
-            # enter the index, mirroring simhash_hex64's null/blank
-            # text filter.
-            hashes = records.select(
-                F.col(f"value.{id_field}").alias(id_col),
-                F.col(f"value.{hash_field}").alias(hash_col),
-            ).where(
-                F.col(hash_col).isNotNull()
-                & (F.length(hash_col) == m["bits"] // 4)
-            )
-        else:
-            if m["bits"] != 64:
-                # simhash_hex64 emits exactly 16 nibbles; against an
-                # index built at another width _hamming_expr's
-                # substring slices would conv('') to NULL hamming —
-                # every corpus pair silently filtered and mixed-width
-                # hashes appended into the stored table (r9 ADVICE #1)
-                raise ValueError(
-                    f"text_field mode derives 64-bit SimHash but the "
-                    f"index at {index_dir} was built with "
-                    f"bits={m['bits']}; rebuild the index at bits=64 "
-                    "or supply hash_field with matching-width "
-                    "fingerprints"
-                )
-            hashes = simhash_hex64(
-                records.select(
-                    F.col(f"value.{id_field}").alias(id_col),
-                    F.col(f"value.{text_field}").alias("__txt"),
-                ),
-                text_col="__txt",
-                id_col=id_col,
-            ).withColumnRenamed("simhash_hex", hash_col)
-        hashes = hashes.persist(StorageLevel.MEMORY_AND_DISK)
-        # r11: ONE bounded collect of the batch's (id, hash) rows
-        # serves the id-set literals (the r11a inline_ids contract),
-        # the within-batch guard's histogram, AND the corpus match's
-        # driver-side banding (guide §8 — decide with small rows);
-        # oversized or malformed batches keep every cluster path
-        rows = inline_rows(hashes, [id_col, hash_col])
-        if rows is not None:
-            # r12 lineage truncation (guide §5; r11 verdict #6): every
-            # downstream action over the persisted frame still pays
-            # Catalyst re-analysis of the 64-aggregate simhash tree in
-            # its lineage (measured ~0.19 s/action vs ~0.08 for the
-            # same frame behind a localCheckpoint; a driver-side
-            # LocalRelation rebuild measured WORSE, ~0.26 s/action
-            # plus single-task compute). A bounded batch swaps the
-            # cache for an eager localCheckpoint — same rows, plans
-            # downstream read a LogicalRDD instead of the wide tree.
-            # Over-cap (corpus-scale) batches keep the r10 persisted
-            # plan: localCheckpoint trades recompute-on-failure for
-            # speed, which is only taken on batch-bounded data (the
-            # SMT is replay-idempotent, so a lost-executor batch
-            # failure replays cleanly either way).
-            lc = hashes.localCheckpoint()
-            hashes.unpersist()
-            hashes = lc
-        ids = hashes.select(id_col)
-        ids_list = ids_from_rows(rows) if rows is not None else None
-        batch_rows = (
-            rows
-            if ids_list is not None and _valid_batch_rows(rows, m["bits"] // 4)
-            else None
-        )
-        pre = _membership(spark, index_dir, ids, m, ids_list=ids_list)
-        pre_ids = inline_ids(pre) if ids_list is not None else None
-        if pre_ids is None:
-            pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-        # -- step 1: within-batch self-dedup (batch-sized both sides) --
-        b_new = _banded(hashes, m["bands"], npb, id_col, hash_col)
-        # within-batch candidate-volume guard (r11): the self-join is
-        # batch-bounded but NOT skew-bounded — on template-text
-        # corpora the hot band values put Σ n·(n−1) past the same
-        # line the corpus match enforces (the sf100 ladder's SMT wall
-        # hit HERE, before match could refuse). One batch-sized
-        # map-side-combined agg to a single scalar, before any join
-        # materializes — the SemDeDup guard's property, third index.
-        _line = _match_kw.get("max_hot_pairs", DEFAULT_MAX_HOT_PAIRS)
-        _guard_on = _match_kw.get("hot_df_cap", DEFAULT_HOT_DF_CAP) is not None
-        if not _guard_on:
-            est_self = 0  # hot_df_cap=None disables the guard, both halves
-        elif batch_rows is not None:
-            # the collected batch replays the banding driver-side —
-            # the guard's Σ n·(n−1) needs no cluster job (r11)
-            from collections import Counter
-
-            _vm: Counter = Counter()
-            for _i, h in batch_rows:
-                for b in range(m["bands"]):
-                    _vm[(b, h[b * npb:(b + 1) * npb])] += 1
-            est_self = sum(n * (n - 1) for n in _vm.values() if n > 1)
-        else:
-            est_self = (
-                b_new.groupBy("band", "band_val")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .where(F.col("__n") > 1)
-                .agg(F.sum(F.col("__n") * (F.col("__n") - 1)))
-                .collect()[0][0]
-                or 0
-            )
-        if _guard_on and est_self > _line:
-            refusal_msg = (
-                f"within-batch band-collision volume {est_self:,} "
-                f"exceeds max_hot_pairs={_line:,}: these fingerprints "
-                "cannot discriminate within one micro-batch — "
-                "corpus-scale text near-dup belongs to "
-                "operators/lsh_index (MinHash), or pass a larger "
-                "max.hot.pairs to proceed anyway."
-            )
-            if _fallback is None:
-                pre.unpersist()
-                hashes.unpersist()
-                raise HotPairRefusalError(refusal_msg)
-            warnings.warn(
-                f"hamming_index fingerprint SMT: {refusal_msg} "
-                f"Rerouting the batch through the MinHash fallback "
-                f"index at {fallback_index_dir}",
-                stacklevel=2,
-            )
-            pre.unpersist()
-            hashes.unpersist()
-            return _fallback(records)
-        self_cands = (
-            b_new.select(F.col(id_col).alias("id_new"), "band", "band_val")
-            .join(
-                b_new.select(
-                    F.col(id_col).alias("id_corpus"), "band", "band_val"
-                ),
-                ["band", "band_val"],
-            )
-            .where(F.col("id_new") != F.col("id_corpus"))
-            .select("id_new", "id_corpus")
-            .distinct()
-        )
-        ha = hashes.select(F.col(id_col).alias("id_new"), F.col(hash_col).alias("__ha"))
-        hb = hashes.select(
-            F.col(id_col).alias("id_corpus"), F.col(hash_col).alias("__hb")
-        )
-        self_pairs = (
-            self_cands.join(ha, "id_new")
-            .join(hb, "id_corpus")
-            .select(
-                "id_new",
-                "id_corpus",
-                _hamming_expr("__ha", "__hb").alias("hamming"),
-            )
-            .where(F.col("hamming") <= mh)
-        )
-        self_drops = _winner_rule_drops(
-            self_pairs, pre, "id_new", "id_corpus", pre_ids=pre_ids
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sd_ids = inline_ids(self_drops, "id_new")
-        if sd_ids is not None:
-            surv1 = drop_ids_filter(hashes, id_col, sd_ids)
-            # the survivors' (id, hash) rows are the collected batch
-            # minus the dropped ids — match() reuses them driver-side
-            # instead of re-collecting (null ids survive the drop
-            # filter, mirroring drop_ids_filter's null handling)
-            _sd = set(sd_ids)  # hoisted: O(batch + drops), not O(batch × drops)
-            surv_rows = (
-                [r for r in batch_rows if r[0] is None or r[0] not in _sd]
-                if batch_rows is not None
-                else None
-            )
-        else:
-            surv1 = hashes.join(
-                F.broadcast(
-                    self_drops.select(F.col("id_new").alias(id_col)).distinct()
-                ),
-                id_col,
-                "left_anti",
-            )
-            surv_rows = None
-        # -- step 2: corpus match, batch ids pool-excluded --
-        try:
-            pairs = match(
-                spark, index_dir, surv1, max_hamming=mh, exclude_ids=ids,
-                exclude_id_list=ids_list,
-                precollected_rows=surv_rows,
-                **_match_kw,
-            )
-        except HotPairRefusalError as refusal:
-            if _fallback is None:
-                raise
-            # the refusal fired before any report/append — the
-            # fingerprint index is untouched; reroute the WHOLE
-            # original batch (within-batch semantics included) so the
-            # result is exactly the MinHash-only answer
-            warnings.warn(
-                f"hamming_index fingerprint SMT: corpus match refused "
-                f"({refusal}); rerouting the batch through the MinHash "
-                f"fallback index at {fallback_index_dir}",
-                stacklevel=2,
-            )
-            self_drops.unpersist()
-            pre.unpersist()
-            hashes.unpersist()
-            return _fallback(records)
-        report = os.path.join(
-            index_dir, "reports", f"stream-{_uuid.uuid4().hex[:12]}"
-        )
-        self_drops.select("id_new", "id_corpus", "hamming").unionByName(
-            pairs.select("id_new", "id_corpus", "hamming")
-        ).write.mode("errorifexists").parquet(report)
-        release_cached(pairs)
-        rep = spark.read.parquet(report)
-        dup_list = inline_ids(rep, "id_new", narrow=True)
-        if dup_list is not None:
-            survivors = drop_ids_filter(
-                records, f"value.{id_field}", dup_list
-            )
-        else:
-            dup_ids = rep.select(F.col("id_new").alias(id_col)).distinct()
-            survivors = records.join(
-                F.broadcast(dup_ids),
-                records[f"value.{id_field}"] == dup_ids[id_col],
-                "left_anti",
-            )
-        if append_survivors:
-            if dup_list is not None and pre_ids is not None:
-                not_add = sorted({*dup_list, *pre_ids})
-                add(spark, index_dir, drop_ids_filter(hashes, id_col, not_add))
-            else:
-                dup_b = F.broadcast(
-                    rep.select(F.col("id_new").alias(id_col)).distinct()
-                )
-                surv_hashes = hashes.join(dup_b, id_col, "left_anti")
-                to_add = surv_hashes.join(F.broadcast(pre), id_col, "left_anti")
-                add(spark, index_dir, to_add)
-        self_drops.unpersist()
-        if pre_ids is None:
-            pre.unpersist()
-        hashes.unpersist()
-        return survivors
-
-    return _apply
+        match_kw["hot_df_cap"] = hot_df_cap
+    return _FingerprintDedup(
+        index_dir, id_field=id_field, hash_field=hash_field, text_field=text_field,
+        max_hamming=max_hamming, match_kw=match_kw, fallback_index_dir=fallback_index_dir,
+    )

@@ -197,72 +197,40 @@ def _no_aqe(spark):
         spark.conf.set(key, old)
 
 
-def inline_ids(
+def inline_rows(
     df: DataFrame,
-    col: str | None = None,
-    cap: int = SMALL_ID_INLINE_CAP,
+    cols: list[str],
+    cap: int | None = None,
     narrow: bool = False,
-) -> list | None:
-    """Distinct non-null values of ``df[col]`` as Python literals, or
-    None when the frame has more than ``cap`` rows or a non-int/str
-    id type (callers then keep the broadcast-join path). One bounded
-    job: `limit(cap + 1)` stops the scan early however large the
-    frame is; the raw-row bound is conservative (a frame with more
-    raw rows than cap but fewer distinct ids falls back — correct,
-    just not inlined). Nulls are dropped: a null id matches nothing
-    in either a semi- or an anti-join, so it contributes nothing to
-    an IN set either.
+) -> list[tuple] | None:
+    """Up to ``cap`` (default: SMALL_ID_INLINE_CAP, read at call time)
+    rows of ``df[cols]`` as Python tuples, or None when the frame has
+    more (callers keep their cluster plans). One bounded job:
+    `limit(cap + 1)` stops the scan early however large the frame is.
+    limit → coalesce(1) → collect runs as ONE job; a bare
+    limit(cap+1).collect() instead runs executeTake's incremental
+    partition probing — measured 4+ jobs per call at 32 partitions.
+    Rows are neither deduplicated nor validated.
 
     ``narrow=True`` = the CALLER asserts df's plan is exchange-free
-    (plain scan/filter/project) — the collect then runs without the
-    AQE wrapper job (see _no_aqe). Never set it on a frame that
-    joins/aggregates: those want AQE's runtime broadcast (a blanket
-    wrap measured WORSE end-to-end, r12)."""
-    c = col or df.columns[0]
-    # limit → coalesce(1) → collect runs as ONE job: LocalLimit stops
-    # each input partition at cap+1 rows, the single merged task stops
-    # at cap+1 total. A bare limit(cap+1).collect() instead runs
-    # executeTake's incremental partition probing — measured 4+ jobs
-    # per call at 32 partitions (1 → 4 → 16 → all scale-up).
+    (plain scan/filter/project, or a materialized cache) — the collect
+    then runs without the AQE wrapper job (see _no_aqe). Never set it
+    on a frame that joins/aggregates: those want AQE's runtime
+    broadcast (a blanket wrap measured WORSE end-to-end, r12)."""
+    cap = SMALL_ID_INLINE_CAP if cap is None else cap
     with _no_aqe(df.sparkSession) if narrow else contextlib.nullcontext():
-        rows = (
-            df.select(F.col(c).alias("__id"))
-            .limit(cap + 1)
-            .coalesce(1)
-            .collect()
-        )
-    if len(rows) > cap:
-        return None
-    out = {r[0] for r in rows if r[0] is not None}
-    try:
-        for v in out:
-            _sql_id_literal(v)
-    except TypeError:
-        return None
-    return sorted(out)
-
-
-def inline_rows(
-    df: DataFrame, cols: list[str], cap: int = SMALL_ID_INLINE_CAP
-) -> list[tuple] | None:
-    """The row-level twin of :func:`inline_ids`: up to ``cap`` rows of
-    ``df[cols]`` as Python tuples, or None past the cap (callers keep
-    their cluster plans). Same bounded single-job shape
-    (limit(cap+1) → coalesce(1) → collect). Unlike inline_ids this
-    does NOT dedup, drop nulls, or validate literal types — callers
-    that build predicates from the values run their own checks."""
-    rows = df.select(*cols).limit(cap + 1).coalesce(1).collect()
+        rows = df.select(*cols).limit(cap + 1).coalesce(1).collect()
     if len(rows) > cap:
         return None
     return [tuple(r) for r in rows]
 
 
 def ids_from_rows(rows: list[tuple], idx: int = 0) -> list | None:
-    """inline_ids' post-processing over an inline_rows result: the
-    distinct non-null values of column ``idx`` as sorted literals, or
-    None when a value is not an int/str id type (callers keep the
-    join path) — so ONE bounded collect can serve both the id-set
-    predicates and driver-side decisioning over the other columns."""
+    """The distinct non-null values of column ``idx`` of collected rows
+    as sorted literals, or None when a value is not an int/str id type
+    (callers keep the join path). Nulls are dropped: a null id matches
+    nothing in a semi- or an anti-join, so it adds nothing to an IN
+    set either."""
     out = {r[idx] for r in rows if r[idx] is not None}
     try:
         for v in out:
@@ -272,15 +240,25 @@ def ids_from_rows(rows: list[tuple], idx: int = 0) -> list | None:
     return sorted(out)
 
 
+def inline_ids(
+    df: DataFrame, col: str | None = None, cap: int | None = None,
+    narrow: bool = False,
+) -> list | None:
+    """Distinct non-null values of ``df[col]`` as sorted literals, or
+    None past the cap or for a non-int/str id type. The raw-row bound
+    is conservative: more raw rows than cap but fewer distinct ids
+    falls back — correct, just not inlined."""
+    rows = inline_rows(df, [col or df.columns[0]], cap, narrow)
+    return None if rows is None else ids_from_rows(rows)
+
+
 def keep_ids_pred(col_sql: str, ids: list):
     """`(col) IN (ids)` as a predicate; an empty set keeps nothing —
     exactly a semi-join against an empty frame (null ids evaluate
     null → filtered, matching semi-join behavior). ``col_sql`` is a
     SQL column expression, NOT a Column: the predicate is built as
     one JVM-parsed expression string because Column.isin(n values)
-    costs n py4j round-trips (~0.5 s per 500-id predicate, measured —
-    it was the dominant driver-side term of the first cut of this
-    optimization)."""
+    costs n py4j round-trips (~0.5 s per 500-id predicate, measured)."""
     if not ids:
         return F.lit(False)
     return F.expr(
@@ -301,8 +279,101 @@ def drop_ids_filter(df: DataFrame, col_sql: str, ids: list) -> DataFrame:
     )
 
 
+class IdSet:
+    """One batch-bounded id set (batch ids, membership, drops, pool
+    exclusions, tombstones) in one of two forms, so no consumer
+    branches on its size:
+
+    - ``ids``: sorted Python literals, when the set fits
+      SMALL_ID_INLINE_CAP — consumed as InSet predicates fused into
+      the consumer's stage (no join, no broadcast-build job);
+    - ``frame``: a one-column frame (column ``__id``) past the cap —
+      consumed by anti/semi/left joins, broadcast unless the set is
+      built with ``broadcast=False`` (an oversized tombstone log).
+
+    Both forms are exact twins: drop_from = left_anti join (null ids
+    kept), keep_in = left_semi join (null ids dropped), flag = a
+    boolean membership column (pinned in tests/test_inline_ids.py)."""
+
+    def __init__(self, ids: list | None = None, frame: DataFrame | None = None,
+                 broadcast: bool = True):
+        self.ids, self.frame, self.broadcast = ids, frame, broadcast
+
+    @classmethod
+    def of(cls, df: DataFrame, col: str | None = None, narrow: bool = False) -> IdSet:
+        """Built once from ``df[col]``: one bounded collect (see
+        inline_rows); past the cap the distinct ids are materialized
+        by an eager localCheckpoint, so the set never re-reads what
+        ``df`` read (an index table a later append rewrites)."""
+        c = col or df.columns[0]
+        return cls.from_rows(inline_rows(df, [c], narrow=narrow), df, c)
+
+    @classmethod
+    def from_rows(cls, rows: list[tuple] | None, df: DataFrame, col: str) -> IdSet:
+        """The set from ``df``'s inline_rows result (``col`` first;
+        None = past the cap), so one collect can also serve the
+        caller's own driver-side use of the other columns."""
+        ids = None if rows is None else ids_from_rows(rows)
+        if ids is not None:
+            return cls(ids)
+        return cls(frame=df.select(F.col(col).alias("__id")).distinct().localCheckpoint())
+
+    @classmethod
+    def wrap(cls, df: DataFrame, broadcast: bool = True) -> IdSet:
+        """Frame form over a caller's one-column id frame, lazily."""
+        return cls(frame=df.select(F.col(df.columns[0]).alias("__id")),
+                   broadcast=broadcast)
+
+    def _join(self, df: DataFrame, col_sql: str, how: str, frame=None) -> DataFrame:
+        frame = self.frame if frame is None else frame
+        on = F.expr(col_sql) == F.col("__id")
+        return df.join(F.broadcast(frame) if self.broadcast else frame, on, how).drop("__id")
+
+    def drop_from(self, df: DataFrame, col_sql: str) -> DataFrame:
+        if self.ids is None:
+            return self._join(df, col_sql, "left_anti")
+        return drop_ids_filter(df, col_sql, self.ids)
+
+    def keep_in(self, df: DataFrame, col_sql: str) -> DataFrame:
+        if self.ids is None:
+            return self._join(df, col_sql, "left_semi")
+        return df.where(keep_ids_pred(col_sql, self.ids))
+
+    def flag(self, df: DataFrame, col_sql: str, name: str) -> DataFrame:
+        if self.ids is not None:
+            return df.withColumn(name, keep_ids_pred(col_sql, self.ids))
+        hit = self.frame.distinct().withColumn(name, F.lit(True))
+        return self._join(df, col_sql, "left", hit).fillna(False, [name])
+
+    def union(self, other: IdSet) -> IdSet:
+        if self.ids is not None and other.ids is not None:
+            return IdSet(sorted({*self.ids, *other.ids}))
+        a, o = (self, other) if self.frame is not None else (other, self)
+        rest = o.frame if o.frame is not None else a.frame.sparkSession.createDataFrame(
+            [(i,) for i in o.ids], a.frame.schema
+        )
+        return IdSet(frame=a.frame.unionByName(rest))
+
+
+def as_id_set(ids) -> IdSet | None:
+    """A match() ``exclude_ids`` argument as an IdSet: an IdSet passes
+    through; a caller's one-column frame keeps the broadcast join."""
+    return ids if ids is None or isinstance(ids, IdSet) else IdSet.wrap(ids)
+
+
+def tombstone_set(spark: SparkSession, tomb_dir: str) -> IdSet:
+    """The tombstone log as an IdSet: literals when small (the common
+    case is EMPTY — zero join operators), else the log itself, with
+    the broadcast hint only under TOMBSTONE_BROADCAST_MAX_BYTES."""
+    ids = small_tombstone_ids(spark, tomb_dir)
+    if ids is not None:
+        return IdSet(ids)
+    small = ifs.dir_bytes(tomb_dir) <= TOMBSTONE_BROADCAST_MAX_BYTES
+    return IdSet.wrap(spark.read.parquet(tomb_dir), broadcast=small)
+
+
 def small_tombstone_ids(
-    spark: SparkSession, tomb_dir: str, cap: int = SMALL_ID_INLINE_CAP
+    spark: SparkSession, tomb_dir: str, cap: int | None = None
 ) -> list | None:
     """Tombstoned ids as literals when the log is small (the common
     case is EMPTY — zero join operators instead of a broadcast
@@ -541,21 +612,33 @@ def stage_pair_then_move(
     _move_staged(*staged2)
 
 
+def band_self_pairs(banded: DataFrame, id_col: str, key: str) -> DataFrame:
+    """Within-batch candidates of a banded index: the distinct
+    (id_new, id_corpus) pairs of a batch's banded frame that share a
+    (band, ``key``) — a batch-sized equi-join, never the corpus."""
+    def side(name: str) -> DataFrame:
+        return banded.select(F.col(id_col).alias(name), "band", key)
+
+    return (
+        side("id_new").join(side("id_corpus"), ["band", key])
+        .where(F.col("id_new") != F.col("id_corpus"))
+        .select("id_new", "id_corpus")
+        .distinct()
+    )
+
+
 def _winner_rule_drops(
-    pairs: DataFrame,
-    pre: DataFrame,
-    new_col: str,
-    cor_col: str,
-    pre_ids: list | None = None,
+    pairs: DataFrame, pre: IdSet, new_col: str, cor_col: str
 ) -> DataFrame:
     """Apply the within-batch survivor rule to verified same-batch
     near-dup pairs: the record on the ``new_col`` side DROPS when its
-    mate (a) is already in the index while it is not — the standing
-    corpus wins, exactly as in the corpus match, which catches a new
-    near-dup arriving in the same micro-batch as a REDELIVERY of the
-    indexed doc it duplicates (r8 ADVICE #3's leak) — or (b) has the
-    same membership status and the smaller id (the deterministic
-    tie-break the r8 judge prescribed).
+    mate (a) is already in the index (``pre``, membership at batch
+    start) while it is not — the standing corpus wins, exactly as in
+    the corpus match, which catches a new near-dup arriving in the
+    same micro-batch as a REDELIVERY of the indexed doc it duplicates
+    (r8 ADVICE #3's leak) — or (b) has the same membership status and
+    the smaller id (the deterministic tie-break the r8 judge
+    prescribed).
 
     Replay convergence is structural: the only membership delta a
     crash-replay can introduce is the original run's own winners, and
@@ -563,39 +646,14 @@ def _winner_rule_drops(
     becomes "indexed" and its dropped mates stayed out, (b) because
     ids don't change. Idempotent under any crash point (proof cases
     enumerated in tests/test_index_r9.py::test_winner_rule_replay_*).
-
-    ``pre_ids`` (r11): the membership set as collected literals —
-    the rule becomes a pure InSet predicate with ZERO joins (the pair
-    ids are join outputs, never null). Callers pass it when the set
-    fits SMALL_ID_INLINE_CAP; None keeps the broadcast-join shape.
-    """
-    if pre_ids is not None:
-        in_new = keep_ids_pred(new_col, pre_ids)
-        in_cor = keep_ids_pred(cor_col, pre_ids)
-        return pairs.where(
-            (in_cor & ~in_new)
-            | ((in_cor == in_new) & (F.col(cor_col) < F.col(new_col)))
-        )
-    pre_new = pre.select(
-        F.col(pre.columns[0]).alias(new_col), F.lit(True).alias("__in_new")
-    )
-    pre_cor = pre.select(
-        F.col(pre.columns[0]).alias(cor_col), F.lit(True).alias("__in_cor")
-    )
-    return (
-        pairs.join(F.broadcast(pre_new), new_col, "left")
-        .join(F.broadcast(pre_cor), cor_col, "left")
-        .withColumn("__in_new", F.coalesce("__in_new", F.lit(False)))
-        .withColumn("__in_cor", F.coalesce("__in_cor", F.lit(False)))
-        .where(
-            (F.col("__in_cor") & ~F.col("__in_new"))
-            | (
-                (F.col("__in_cor") == F.col("__in_new"))
-                & (F.col(cor_col) < F.col(new_col))
-            )
-        )
-        .drop("__in_new", "__in_cor")
-    )
+    With literal membership the rule is a pure InSet predicate with
+    ZERO joins (the pair ids are join outputs, never null)."""
+    flagged = pre.flag(pre.flag(pairs, new_col, "__in_new"), cor_col, "__in_cor")
+    in_new, in_cor = F.col("__in_new"), F.col("__in_cor")
+    return flagged.where(
+        (in_cor & ~in_new)
+        | ((in_cor == in_new) & (F.col(cor_col) < F.col(new_col)))
+    ).drop("__in_new", "__in_cor")
 
 
 REPORTS_AUTO_COMPACT_AFTER = 64
@@ -660,6 +718,147 @@ def _auto_compact_reports(spark: SparkSession, index_dir: str) -> None:
     the transform released the writer lock."""
     if len(_report_dirs(index_dir)) > REPORTS_AUTO_COMPACT_AFTER:
         compact_reports(spark, index_dir)
+
+
+class StreamingDedup:
+    """The streaming ingest-dedup SMT skeleton shared by DedupIndex
+    (lsh_index), SemDeDupIndex (pq_index) and FingerprintDedupIndex
+    (hamming_index): a DataFrame→DataFrame callable that deduplicates a
+    micro-batch of records (a ``value`` struct per record) WITHIN the
+    batch and against the persisted index, then adds the survivors so
+    the next batch deduplicates against them too.
+
+    Per batch, inside foreachBatch:
+
+    1. fold the accumulated per-batch report dirs (retention);
+    2. key the batch (plug-in ``keyed``), collect its ids once — the
+       batch's IdSet — and probe MEMBERSHIP: which batch ids the
+       current generation already holds, at batch start;
+    3. WITHIN-BATCH dedup: the batch's self-candidate pairs (the
+       index's own candidate geometry, batch-sized on both sides —
+       never the corpus) are verified exactly and resolved by
+       _winner_rule_drops: an already-indexed mate beats a fresh one
+       (so a new near-dup arriving alongside a same-batch REDELIVERY
+       of its indexed victim still drops), and between same-status
+       mates the lowest id wins;
+    4. CORPUS match of the self-survivors with the batch's own ids
+       EXCLUDED from the candidate pool before any candidate join or
+       top-k (the tombstone pattern);
+    5. write the drop report — rows (new id, mate id, score) for both
+       kinds, to ``reports/stream-<hex>`` with errorifexists — and
+       collect the dropped ids from the same materialized rows;
+    6. the survivors = the records minus the dropped ids;
+    7. ``add`` the survivors not already in the index.
+
+    Replay argument (exactly-once via an idempotent sink — Structured
+    Streaming's contract). A replayed batch reaches the same verdict:
+    step 3 depends only on (batch content, membership at batch start),
+    and the only membership delta a crash can leave is the original
+    run's own winners, which the rule keeps winners; step 4's pool is
+    replay-invariant because the batch's ids are excluded from it.
+    Step 7 skips present ids, so replays append nothing twice and the
+    stored bytes stay identical. This needs "present" to imply "fully
+    appended": every plug-in's ``add`` commits its MEMBERSHIP table
+    last, so a crash inside ``add`` leaves the id absent (its other
+    rows merely invisible) and the replay re-appends it. The dropped
+    ids are materialized (literals, or an eager localCheckpoint past
+    the cap) before ``add`` and never re-read an index table, so the
+    returned survivors — consumed lazily after this call — cannot be
+    refreshByPath-invalidated by the append into re-matching against
+    the post-append generation.
+
+    Bounded batches (ids within SMALL_ID_INLINE_CAP) hold the plug-in's
+    derived frames behind eager localCheckpoints: downstream actions
+    stop re-analyzing the signing/coding trees in their lineage
+    (measured ~0.19 s/action over a persisted wide tree vs ~0.08
+    behind a checkpoint, r12). Over-cap batches persist them instead
+    (a checkpoint trades recompute-on-executor-loss for speed, taken
+    only on batch-bounded data; the SMT replays idempotently on a
+    batch failure either way). Every id set is an IdSet, so the two
+    regimes share one code path.
+
+    Plug-in contract. A subclass is built with the index dir plus its
+    factory's keyword arguments, which become attributes. It sets
+    ``read_manifest``, ``cols`` (report column names) and
+    ``row_width`` (leading keyed columns collected with the ids), and
+    implements these hooks over ``b``, the batch namespace (spark,
+    records, m = manifest, keyed, rows, ids, pre, plus whatever the
+    hooks add):
+
+    - ``keyed(b)`` → (frame keyed by id first, record id SQL);
+    - ``sign(b, hold)``: derive the batch frames, ``hold`` each one;
+    - ``guard(b)``: raise to refuse the batch (optional);
+    - ``membership(b)``: frame of b.ids present in the index;
+    - ``self_pairs(b)``: verified within-batch pairs, ``cols`` shaped;
+    - ``match(b, drops)``: corpus pairs of the batch minus ``drops``;
+    - ``add(b, skip)``: append the batch minus ``skip``;
+    - ``reroute(exc)``: for a refusal of a type in ``refusals``, a
+      transform that takes over the whole batch, or None to re-raise
+      (optional)."""
+
+    cols: tuple[str, str, str]
+    row_width = 1
+    refusals: tuple[type[Exception], ...] = ()
+
+    def __init__(self, index_dir: str, **params):
+        self.index_dir = index_dir
+        self.__dict__.update(params)
+
+    def guard(self, b) -> None:
+        pass
+
+    def reroute(self, exc: Exception):
+        return None
+
+    def __call__(self, records: DataFrame) -> DataFrame:
+        from types import SimpleNamespace
+
+        from pyspark import StorageLevel
+
+        from kafkaconnect_spark.operators.dedup import release_cached
+
+        spark, mem = records.sparkSession, StorageLevel.MEMORY_AND_DISK
+        _auto_compact_reports(spark, self.index_dir)
+        b = SimpleNamespace(spark=spark, records=records, m=self.read_manifest(self.index_dir))
+        keyed, id_sql = self.keyed(b)
+        b.keyed = keyed.persist(mem)
+        b.rows = inline_rows(b.keyed, keyed.columns[: self.row_width], narrow=True)
+        b.ids = IdSet.from_rows(b.rows, b.keyed, keyed.columns[0])
+        held = [b.keyed]
+
+        def hold(df: DataFrame) -> DataFrame:
+            held.append(df.localCheckpoint() if b.rows is not None else df.persist(mem))
+            return held[-1]
+
+        fallback = None
+        try:
+            try:  # steps 2-4: a refusal here leaves the index untouched
+                self.sign(b, hold)
+                self.guard(b)
+                b.pre = IdSet.of(self.membership(b))
+                self_pairs = self.self_pairs(b)
+                self_drops = _winner_rule_drops(self_pairs, b.pre, *self.cols[:2])
+                held.append(self_drops.persist(mem))
+                pairs = self.match(b, IdSet.of(self_drops, self.cols[0]))
+            except self.refusals as exc:
+                fallback = self.reroute(exc)
+                if fallback is None:
+                    raise
+            if fallback is None:  # steps 5-7
+                rep = self_drops.select(*self.cols).unionByName(pairs.select(*self.cols))
+                rep = rep.persist(mem)
+                report = f"reports/stream-{uuid.uuid4().hex[:12]}"
+                rep.write.mode("errorifexists").parquet(os.path.join(self.index_dir, report))
+                dropped = IdSet.of(rep, self.cols[0], narrow=True)
+                for f in (self_pairs, pairs):
+                    release_cached(f)
+                rep.unpersist()
+                survivors = dropped.drop_from(records, id_sql)
+                self.add(b, dropped.union(b.pre))
+        finally:
+            for f in held:
+                f.unpersist()
+        return survivors if fallback is None else fallback(records)
 
 
 def _gc_locked(
@@ -768,58 +967,35 @@ def delete_ids(
 def membership_probe(
     spark: SparkSession,
     index_dir: str,
-    ids_df: DataFrame,
+    ids: IdSet,
     version: int,
     table: str,
     n_buckets: int | None,
     bucket_col: str,
-    ids_list: list | None = None,
+    id_col: str,
 ) -> DataFrame:
-    """Which of ``ids_df``'s ids (one column, named as the stored id
-    column) are in the CURRENT generation — a broadcast semi-join
-    against the stored id-bucketed table PRUNED to the ids' own
-    bucket partitions, so the probe reads a batch-bounded fraction of
-    the index, never the table (the partition key is an id hash, so
-    the prune is exact whatever the content). ``n_buckets=None``
-    skips pruning (pre-partitioned-layout indexes).
-
-    ``ids_list`` (r11): the same ids as collected literals. The
-    bucket hit set is then evaluated driver-side (local_bucket_set —
-    no cluster job) and the semi-join becomes an InSet filter fused
-    into the pruned scan: the whole probe is ONE narrow job instead
-    of bucket-collect + broadcast-build + join."""
-    id_col = ids_df.columns[0]
+    """Which of ``ids`` are in the CURRENT generation's ``table`` (id
+    column ``id_col``) — the stored id-bucketed table PRUNED to the
+    ids' own bucket partitions, so the probe reads a batch-bounded
+    fraction of the index, never the table (the partition key is an
+    id hash, so the prune is exact whatever the content).
+    ``n_buckets=None`` skips pruning (pre-partitioned-layout indexes).
+    Literal ids evaluate their bucket set driver-side (local_bucket_set
+    — no cluster job) and the probe is ONE narrow job; a frame-form
+    set collects its bucket set and semi-joins."""
     t = spark.read.parquet(_table_path(index_dir, table, version))
-    if ids_list is not None:
-        if n_buckets is not None and ids_list:
-            hit = local_bucket_set(
-                spark, ids_list,
-                lambda c: _shingle_bucket_expr(n_buckets, c),
-                id_col,
-            )
-            t = t.where(F.col(bucket_col).isin(hit))
-        return (
-            t.select(id_col)
-            .where(keep_ids_pred(id_col, ids_list))
-            .distinct()
-        )
     if n_buckets is not None:
-        hit = sorted(
-            {
-                r[0]
-                for r in ids_df.select(
-                    _shingle_bucket_expr(n_buckets, id_col).alias("b")
-                )
-                .distinct()
-                .collect()
-            }
-        )
+        def bucket(c):
+            return _shingle_bucket_expr(n_buckets, c)
+
+        if ids.ids is not None:
+            hit = local_bucket_set(spark, ids.ids, bucket, id_col) if ids.ids else []
+        else:
+            hit = sorted(
+                {r[0] for r in ids.frame.select(bucket("__id")).distinct().collect()}
+            )
         t = t.where(F.col(bucket_col).isin(hit))
-    return (
-        t.select(id_col)
-        .join(F.broadcast(ids_df.distinct()), id_col, "left_semi")
-        .distinct()
-    )
+    return ids.keep_in(t.select(id_col), id_col).distinct()
 
 
 def snapshot_tombstones(spark: SparkSession, index_dir: str, version: int):

@@ -56,10 +56,14 @@ removes any stale unreferenced v+1 dirs a previous interrupted
 compact left behind (rename-into-place means a crash can no longer
 permanently wedge compaction on errorifexists). append stages both
 table deltas before moving their files into the live dirs — the
-crash window is two file renames, and the shingles table is moved
-FIRST: a doc present in shingles-but-not-bands is merely invisible
-to candidate generation (re-appendable), while bands-but-not-
-shingles would silently drop verified pairs.
+crash window is two file renames, and the shingles table (the
+MEMBERSHIP table the streaming SMT probes) is moved LAST: a crash
+between the renames leaves a doc with bands but no shingles, whose
+candidates verify cannot score — it is invisible, exactly as if
+absent — and membership reads it as absent, so the SMT's replay
+re-appends it. The reverse order made a half-appended doc read as
+present, so the replay skipped it and it never gained bands: later
+near-duplicates of it survived.
 
 Scale shape: match/append is one (band, band_hash) equi-join of a
 batch-sized frame against the band table plus a candidate-sized
@@ -103,8 +107,10 @@ from kafkaconnect_spark.operators.dedup import (
 # instead of three. Re-exported here so pre-r10 import sites (tests,
 # queries, the other index modules' historical imports) keep working.
 from kafkaconnect_spark.operators.index_base import (  # noqa: F401
+    IdSet,
     IndexWriterLockError,
     REPORTS_AUTO_COMPACT_AFTER,
+    StreamingDedup,
     TOMBSTONE_BROADCAST_MAX_BYTES,
     _SAFE_WIDENING_CHAIN,
     _auto_compact_reports,
@@ -123,6 +129,8 @@ from kafkaconnect_spark.operators.index_base import (  # noqa: F401
     _winner_rule_drops,
     _write_manifest,
     _writer_lock,
+    as_id_set,
+    band_self_pairs,
     compact_reports,
     delete_ids,
     drop_ids_filter,
@@ -133,6 +141,7 @@ from kafkaconnect_spark.operators.index_base import (  # noqa: F401
     small_tombstone_ids,
     snapshot_tombstones,
     stage_pair_then_move,
+    tombstone_set,
 )
 
 
@@ -281,7 +290,7 @@ def match(
     n: int | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    exclude_ids: DataFrame | None = None,
+    exclude_ids: DataFrame | IdSet | None = None,
 ) -> DataFrame:
     """Read-only incremental dedup: verified duplicate pairs
     (id_new, id_corpus, jaccard) of `new_batch` against the CURRENT
@@ -312,9 +321,8 @@ def _match(
     n=None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    exclude_ids: DataFrame | None = None,
+    exclude_ids: DataFrame | IdSet | None = None,
     precomputed: tuple[DataFrame, DataFrame] | None = None,
-    exclude_id_list: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """match() plus the live persisted batch-shingle handle, so append
     can write its index deltas from the SAME cache instead of
@@ -325,11 +333,12 @@ def _match(
     the cache each match paid the sign+band compute twice (r8 ADVICE
     #5).
 
-    ``exclude_ids`` removes corpus ids from candidate generation
-    BEFORE the band join (the tombstone pattern): the streaming SMT
-    passes the batch's own ids so a crash-replayed batch matches
-    exactly the corpus the original run saw — pre-crash appends of
-    this very batch can never alter the verdict.
+    ``exclude_ids`` (an IdSet, or a one-column frame) removes corpus
+    ids from candidate generation BEFORE the band join (the tombstone
+    pattern): the streaming SMT passes the batch's own ids so a
+    crash-replayed batch matches exactly the corpus the original run
+    saw — pre-crash appends of this very batch can never alter the
+    verdict.
 
     ``precomputed`` = (sh_new, b_new) already-persisted shingle-array
     and banded-signature frames for the batch (the streaming SMT
@@ -355,18 +364,10 @@ def _match(
             _signatures_from_arrays(sh_new, num_hashes, id_col), bands, id_col
         ).persist(StorageLevel.MEMORY_AND_DISK)
         own_cache = [sh_new, b_new]
-    if exclude_id_list is not None:
-        # r11: batch-bounded pool exclusion as a literal InSet filter —
-        # fused into the scans, no broadcast build per consuming action
-        # (callers pass it only under index_base.SMALL_ID_INLINE_CAP)
-        idx_bands = drop_ids_filter(idx_bands, id_col, exclude_id_list)
-        idx_sh = drop_ids_filter(idx_sh, id_col, exclude_id_list)
-    elif exclude_ids is not None:
-        excl = F.broadcast(
-            exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)).distinct()
-        )
-        idx_bands = idx_bands.join(excl, id_col, "left_anti")
-        idx_sh = idx_sh.join(excl, id_col, "left_anti")
+    exclude = as_id_set(exclude_ids)
+    if exclude is not None:
+        idx_bands = exclude.drop_from(idx_bands, id_col)
+        idx_sh = exclude.drop_from(idx_sh, id_col)
     if "band_buckets" in m:
         # the batch's hashes can only join rows in the batch's OWN
         # bucket set — collect it (bounded by band_buckets, a manifest
@@ -384,24 +385,11 @@ def _match(
         idx_bands = idx_bands.where(F.col("band_bucket").isin(hit)).drop(
             "band_bucket"
         )
-    # a small tombstone log (common case: empty) inlines to a literal
-    # filter — zero join operators, no broadcast build per action; an
-    # oversized one (deferred compaction) keeps the anti-join, with
-    # the broadcast/shuffle choice as before (r11)
-    tomb_ids = small_tombstone_ids(
+    # filter the band table before the join so a deleted doc never
+    # becomes a candidate (verify never sees it)
+    idx_bands = tombstone_set(
         spark, _table_path(index_dir, "tombstones", m["version"])
-    )
-    if tomb_ids is not None:
-        # filter the band table before the join so a deleted doc never
-        # becomes a candidate (verify never sees it)
-        idx_bands = drop_ids_filter(idx_bands, id_col, tomb_ids)
-    else:
-        tomb = _tombstones(spark, index_dir, m["version"])
-        tomb = _maybe_broadcast_tombstones(
-            tomb.withColumnRenamed(tomb.columns[0], id_col),
-            _table_path(index_dir, "tombstones", m["version"]),
-        )
-        idx_bands = idx_bands.join(tomb, id_col, "left_anti")
+    ).drop_from(idx_bands, id_col)
     cands = (
         b_new.withColumnRenamed(id_col, "id_new")
         .join(
@@ -498,12 +486,12 @@ def append(
             _signatures_from_arrays(sh_new, num_hashes, id_col), bands, id_col
         )
         # stage both deltas (overlapped, guide §2.6), then move —
-        # shingles first (see module docstring for the ordering
+        # shingles last (see module docstring for the ordering
         # rationale; the commit order is fixed by the move calls)
         sd, spart = _shingles_delta(sh_new, m, id_col)
         bd, bpart = _bands_delta(b_new, m)
         stage_pair_then_move(
-            spark, index_dir, v, (sd, "shingles", spart), (bd, "bands", bpart)
+            spark, index_dir, v, (bd, "bands", bpart), (sd, "shingles", spart)
         )
         release_cached(pairs)  # sh_new + verify's candidate cache
         return spark.read.parquet(report)
@@ -575,248 +563,83 @@ def add(spark: SparkSession, index_dir: str, new_batch: DataFrame,
         sd, spart = _shingles_delta(sh_new, m, id_col)
         bd, bpart = _bands_delta(b_new, m)
         # staging writes overlap (independent tables, guide §2.6); the
-        # commit renames keep the crash order: shingles BEFORE bands —
-        # a doc with bands but no shingles would generate candidates
-        # verify cannot score, the reverse is merely invisible
+        # commit renames keep the crash order: the membership table
+        # (shingles) LAST, so "present" implies "fully appended" (see
+        # the module docstring)
         stage_pair_then_move(
             spark, index_dir, m["version"],
-            (sd, "shingles", spart), (bd, "bands", bpart),
+            (bd, "bands", bpart), (sd, "shingles", spart),
         )
         if own is not None:
             own.unpersist()
 
 
-def _membership(
-    spark: SparkSession, index_dir: str, ids_df: DataFrame, m: dict,
-    ids_list: list | None = None,
-) -> DataFrame:
-    """Bucket-pruned membership probe over the stored shingle table
-    (index_base.membership_probe with this module's geometry)."""
-    return membership_probe(
-        spark, index_dir, ids_df, m["version"], "shingles",
-        m.get("shingle_buckets"), "shingle_bucket", ids_list=ids_list,
-    )
+class _TextDedup(StreamingDedup):
+    """DedupIndex plug-in for index_base.StreamingDedup: the batch is
+    shingled and signed ONCE (held frames reused by the self-join, the
+    corpus match and the add), self-candidates share a (band,
+    band_hash), pairs verify by exact Jaccard."""
+
+    cols = ("id_new", "id_corpus", "jaccard")
+    read_manifest = staticmethod(_read_manifest)
+
+    def keyed(self, b):
+        b.th = self.threshold if self.threshold is not None else b.m["threshold"]
+        rid, tid = f"value.{self.id_field}", f"value.{self.text_field}"
+        return b.records.select(
+            F.col(rid).alias(self.id_field), F.col(tid).alias(self.text_field)
+        ), rid
+
+    def sign(self, b, hold):
+        m, i = b.m, self.id_field
+        b.sh = hold(shingle_arrays(b.keyed, self.text_field, i, m["n"]))
+        sig = _signatures_from_arrays(b.sh, m["num_hashes"], i)
+        b.bands = hold(_banded(sig, m["bands"], i))
+
+    def membership(self, b):
+        return membership_probe(
+            b.spark, self.index_dir, b.ids, b.m["version"], "shingles",
+            b.m.get("shingle_buckets"), "shingle_bucket", self.id_field,
+        )
+
+    def self_pairs(self, b):
+        cands = band_self_pairs(b.bands, self.id_field, "band_hash")
+        return _jaccard_verify(
+            cands, b.sh, b.sh, b.th, "id_new", "id_corpus", self.id_field
+        )
+
+    def match(self, b, drops):
+        i = self.id_field
+        frames = (drops.drop_from(b.sh, i), drops.drop_from(b.bands, i))
+        return _match(
+            b.spark, self.index_dir, None, threshold=b.th,
+            text_col=self.text_field, id_col=i, exclude_ids=b.ids, precomputed=frames,
+        )[0]
+
+    def add(self, b, skip):
+        i = self.id_field
+        frames = (skip.drop_from(b.sh, i), skip.drop_from(b.bands, i))
+        add(b.spark, self.index_dir, None, self.text_field, i, precomputed=frames)
 
 
 def streaming_dedup_transform(
-    index_dir: str,
-    id_field: str = "doc_id",
-    text_field: str = "text",
+    index_dir: str, id_field: str = "doc_id", text_field: str = "text",
     threshold: float | None = None,
-    append_survivors: bool = True,
 ):
     """DataFrame→DataFrame SMT for the streaming engine: deduplicate a
-    micro-batch of document records WITHIN the batch and against the
-    PERSISTED LSH index, then add the survivors so the NEXT batch
-    deduplicates against them too — the Connect-style pipeline the
-    Phase-E corpus operators imply (r6 judge directive #2). Spec form:
+    micro-batch of document records within the batch and against the
+    PERSISTED LSH index by MinHash Jaccard, then add the survivors —
+    the Connect-style pipeline the Phase-E corpus operators imply (r6
+    judge directive #2). Semantics, replay argument and plug-in
+    contract: index_base.StreamingDedup. Spec form:
 
         {"type": "kafkaconnect_spark.DedupIndex",
          "index.dir": "...", "id.field": "doc_id",
-         "text.field": "text", "threshold": "0.2",
-         "append.survivors": "true"}
+         "text.field": "text", "threshold": "0.2"}
 
-    Semantics per batch, inside foreachBatch (r8 judge directive #3):
-    1. WITHIN-BATCH dedup: the batch is banded against ITSELF (one
-       batch-sized equi-join — never the corpus) and verified-exact
-       near-dup groups resolve deterministically: an already-indexed
-       mate wins over a fresh one (the standing corpus wins, even
-       when it arrives as a same-batch redelivery — closing r8
-       ADVICE #3, where a new doc's duplicate-of-the-corpus verdict
-       was silently suppressed because its victim was redelivered in
-       the same batch); between same-status mates the LOWEST id wins.
-    2. corpus match of the self-survivors against the current index
-       generation — with the batch's own ids EXCLUDED from the
-       candidate pool before the band join (the tombstone pattern),
-       so a crash-replayed batch searches exactly the corpus the
-       original run saw: pre-crash appends of this very batch cannot
-       alter any verdict (replacing r7's post-hoc batch-mate
-       exemption, which also exempted genuine same-batch duplicates).
-    3. records dropped by either step are removed from the stream;
-       survivors not already in the index are ``add``-ed.
-
-    Replay idempotency: step 1 depends only on (batch content,
-    membership-at-batch-start) and the winner rule is invariant under
-    the only delta a replay introduces (its own winners — see
-    _winner_rule_drops); step 2's pool is replay-invariant by the
-    exclusion; step 3 skips already-present ids, so re-appends don't
-    even duplicate rows. Replays therefore converge to the SAME
-    survivor set and the same stored state.
-
-    The duplicate-id set is MATERIALIZED (written to a report table
-    under the index and read back) before the index mutates:
-    downstream consumption happens after this transform returns, and
-    an unmaterialized plan reading the index tables would be
-    refreshByPath-invalidated by the add and silently re-match
-    against the post-append generation. Report rows stay
-    (id_new, id_corpus, jaccard); a within-batch drop is recognizable
-    by its id_corpus being a batch member."""
-    import uuid as _uuid
-
-    def _apply(records: DataFrame) -> DataFrame:
-        spark = records.sparkSession
-        from pyspark import StorageLevel
-
-        from kafkaconnect_spark.operators.dedup import release_cached
-
-        # retention: fold accumulated per-batch report dirs BEFORE this
-        # batch writes its own (the current batch's survivor plan lazily
-        # reads its report until the sink commits — compacting at the
-        # end would delete a dir still referenced)
-        _auto_compact_reports(spark, index_dir)
-        m = _read_manifest(index_dir)
-        th = threshold if threshold is not None else m["threshold"]
-        docs = records.select(
-            F.col(f"value.{id_field}").alias(id_field),
-            F.col(f"value.{text_field}").alias(text_field),
-        )
-        ids = docs.select(id_field)
-        # r11: batch-bounded id sets (batch ids, membership, drops)
-        # ride as collected literals when they fit
-        # index_base.SMALL_ID_INLINE_CAP — every broadcast-build job
-        # they previously cost (one per consuming action under AQE)
-        # disappears, and the anti/semi-joins fuse into the consumers'
-        # stages as InSet filters. Oversized sets (None) keep the r10
-        # broadcast-join shapes at every site below.
-        ids_list = inline_ids(ids, id_field, narrow=True)
-        pre = _membership(spark, index_dir, ids, m, ids_list=ids_list)
-        pre_ids = inline_ids(pre) if ids_list is not None else None
-        if pre_ids is None:
-            pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-        # -- step 1: within-batch self-dedup (batch-sized both sides) --
-        # the batch is shingled and signed exactly ONCE per micro-batch:
-        # sh_new/b_new are reused (id-filtered) by the corpus match in
-        # step 2 AND the survivor add in step 3 — before r9 each of
-        # those recomputed the full pipeline, measured as the bulk of
-        # the SMT's per-batch premium. r12: a BOUNDED batch holds them
-        # behind eager localCheckpoints instead of persists — the
-        # ~10 downstream actions per micro-batch stop re-analyzing the
-        # shingle/signature/banding trees in their lineage (Catalyst
-        # re-analysis measured at 0.19 s/action over a persisted wide
-        # tree vs 0.08 behind a checkpoint; same rows, same results).
-        # Over-cap batches keep the r10 persisted plans: the
-        # checkpoint trades recompute-on-executor-loss for speed,
-        # taken only on batch-bounded data (the SMT replays
-        # idempotently on a batch failure either way).
-        sh_new = shingle_arrays(docs, text_field, id_field, m["n"])
-        if ids_list is not None:
-            sh_new = sh_new.localCheckpoint()
-            b_new = _banded(
-                _signatures_from_arrays(sh_new, m["num_hashes"], id_field),
-                m["bands"],
-                id_field,
-            ).localCheckpoint()
-        else:
-            sh_new = sh_new.persist(StorageLevel.MEMORY_AND_DISK)
-            b_new = _banded(
-                _signatures_from_arrays(sh_new, m["num_hashes"], id_field),
-                m["bands"],
-                id_field,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        self_cands = (
-            b_new.select(F.col(id_field).alias("id_new"), "band", "band_hash")
-            .join(
-                b_new.select(F.col(id_field).alias("id_corpus"), "band", "band_hash"),
-                ["band", "band_hash"],
-            )
-            .where(F.col("id_new") != F.col("id_corpus"))
-            .select("id_new", "id_corpus")
-            .distinct()
-        )
-        self_pairs = _jaccard_verify(
-            self_cands, sh_new, sh_new, th, "id_new", "id_corpus", id_field
-        )
-        self_drops = _winner_rule_drops(
-            self_pairs, pre, "id_new", "id_corpus", pre_ids=pre_ids
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # -- step 2: corpus match of self-survivors, batch pool-excluded --
-        # drops are batch-bounded: collect once (materializes the
-        # persisted frame the report write reuses) and filter the three
-        # consumers literally; an over-cap batch falls back to the
-        # broadcast anti-joins
-        sd_ids = inline_ids(self_drops, "id_new")
-        if sd_ids is not None:
-            surv1 = drop_ids_filter(docs, id_field, sd_ids)
-            pre_sh = drop_ids_filter(sh_new, id_field, sd_ids)
-            pre_b = drop_ids_filter(b_new, id_field, sd_ids)
-        else:
-            self_drop_ids = F.broadcast(
-                self_drops.select(F.col("id_new").alias(id_field)).distinct()
-            )
-            surv1 = docs.join(self_drop_ids, id_field, "left_anti")
-            pre_sh = sh_new.join(self_drop_ids, id_field, "left_anti")
-            pre_b = b_new.join(self_drop_ids, id_field, "left_anti")
-        pairs, _ = _match(
-            spark, index_dir, surv1, threshold=th,
-            text_col=text_field, id_col=id_field, exclude_ids=ids,
-            exclude_id_list=ids_list,
-            precomputed=(pre_sh, pre_b),
-        )
-        report = os.path.join(
-            index_dir, "reports", f"stream-{_uuid.uuid4().hex[:12]}"
-        )
-        self_drops.select("id_new", "id_corpus", "jaccard").unionByName(
-            pairs
-        ).write.mode("errorifexists").parquet(report)
-        release_cached(pairs)
-        release_cached(self_pairs)
-        rep = spark.read.parquet(report)
-        # the just-written report is batch-bounded — dropped ids inline
-        # to one tiny collect reused by the survivor filter AND both
-        # append deltas (previously three broadcast builds per batch)
-        dup_list = inline_ids(rep, "id_new", narrow=True)
-        if dup_list is not None:
-            survivors = drop_ids_filter(
-                records, f"value.{id_field}", dup_list
-            )
-        else:
-            dup_ids = rep.select(F.col("id_new").alias(id_field)).distinct()
-            survivors = records.join(
-                F.broadcast(dup_ids),
-                records[f"value.{id_field}"] == dup_ids[id_field],
-                "left_anti",
-            )
-        if append_survivors:
-            # already-indexed survivors (redeliveries; replayed
-            # winners) are NOT re-appended — replays leave the stored
-            # tables byte-identical instead of merely row-equivalent.
-            # The deltas filter the ALREADY-COMPUTED batch frames to
-            # (not dropped) ∧ (not present) — no third shingling pass.
-            if dup_list is not None and pre_ids is not None:
-                not_add = sorted({*dup_list, *pre_ids})
-                add(
-                    spark, index_dir, None, text_col=text_field,
-                    id_col=id_field,
-                    precomputed=(
-                        drop_ids_filter(sh_new, id_field, not_add),
-                        drop_ids_filter(b_new, id_field, not_add),
-                    ),
-                )
-            else:
-                dup_b = F.broadcast(
-                    rep.select(F.col("id_new").alias(id_field)).distinct()
-                )
-                pre_bc = F.broadcast(pre)
-                add(
-                    spark, index_dir, None, text_col=text_field,
-                    id_col=id_field,
-                    precomputed=(
-                        sh_new.join(dup_b, id_field, "left_anti").join(
-                            pre_bc, id_field, "left_anti"
-                        ),
-                        b_new.join(dup_b, id_field, "left_anti").join(
-                            pre_bc, id_field, "left_anti"
-                        ),
-                    ),
-                )
-        self_drops.unpersist()
-        if pre_ids is None:
-            pre.unpersist()
-        sh_new.unpersist()
-        b_new.unpersist()
-        return survivors
-
-    return _apply
+    Report rows are (id_new, id_corpus, jaccard); a within-batch drop
+    is recognizable by its id_corpus being a batch member."""
+    return _TextDedup(**locals())
 
 
 # streaming transforms auto-fold their per-micro-batch report dirs

@@ -543,6 +543,17 @@ def _build_ts_router(p: dict[str, str]) -> Transform:
     )
 
 
+def _check_survivors_key(p: dict[str, str], name: str) -> None:
+    """The index SMTs always add their survivors: an old config that
+    sets ``append.survivors`` to anything but true is refused, not
+    silently reinterpreted as appending."""
+    if str(p.get("append.survivors", "true")).lower() != "true":
+        raise SpecError(
+            f"{name}: append.survivors={p['append.survivors']!r} is no longer "
+            "supported — the SMT always adds its survivors to the index"
+        )
+
+
 def _build_dedup_index(p: dict[str, str]) -> Transform:
     """Streaming ingest dedup against the persisted LSH index
     (operators/lsh_index.streaming_dedup_transform): drop records
@@ -551,13 +562,13 @@ def _build_dedup_index(p: dict[str, str]) -> Transform:
 
     if not p.get("index.dir"):
         raise SpecError("DedupIndex requires index.dir")
+    _check_survivors_key(p, "DedupIndex")
     thr = p.get("threshold")
     return streaming_dedup_transform(
         index_dir=str(p["index.dir"]),
         id_field=p.get("id.field", "doc_id"),
         text_field=p.get("text.field", "text"),
         threshold=float(thr) if thr is not None else None,
-        append_survivors=str(p.get("append.survivors", "true")).lower() == "true",
     )
 
 
@@ -572,6 +583,7 @@ def _build_semdedup_index(p: dict[str, str]) -> Transform:
         raise SpecError("SemDeDupIndex requires index.dir")
     if not p.get("vector.store"):
         raise SpecError("SemDeDupIndex requires vector.store (true-vector table)")
+    _check_survivors_key(p, "SemDeDupIndex")
     from kafkaconnect_spark.operators.pq_index import DEFAULT_MAX_CANDIDATE_PAIRS
 
     return streaming_semdedup_transform(
@@ -582,7 +594,6 @@ def _build_semdedup_index(p: dict[str, str]) -> Transform:
         vec_field=p.get("vec.field", "embedding"),
         n_probe=int(p.get("n.probe", "2")),
         rerank=int(p.get("rerank", "30")),
-        append_survivors=str(p.get("append.survivors", "true")).lower() == "true",
         max_candidate_pairs=int(
             p.get("max.candidate.pairs", str(DEFAULT_MAX_CANDIDATE_PAIRS))
         ),
@@ -601,6 +612,7 @@ def _build_fingerprint_dedup_index(p: dict[str, str]) -> Transform:
 
     if not p.get("index.dir"):
         raise SpecError("FingerprintDedupIndex requires index.dir")
+    _check_survivors_key(p, "FingerprintDedupIndex")
     if bool(p.get("hash.field")) == bool(p.get("text.field")):
         raise SpecError(
             "FingerprintDedupIndex requires exactly one of "
@@ -635,7 +647,6 @@ def _build_fingerprint_dedup_index(p: dict[str, str]) -> Transform:
         hash_field=p.get("hash.field"),
         text_field=p.get("text.field"),
         max_hamming=int(mh) if mh is not None else None,
-        append_survivors=str(p.get("append.survivors", "true")).lower() == "true",
         fallback_index_dir=(
             str(p["fallback.index.dir"]) if fb is not None else None
         ),

@@ -1,0 +1,226 @@
+"""The streaming-dedup skeleton (index_base.StreamingDedup) under its
+two id-set regimes and under injected crashes.
+
+- Every SMT runs with the default SMALL_ID_INLINE_CAP and with cap=0,
+  which forces every id set into its broadcast-frame form. Both modes
+  must give the same survivors, the same report rows and the same
+  distinct stored rows; within each mode a replayed batch must leave
+  the stored index bytes identical.
+- A crash injected (a) before add commits anything or (b) between the
+  two table renames inside add must replay to the clean run's state:
+  a later near-duplicate of the crashed doc is dropped, and every
+  stored table holds the clean run's distinct rows.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from kafkaconnect_spark.operators import (
+    hamming_index,
+    index_base,
+    index_fs,
+    lsh_index,
+    pq_index,
+)
+
+KINDS = ("lsh", "pq", "hamming")
+DIM = 8
+
+# batch 1: 10 duplicates corpus doc 1; 20/21 duplicate each other (21
+# loses the tie-break); 30 is new. Batch 2: 40 duplicates 30.
+_TEXT = {
+    "corpus": [(1, "a b c d e f g h"), (3, "p q r s t u v w")],
+    "b1": [
+        (10, "a b c d e f g h"),
+        (20, "m1 m2 m3 m4 m5 m6 m7 m8"),
+        (21, "m1 m2 m3 m4 m5 m6 m7 m8"),
+        (30, "z1 z2 z3 z4 z5 z6 z7 z8"),
+    ],
+    "b2": [(40, "z1 z2 z3 z4 z5 z6 z7 z8")],
+}
+_HASH = {
+    "corpus": [(1, "00ff00ff00ff00ff"), (3, "0123456789abcdef")],
+    "b1": [
+        (10, "00ff00ff00ff03ff"),
+        (20, "f0f0f0f0f0f0f0f0"),
+        (21, "f0f0f0f0f0f0f0f1"),
+        (30, "fedcba9876543210"),
+    ],
+    "b2": [(40, "fedcba9876543211")],
+}
+
+
+def _unit(k):
+    return [9.0 if d == k else 0.5 for d in range(DIM)]
+
+
+_VEC = {
+    "corpus": [(1, _unit(0)), (3, _unit(1)), (5, _unit(2)), (7, _unit(3))],
+    "b1": [(10, _unit(0)), (20, _unit(4)), (21, _unit(4)), (30, _unit(5))],
+    "b2": [(40, _unit(5))],
+}
+_ROWS = {"lsh": _TEXT, "pq": _VEC, "hamming": _HASH}
+_SCHEMA = {
+    "lsh": "doc_id long, text string",
+    "pq": "vec_id long, embedding array<double>",
+    "hamming": "doc_id long, phash string",
+}
+_TABLES = {
+    "lsh": lsh_index._LSH_TABLES,
+    "pq": pq_index._PQ_TABLES,
+    "hamming": hamming_index._HAM_TABLES,
+}
+
+
+def _frame(spark, kind, part):
+    return spark.createDataFrame(_ROWS[kind][part], _SCHEMA[kind])
+
+
+def _build(spark, root, kind) -> str:
+    d = str(root / kind)
+    corpus = _frame(spark, kind, "corpus")
+    if kind == "lsh":
+        lsh_index.build(corpus, d, num_hashes=16, bands=4, n=3, threshold=0.5)
+    elif kind == "pq":
+        # the store holds every vector the scenario uses, so a re-rank
+        # never depends on the pipeline's store appends
+        spark.createDataFrame(
+            [r for p in ("corpus", "b1", "b2") for r in _VEC[p]], _SCHEMA["pq"]
+        ).write.parquet(d + "_store")
+        pq_index.build(corpus, d, n_cells=4, n_sub=2, n_codes=4, dim=DIM)
+    else:
+        hamming_index.build(corpus, d, bits=64, bands=8, max_hamming=4)
+    return d
+
+
+def _transform(kind, d):
+    if kind == "lsh":
+        return lsh_index.streaming_dedup_transform(d, threshold=0.5)
+    if kind == "pq":
+        return pq_index.streaming_semdedup_transform(
+            d, d + "_store", threshold=0.999, n_probe=4, rerank=20
+        )
+    return hamming_index.streaming_fingerprint_dedup_transform(d, hash_field="phash")
+
+
+def _run(spark, kind, d, part) -> set:
+    """One micro-batch through a FRESH transform (a restarted engine)."""
+    records = _frame(spark, kind, part).select(F.struct("*").alias("value"))
+    out = _transform(kind, d)(records)
+    return {r["value"][0] for r in out.collect()}
+
+
+def _plain(v):
+    if isinstance(v, (list, tuple)):
+        return tuple(_plain(x) for x in v)
+    return v
+
+
+def _stored_rows(spark, kind, d) -> dict:
+    mod = {"lsh": lsh_index, "pq": pq_index, "hamming": hamming_index}[kind]
+    v = mod._read_manifest(d)["version"]
+    def rows(t):
+        table = spark.read.parquet(index_base._table_path(d, t, v))
+        return sorted({_plain(tuple(r)) for r in table.collect()}, key=repr)
+
+    return {t: rows(t) for t in _TABLES[kind]}
+
+
+def _report_rows(spark, d) -> set:
+    root = os.path.join(d, "reports")
+    return {
+        _plain(tuple(r))
+        for rep in index_fs.listdir(root)
+        for r in spark.read.parquet(os.path.join(root, rep)).collect()
+    }
+
+
+def _index_bytes(d) -> dict:
+    out = {}
+    for base, dirs, files in os.walk(d):
+        dirs[:] = [x for x in dirs if x not in ("reports", ".staging")]
+        for f in files:
+            p = os.path.join(base, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, d)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+@pytest.fixture(params=["default_cap", "cap0"])
+def id_cap(request, monkeypatch):
+    """Both id-set regimes: the default cap (literal id sets) and cap=0
+    (every non-empty id set takes the broadcast-frame path)."""
+    if request.param == "cap0":
+        monkeypatch.setattr(index_base, "SMALL_ID_INLINE_CAP", 0)
+    return request.param
+
+
+@pytest.fixture(scope="module")
+def mode_snapshots() -> dict:
+    return {}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_both_id_set_modes_agree_and_replay_is_byte_identical(
+    spark, tmp_path, id_cap, kind, mode_snapshots
+):
+    d = _build(spark, tmp_path, kind)
+    survivors = [_run(spark, kind, d, "b1")]
+    before = _index_bytes(d)
+    survivors.append(_run(spark, kind, d, "b1"))  # replay
+    assert _index_bytes(d) == before, "a replay must not touch stored bytes"
+    survivors.append(_run(spark, kind, d, "b2"))
+    assert survivors == [{20, 30}, {20, 30}, set()]
+    snap = (survivors, _report_rows(spark, d), _stored_rows(spark, kind, d))
+    # whichever mode runs first is the reference for the other
+    assert mode_snapshots.setdefault(kind, snap) == snap
+
+
+@pytest.fixture(scope="module")
+def clean_runs(spark, tmp_path_factory):
+    """Per kind, the crash-free run's survivors and stored rows."""
+    runs: dict = {}
+
+    def get(kind):
+        if kind not in runs:
+            d = _build(spark, tmp_path_factory.mktemp("clean"), kind)
+            surv = [_run(spark, kind, d, "b1"), _run(spark, kind, d, "b2")]
+            runs[kind] = (surv, _stored_rows(spark, kind, d))
+        return runs[kind]
+
+    return get
+
+
+@pytest.mark.parametrize(
+    "kind,point",
+    [("lsh", "a"), ("lsh", "b"), ("hamming", "a"), ("hamming", "b"), ("pq", "a")],
+)
+def test_crash_replay_matches_the_clean_run(
+    spark, tmp_path, clean_runs, monkeypatch, kind, point
+):
+    """(a) the crash lands after the report write, before add commits
+    anything; (b) between add's two table renames. A replay with a
+    fresh transform must converge: doc 30 is fully indexed, so its
+    later near-duplicate 40 drops exactly as in a clean run."""
+    clean_surv, clean_rows = clean_runs(kind)
+    d = _build(spark, tmp_path, kind)
+    real_move = index_base._move_staged
+    moves: list[str] = []
+
+    def crashing_move(staging, dest):
+        moves.append(dest)
+        if len(moves) == (1 if point == "a" else 2):
+            raise RuntimeError("injected crash")
+        return real_move(staging, dest)
+
+    monkeypatch.setattr(index_base, "_move_staged", crashing_move)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _run(spark, kind, d, "b1")
+    monkeypatch.setattr(index_base, "_move_staged", real_move)
+    assert [_run(spark, kind, d, "b1"), _run(spark, kind, d, "b2")] == clean_surv
+    assert _stored_rows(spark, kind, d) == clean_rows

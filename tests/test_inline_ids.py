@@ -1,7 +1,8 @@
-"""r11 optimization: small-id-set inlining (index_base.inline_ids /
-keep_ids_pred / drop_ids_filter / local_bucket_set / the literal
-membership probe) must be EXACTLY equivalent to the broadcast-join
-shapes it replaces, and fall back to them past the cap."""
+"""Small-id-set inlining: the two forms of index_base.IdSet —
+collected literals (InSet predicates) and a broadcast frame (joins) —
+must be EXACTLY equivalent in every consumer (drop_from, keep_in,
+flag via the winner rule, union, the membership probe), and
+IdSet.of must fall back to the frame form past the cap."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from kafkaconnect_spark.operators import index_base
 from kafkaconnect_spark.operators.index_base import (
+    IdSet,
     _shingle_bucket_expr,
     _winner_rule_drops,
     drop_ids_filter,
@@ -18,6 +20,12 @@ from kafkaconnect_spark.operators.index_base import (
     keep_ids_pred,
     local_bucket_set,
 )
+
+
+def _both(spark, ids, col="doc_id", dtype="bigint"):
+    """The same id set in its literal and its frame form."""
+    frame = spark.createDataFrame([(i,) for i in ids], f"{col} {dtype}")
+    return IdSet(sorted(ids)), IdSet.wrap(frame)
 
 
 @pytest.fixture(scope="module")
@@ -51,38 +59,55 @@ def test_drop_ids_filter_matches_anti_join_incl_nulls(spark):
     left = spark.createDataFrame(
         [Row(doc_id=i) for i in range(10)] + [Row(doc_id=None)]
     )
-    ids = [2, 5, 7]
-    right = spark.createDataFrame([Row(doc_id=i) for i in ids])
-    via_join = {
-        r.doc_id
-        for r in left.join(F.broadcast(right), "doc_id", "left_anti").collect()
-    }
-    via_filter = {
-        r.doc_id for r in drop_ids_filter(left, "doc_id", ids).collect()
-    }
+    lit, frame = _both(spark, [2, 5, 7])
+    via_join = {r.doc_id for r in frame.drop_from(left, "doc_id").collect()}
+    via_filter = {r.doc_id for r in lit.drop_from(left, "doc_id").collect()}
     assert via_filter == via_join  # null row KEPT on both paths
-    assert None in via_filter
+    assert None in via_filter and not via_filter & {2, 5, 7}
     # empty set: no-op, identical frame
     assert drop_ids_filter(left, "doc_id", []) is left
+    assert IdSet([]).drop_from(left, "doc_id") is left
 
 
 def test_keep_ids_pred_matches_semi_join(spark):
     left = spark.createDataFrame(
         [Row(doc_id=i) for i in range(10)] + [Row(doc_id=None)]
     )
-    ids = [1, 4]
-    right = spark.createDataFrame([Row(doc_id=i) for i in ids])
-    via_join = {
-        r.doc_id
-        for r in left.join(F.broadcast(right), "doc_id", "left_semi").collect()
-    }
-    via_pred = {
-        r.doc_id
-        for r in left.where(keep_ids_pred("doc_id", ids)).collect()
-    }
-    assert via_pred == via_join == set(ids)
+    lit, frame = _both(spark, [1, 4])
+    via_join = {r.doc_id for r in frame.keep_in(left, "doc_id").collect()}
+    via_pred = {r.doc_id for r in lit.keep_in(left, "doc_id").collect()}
+    assert via_pred == via_join == {1, 4}
     # empty set keeps nothing — matches a semi-join vs an empty frame
     assert left.where(keep_ids_pred("doc_id", [])).count() == 0
+    _lit0, frame0 = _both(spark, [])
+    assert frame0.keep_in(left, "doc_id").count() == 0
+
+
+def test_id_set_of_respects_the_cap_at_call_time(spark, monkeypatch):
+    """IdSet.of reads SMALL_ID_INLINE_CAP when called, so lowering it
+    (the cap=0 test mode) switches every consumer to the frame form —
+    which is materialized, and filters a nested SQL column the same."""
+    df = spark.range(0, 20).select(F.col("id").alias("doc_id"))
+    assert IdSet.of(df).ids == list(range(20))
+    monkeypatch.setattr(index_base, "SMALL_ID_INLINE_CAP", 0)
+    framed = IdSet.of(df)
+    assert framed.ids is None and framed.frame is not None
+    recs = spark.range(0, 30).select(F.struct(F.col("id").alias("doc_id")).alias("value"))
+    kept = {r["value"]["doc_id"] for r in framed.drop_from(recs, "value.doc_id").collect()}
+    assert kept == set(range(20, 30))
+    # an empty set stays literal even at cap=0 (nothing to inline)
+    assert IdSet.of(df.where("doc_id < 0")).ids == []
+
+
+def test_id_set_union_of_mixed_forms(spark):
+    lit_a, _ = _both(spark, [1, 2])
+    lit_b, frame_b = _both(spark, [2, 3])
+    assert lit_a.union(lit_b).ids == [1, 2, 3]
+    mixed = lit_a.union(frame_b)
+    assert mixed.ids is None
+    left = spark.range(0, 6).select(F.col("id").alias("doc_id"))
+    got = {r.doc_id for r in mixed.drop_from(left, "doc_id").collect()}
+    assert got == {0, 4, 5}
 
 
 def test_string_ids_quote_and_escape(spark):
@@ -105,30 +130,17 @@ def test_winner_rule_literal_matches_join_path(spark):
             Row(id_new=6, id_corpus=5, jaccard=0.7),   # both indexed, 5<6 drop
         ]
     )
-    pre_ids = [2, 5, 6]
-    pre = spark.createDataFrame([Row(doc_id=i) for i in pre_ids])
-    via_join = {
-        (r.id_new, r.id_corpus)
-        for r in _winner_rule_drops(pairs, pre, "id_new", "id_corpus").collect()
-    }
-    via_lit = {
-        (r.id_new, r.id_corpus)
-        for r in _winner_rule_drops(
-            pairs, pre, "id_new", "id_corpus", pre_ids=pre_ids
-        ).collect()
-    }
-    assert via_lit == via_join == {(1, 2), (4, 3), (6, 5)}
+    def drops(pre):
+        return {
+            (r.id_new, r.id_corpus)
+            for r in _winner_rule_drops(pairs, pre, "id_new", "id_corpus").collect()
+        }
+
+    lit, frame = _both(spark, [2, 5, 6])
+    assert drops(lit) == drops(frame) == {(1, 2), (4, 3), (6, 5)}
     # empty membership: pure lowest-id tie-break on both paths
-    empty = spark.createDataFrame([], "doc_id bigint")
-    assert {
-        (r.id_new, r.id_corpus)
-        for r in _winner_rule_drops(
-            pairs, empty, "id_new", "id_corpus", pre_ids=[]
-        ).collect()
-    } == {
-        (r.id_new, r.id_corpus)
-        for r in _winner_rule_drops(pairs, empty, "id_new", "id_corpus").collect()
-    }
+    lit0, frame0 = _both(spark, [])
+    assert drops(lit0) == drops(frame0) == {(2, 1), (4, 3), (6, 5)}
 
 
 def test_local_bucket_set_matches_cluster_eval_and_runs_no_job(spark):
@@ -163,24 +175,25 @@ def test_local_bucket_set_matches_cluster_eval_and_runs_no_job(spark):
 def test_membership_probe_literal_matches_join_path(spark, tmp_path):
     from kafkaconnect_spark.operators import lsh_index
 
+    def probe(ids):
+        return {
+            r.doc_id
+            for r in index_base.membership_probe(
+                spark, d, ids, m["version"], "shingles",
+                m["shingle_buckets"], "shingle_bucket", "doc_id",
+            ).collect()
+        }
+
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=f"alpha beta gamma delta {i} epsilon zeta") for i in range(30)]
     )
     d = str(tmp_path / "lsh")
     lsh_index.build(docs, d, num_hashes=8, bands=4, n=3, threshold=0.2)
     m = lsh_index._read_manifest(d)
-    probe_ids = list(range(20, 40))  # half stored, half absent
-    ids_df = spark.createDataFrame([Row(doc_id=i) for i in probe_ids])
-    via_join = {
-        r.doc_id for r in lsh_index._membership(spark, d, ids_df, m).collect()
-    }
-    via_lit = {
-        r.doc_id
-        for r in lsh_index._membership(
-            spark, d, ids_df, m, ids_list=probe_ids
-        ).collect()
-    }
-    assert via_lit == via_join == set(range(20, 30))
+    lit, frame = _both(spark, range(20, 40))  # half stored, half absent
+    assert probe(lit) == probe(frame) == set(range(20, 30))
+    lit0, frame0 = _both(spark, [])
+    assert probe(lit0) == probe(frame0) == set()
 
 
 def test_small_tombstone_ids_inline_and_size_gate(spark, tmp_path, monkeypatch):
@@ -202,7 +215,8 @@ def test_small_tombstone_ids_inline_and_size_gate(spark, tmp_path, monkeypatch):
 
 def test_stage_pair_then_move_commits_first_table_first(spark, tmp_path, monkeypatch):
     """The overlapped staging must keep the crash-ordering contract:
-    _move_staged runs for `first` strictly before `second`."""
+    _move_staged runs for `first` strictly before `second` — for
+    lsh_index.add, the membership table (shingles) last."""
     from kafkaconnect_spark.operators import lsh_index
 
     docs = spark.createDataFrame(
@@ -221,7 +235,7 @@ def test_stage_pair_then_move_commits_first_table_first(spark, tmp_path, monkeyp
     # lsh_index.add imports stage_pair_then_move from index_base at
     # module load; the spy patches the function IT calls internally
     lsh_index.add(spark, d, docs.where("doc_id >= 4"))
-    assert order == ["shingles", "bands"]
+    assert order == ["bands", "shingles"]
     # and the appended rows are all present
     m = lsh_index._read_manifest(d)
     sh = spark.read.parquet(index_base._table_path(d, "shingles", m["version"]))

@@ -439,7 +439,7 @@ def test_guard_histogram_rescans_on_external_generation_bump(
     compact or retrain commits generation v+1 — physically dropping
     tombstoned codes, or renumbering every cell — and the next batch
     MUST rescan instead of trusting the stale counts. Removing the
-    ``_hist_state["version"] != m["version"]`` check makes both
+    ``self.hist_version != b.m["version"]`` check makes both
     halves of this test fail: the post-compact est would still count
     the erased codes, and the post-retrain est would price new cell
     ids against the old geometry's histogram."""
@@ -579,8 +579,11 @@ def test_rerank_store_equals_dedup_and_stays_narrow(spark):
     batch = _vecs(spark, [12, 13, 40, 40, 41]).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    ids_list = sorted({12, 13, 40, 41})
-    got = pq_index._rerank_store(store, batch, "vec_id", "embedding", ids_list)
+    from kafkaconnect_spark.operators.index_base import IdSet
+
+    got = pq_index._rerank_store(
+        store, batch, "vec_id", "embedding", IdSet([12, 13, 40, 41])
+    )
     old = (
         store.select("vec_id", "embedding")
         .unionByName(
@@ -608,7 +611,10 @@ def test_rerank_store_equals_dedup_and_stays_narrow(spark):
     assert lines[1].lstrip(": -+").startswith("Filter"), lines[:3]
     # the oversized-batch fallback keeps an anti-join, never a
     # corpus-wide dedup
-    got_big = pq_index._rerank_store(store, batch, "vec_id", "embedding", None)
+    got_big = pq_index._rerank_store(
+        store, batch, "vec_id", "embedding",
+        IdSet.wrap(batch.select("query_id").distinct()),
+    )
     assert as_map(got_big) == as_map(old)
     opt_big = got_big._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftAnti" in opt_big and n_dedups(opt_big) == 2  # anti-join
