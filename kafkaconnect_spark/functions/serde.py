@@ -152,10 +152,14 @@ def json_deserialize(
     if schemas_enable:
         wrapper = T.StructType([T.StructField("payload", schema, True), corrupt])
         x = F.from_json(c, wrapper, opts)
+        # well-formed JSON without a payload (a bare record under the
+        # wrong converter) is corrupt too — the FAILFAST path's NULL
         return F.when(c.isNull(), F.lit(None).cast(ext)).otherwise(
             F.struct(
                 *[x["payload"][f.name].alias(f.name) for f in schema.fields],
-                x["_corrupt_record"].alias("_corrupt_record"),
+                F.coalesce(x["_corrupt_record"], F.when(x["payload"].isNull(), c)).alias(
+                    "_corrupt_record"
+                ),
             )
         )
     return F.from_json(c, ext, opts)

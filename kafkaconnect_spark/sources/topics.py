@@ -56,40 +56,41 @@ class TopicTransport:
         self.is_file = is_file_transport(servers)
 
     # ---- write ---------------------------------------------------------
-    def append(self, records: DataFrame, default_topic: str | None = None) -> None:
-        """Batch append (one micro-batch of records). ``records`` must
-        have string/binary key+value; topic column optional if
-        ``default_topic`` given."""
+    def append(self, records: DataFrame, default_topic: str | None = None) -> int:
+        """Batch append (one micro-batch of records); returns the number
+        of records written. ``records`` must have string/binary
+        key+value; topic column optional if ``default_topic`` given."""
         df = records
         if "topic" not in df.columns:
             if not default_topic:
                 raise ValueError("records need a topic column or a default_topic")
             df = df.withColumn("topic", F.lit(default_topic))
-        if not self.is_file:
-            (
-                df.selectExpr(
-                    "CAST(key AS BINARY) AS key", "CAST(value AS BINARY) AS value", "topic"
-                )
-                .write.format("kafka")
-                .option("kafka.bootstrap.servers", self.servers)
-                .save()
-            )
-            return
-        # file transport: per-topic dir; offsets = stored base + row_number.
         # df's lineage can carry serde UDFs / transform chains — persist
-        # it so topic discovery + the per-topic filters read the cache
-        # instead of re-executing the whole plan per pass
+        # it so the per-topic counts and every write read ONE evaluation
+        # (the offset accounting must match the rows actually written)
         df = df.persist()
         try:
-            self._append_per_topic(df)
+            counts = dict(df.groupBy("topic").count().collect())
+            if self.is_file:
+                # per-topic dir; offsets = stored base + row_number
+                self._append_per_topic(df, counts)
+            else:
+                (
+                    df.selectExpr(
+                        "CAST(key AS BINARY) AS key", "CAST(value AS BINARY) AS value", "topic"
+                    )
+                    .write.format("kafka")
+                    .option("kafka.bootstrap.servers", self.servers)
+                    .save()
+                )
+            return sum(counts.values())
         finally:
             df.unpersist()
 
-    def _append_per_topic(self, df: DataFrame) -> None:
+    def _append_per_topic(self, df: DataFrame, counts: dict[str, int]) -> None:
         import fcntl
 
-        topics = [r[0] for r in df.select("topic").distinct().collect()]
-        for topic in topics:
+        for topic, n in counts.items():
             tdir = _topic_dir(self.servers, topic)
             tdir.mkdir(parents=True, exist_ok=True)
             # exclusive advisory lock for the offset read→write window:
@@ -99,12 +100,12 @@ class TopicTransport:
             lock_f = open(tdir / ".lock", "w")
             fcntl.flock(lock_f, fcntl.LOCK_EX)
             try:
-                self._append_one_topic(df, topic, tdir)
+                self._append_one_topic(df, topic, tdir, n)
             finally:
                 fcntl.flock(lock_f, fcntl.LOCK_UN)
                 lock_f.close()
 
-    def _append_one_topic(self, df: DataFrame, topic: str, tdir: Path) -> None:
+    def _append_one_topic(self, df: DataFrame, topic: str, tdir: Path, n: int) -> None:
         base = self._next_offset(tdir)
         n_parts = self._partitions(tdir)
         # keyed partition assignment like Kafka's default partitioner
@@ -139,16 +140,8 @@ class TopicTransport:
                 "timestamp",
             )
         )
-        # one evaluation: the lineage includes serde UDFs/transform
-        # chains, and the offset accounting must match the rows
-        # actually written
-        w = w.persist()
-        try:
-            n = w.count()
-            w.coalesce(1).write.mode("append").parquet(str(tdir / "log"))
-            self._set_next_offset(tdir, base + n)
-        finally:
-            w.unpersist()
+        w.coalesce(1).write.mode("append").parquet(str(tdir / "log"))
+        self._set_next_offset(tdir, base + n)
 
     # ---- read ----------------------------------------------------------
     def read_stream(self, topics: list[str], starting_offsets: str = "earliest") -> DataFrame:

@@ -13,17 +13,26 @@ Maps the reference's REST surface (SURVEY §2.6 O4) onto Spark:
 
 Pipelines compile to:
 - jdbc-source      → driver-paced poll loop (IncrementalPoller) → SMT
-                     chain → JSON serde → topic append. One logical
-                     source fans out to one pipeline per whitelisted
-                     table (S5), all sharing the offset store.
-- spooldir-source  → file-streaming query → records → topic append.
+                     chain → the configured converter → topic append.
+                     One logical source fans out to one pipeline per
+                     whitelisted table (S5), all sharing the offset
+                     store.
+- spooldir-source  → file-streaming query → records → SMT chain → the
+                     configured converter → topic append.
 - jdbc-sink        → topic stream → deserialize → SMT chain →
                      foreachBatch JdbcSinkWriter (upsert/delete).
+- parquet-sink     → topic stream → deserialize → SMT chain → per-batch
+                     partitioned MERGE into a parquet lake.
 - cdc-source       → Debezium-format topic ingest: envelope parse +
                      optional unwrap; the engine treats Debezium
                      topics as the CDC interface (SURVEY §2.1 S7/S8 —
                      Spark cannot tail a binlog; snapshot.mode maps to
                      startingOffsets earliest/latest).
+
+Every source publishes through ``Engine._publish`` and both stream
+sinks decode through ``Engine._decode``; the record wire format itself
+(converter, base64 on the file transport, tombstone guards, key
+encoding) lives in one place, ``Codec``.
 
 ``run_once()`` executes one synchronous cycle for every registered
 pipeline (tests, cron-style schedulers); ``start()`` runs continuous
@@ -36,12 +45,15 @@ registry refuses two active source pipelines claiming the same
 
 from __future__ import annotations
 
+import json
+import re
+import shutil
 import threading
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,6 +83,125 @@ class Pipeline:
     streaming_query: Any = None
     error: str | None = None
     extras: dict[str, Any] = field(default_factory=dict)
+
+
+@dataclass(frozen=True)
+class Codec:
+    """One pipeline's record wire format: Connect's ``value.converter``
+    (C1/C2 JsonConverter with or without the schema block, C3
+    AvroConverter + Schema Registry), applied the same way by every
+    pipeline kind.
+
+    Avro values are framed Confluent wire bytes (functions/avro_wire.py);
+    on the file transport they are base64-wrapped because its topic log
+    stores strings (a real Kafka write carries the bytes natively).
+    Keys: a struct key goes out as JSON (schema block per
+    ``schemas_enable``), a scalar key as a string, a missing key as null.
+    """
+
+    registry_url: str | None  # None: JsonConverter
+    schemas_enable: bool
+    base64: bool
+
+    @classmethod
+    def of(cls, cfg: dict, file_transport: bool) -> Codec:
+        """The spec's converter — the one reader of ``value.converter*``."""
+        conv = str(cfg.get("value.converter", "JsonConverter")).rsplit(".", 1)[-1]
+        return cls(
+            # http(s):// → Confluent REST protocol, file:// → file-backed,
+            # empty → in-memory (registry_rest.registry_for_url)
+            registry_url=str(cfg.get("value.converter.schema.registry.url", ""))
+            if conv == "AvroConverter"
+            else None,
+            # default true, like Connect's JsonConverter
+            schemas_enable=str(cfg.get("value.converter.schemas.enable", "true")).lower()
+            == "true",
+            base64=file_transport,
+        )
+
+    def value_serde(self, schema: T.StructType, topic: str, permissive: bool = False):
+        """(serialize, deserialize): column name → Column, for values of
+        ``schema``. Avro registers ``schema`` under ``<topic>-value``.
+        ``permissive`` decodes bad bytes into a ``_corrupt_record``
+        field instead of failing (errors.tolerance=all)."""
+        if self.registry_url is None:
+            return (
+                lambda col: json_serialize(col, schema, schemas_enable=self.schemas_enable),
+                lambda col: json_deserialize(
+                    col, schema, schemas_enable=self.schemas_enable, permissive=permissive
+                ),
+            )
+        from kafkaconnect_spark.functions.avro_wire import (
+            avro_deserialize_udf,
+            avro_schema_for,
+            avro_serialize_udf,
+        )
+        from kafkaconnect_spark.functions.registry_rest import registry_for_url
+
+        avro = avro_schema_for(schema, "ConnectDefault")
+        sid = registry_for_url(self.registry_url).register(f"{topic}-value", avro)
+        ser_udf = avro_serialize_udf(avro, sid)
+        de_udf = avro_deserialize_udf(schema, avro, expected_id=sid, permissive=permissive)
+        de_type = (
+            T.StructType(schema.fields + [T.StructField("_corrupt_record", T.StringType(), True)])
+            if permissive
+            else schema
+        )
+        wrap, unwrap = (F.base64, F.unbase64) if self.base64 else (lambda c: c, lambda c: c)
+
+        # tombstones need guards on BOTH sides of the UDF boundary: a
+        # null struct entering a pandas UDF arrives as an all-NaN row
+        # (which would encode as a record of nulls, destroying the
+        # delete), and null wire bytes must come back as a null STRUCT
+        # (the writer splits on value IS NULL — K2).
+        def serialize(col: str) -> Column:
+            c = F.col(col)
+            return wrap(F.when(c.isNull(), F.lit(None).cast("binary")).otherwise(ser_udf(c)))
+
+        def deserialize(col: str) -> Column:
+            raw = unwrap(F.col(col))
+            return F.when(raw.isNull(), F.lit(None).cast(de_type)).otherwise(de_udf(raw))
+
+        return serialize, deserialize
+
+    def registered_schema(self, topic: str) -> T.StructType:
+        """The latest ``<topic>-value`` schema in the registry (Avro)."""
+        from kafkaconnect_spark.functions.avro_wire import spark_schema_for
+        from kafkaconnect_spark.functions.registry_rest import registry_for_url
+
+        return spark_schema_for(registry_for_url(self.registry_url).latest(f"{topic}-value")[1])
+
+    def key(self, records: DataFrame) -> Column:
+        """The wire key of ``records``."""
+        if "key" not in records.columns:
+            return F.lit(None).cast("string")
+        key_type = records.schema["key"].dataType
+        if isinstance(key_type, T.StructType):
+            return json_serialize("key", key_type, schemas_enable=self.schemas_enable)
+        return F.col("key").cast("string")
+
+    def key_struct(self, pk: list[str], value_schema: T.StructType) -> Column:
+        """A wire key as the struct of the ``pk`` fields, typed like the
+        value's: a JSON struct key, or (one pk field) a scalar key such
+        as ExtractField$Key leaves."""
+        key_schema = T.StructType([T.StructField(c, T.StringType(), True) for c in pk])
+        parsed = json_deserialize("key", key_schema, schemas_enable=self.schemas_enable)
+        cols = {c: parsed[c] for c in pk}
+        if len(pk) == 1:
+            cols[pk[0]] = F.when(F.col("key").startswith("{"), parsed[pk[0]]).otherwise(
+                F.col("key")
+            )
+        return F.struct(*[col.cast(value_schema[c].dataType).alias(c) for c, col in cols.items()])
+
+
+class _SinkInput(NamedTuple):
+    """What a stream sink decodes its micro-batches with."""
+
+    codec: Codec
+    schema: T.StructType
+    deserialize: Callable[[str], Column]
+    tolerate: bool  # errors.tolerance=all
+    dlq: str | None
 
 
 class Engine:
@@ -214,8 +345,6 @@ class Engine:
             return
         ckpt = self.checkpoint_root / name
         if ckpt.exists():
-            import shutil
-
             shutil.rmtree(ckpt, ignore_errors=True)
 
     # ------------------------------------------------------------------
@@ -305,84 +434,30 @@ class Engine:
         return []
 
     # ------------------------------------------------------------------
-    # converters (C1/C2 JSON, C3 Avro+registry)
+    # records on the wire: publish (sources) and decode (sinks)
     # ------------------------------------------------------------------
-    def _value_serde(
-        self,
-        cfg: dict,
-        value_schema: T.StructType,
-        topic: str,
-        permissive: bool = False,
-    ):
-        """Returns (serialize_col_fn, deserialize_col_fn) per the
-        spec's value.converter. Avro values are framed Confluent wire
-        bytes (functions/avro_wire.py); on the file transport they are
-        base64-wrapped because its topic log stores strings (a real
-        Kafka write carries the bytes natively)."""
-        conv = str(cfg.get("value.converter", "JsonConverter")).rsplit(".", 1)[-1]
-        if conv == "AvroConverter":
-            from kafkaconnect_spark.functions.avro_wire import (
-                avro_deserialize_udf,
-                avro_schema_for,
-                avro_serialize_udf,
+    def _publish(self, records: DataFrame, codec: Codec, subject_topic: str) -> int:
+        """Serialize a source's post-chain records (``value`` struct,
+        optional ``key``, ``topic``) with the pipeline's codec and append
+        them to their topics; returns the number appended. The value
+        serde resolves AFTER the SMT chain: transforms reshape the value
+        struct, and a pre-chain schema would put a stale schema block
+        (or Avro writer schema) on the wire. Avro registers the schema
+        under ``<subject_topic>-value``."""
+        serialize, _ = codec.value_serde(records.schema["value"].dataType, subject_topic)
+        return self.transport.append(
+            records.select(
+                codec.key(records).alias("key"), serialize("value").alias("value"), "topic"
             )
-            from kafkaconnect_spark.functions.registry_rest import registry_for_url
-
-            url = str(cfg.get("value.converter.schema.registry.url", ""))
-            # http(s):// → Confluent REST protocol, file:// → file-backed,
-            # empty → in-memory (registry_rest.registry_for_url)
-            registry = registry_for_url(url)
-            avro = avro_schema_for(value_schema, "ConnectDefault")
-            sid = registry.register(f"{topic}-value", avro)
-            ser_udf = avro_serialize_udf(avro, sid)
-            de_udf = avro_deserialize_udf(
-                value_schema, avro, expected_id=sid, permissive=permissive
-            )
-            de_out_schema = (
-                T.StructType(
-                    list(value_schema.fields)
-                    + [T.StructField("_corrupt_record", T.StringType(), True)]
-                )
-                if permissive
-                else value_schema
-            )
-
-            # tombstones need guards on BOTH sides of the UDF boundary:
-            # a null struct entering a pandas UDF arrives as an all-NaN
-            # row (which would encode as a record of nulls, destroying
-            # the delete), and null wire bytes must come back as a null
-            # STRUCT (the writer splits on value IS NULL — K2).
-            def _null_preserving_ser(struct_col):
-                return F.when(
-                    struct_col.isNull(), F.lit(None).cast("binary")
-                ).otherwise(ser_udf(struct_col))
-
-            def _null_preserving_de(raw_col):
-                return F.when(
-                    raw_col.isNull(), F.lit(None).cast(de_out_schema)
-                ).otherwise(de_udf(raw_col))
-
-            if self.transport.is_file:
-                return (
-                    lambda col: F.base64(_null_preserving_ser(F.col(col))),
-                    lambda col: _null_preserving_de(F.unbase64(F.col(col))),
-                )
-            return (
-                lambda col: _null_preserving_ser(F.col(col)),
-                lambda col: _null_preserving_de(F.col(col)),
-            )
-        schemas_enable = str(cfg.get("value.converter.schemas.enable", "true")).lower() == "true"
-        return (
-            lambda col: json_serialize(col, value_schema, schemas_enable=schemas_enable),
-            lambda col: json_deserialize(
-                col, value_schema, schemas_enable=schemas_enable,
-                permissive=permissive,
-            ),
         )
 
-    def _resolve_sink_schema(self, cfg: dict, topics: list[str]) -> T.StructType:
-        """Sink value-schema resolution order: explicit DDL > Schema
-        Registry (Avro) > sample the topic's current JSON records.
+    def _sink_input(self, spec: PipelineSpec, topics: list[str]) -> _SinkInput:
+        """A stream sink's decode, compiled once: KIP-298 error policy
+        (errors.tolerance=none, the default, fails the task on a
+        malformed record; =all skips it, optionally routing the raw
+        record to errors.deadletterqueue.topic.name), then the value
+        schema: explicit DDL > Schema Registry (Avro) > sample the
+        topic's current JSON records.
 
         A sampled schema is CACHED in the spec (same pattern as the
         spooldir `__inferred.schema`): the CLI registry persists the
@@ -390,40 +465,88 @@ class Engine:
         invocation, doesn't brick every verb once the sampled topic is
         later empty, and a resume can't silently re-sample a different
         schema against the existing checkpoint."""
-        cached = cfg.get("__resolved.value.schema")
-        if cached:
-            import json as _json
-
-            return T.StructType.fromJson(_json.loads(str(cached)))
-        ddl = cfg.get("value.schema.ddl")
-        if ddl:
-            return T._parse_datatype_string(str(ddl))
-        conv = str(cfg.get("value.converter", "")).rsplit(".", 1)[-1]
-        if conv == "AvroConverter":
-            from kafkaconnect_spark.functions.avro_wire import spark_schema_for
-            from kafkaconnect_spark.functions.registry_rest import registry_for_url
-
-            url = str(cfg.get("value.converter.schema.registry.url", ""))
-            _, avro = registry_for_url(url).latest(f"{topics[0]}-value")
-            return spark_schema_for(avro)
-        sample = self.transport.read_batch(topics).where(F.col("value").isNotNull())
-        rows = sample.select("value").limit(1).collect()
-        if not rows:
+        cfg = spec.config
+        tolerance = str(cfg.get("errors.tolerance", "none")).lower()
+        if tolerance not in ("none", "all"):
+            raise SpecError(f"errors.tolerance must be 'none' or 'all', got {tolerance!r}")
+        dlq = cfg.get("errors.deadletterqueue.topic.name")
+        if dlq is not None and tolerance != "all":
             raise SpecError(
-                f"cannot resolve value schema for topics {topics}: topic empty "
-                "and no value.schema.ddl given"
+                "errors.deadletterqueue.topic.name requires "
+                "errors.tolerance=all (a tolerance-none task fails the "
+                "batch before anything could reach the DLQ)"
             )
-        import json as _json
+        codec = Codec.of(cfg, self.transport.is_file)
+        if cfg.get("__resolved.value.schema"):
+            schema = T.StructType.fromJson(json.loads(str(cfg["__resolved.value.schema"])))
+        elif cfg.get("value.schema.ddl"):
+            schema = T._parse_datatype_string(str(cfg["value.schema.ddl"]))
+        elif codec.registry_url is not None:
+            schema = codec.registered_schema(topics[0])
+        else:
+            sample = self.transport.read_batch(topics).where(F.col("value").isNotNull())
+            rows = sample.select("value").limit(1).collect()
+            if not rows:
+                raise SpecError(
+                    f"cannot resolve value schema for topics {topics}: topic empty "
+                    "and no value.schema.ddl given"
+                )
+            payload = json.loads(rows[0][0])
+            payload = payload.get("payload", payload) if codec.schemas_enable else payload
+            ddl = self.spark.range(1).select(F.schema_of_json(F.lit(json.dumps(payload))))
+            schema = T._parse_datatype_string(ddl.collect()[0][0])
+            cfg["__resolved.value.schema"] = json.dumps(schema.jsonValue())
+        _, deserialize = codec.value_serde(schema, topics[0], permissive=tolerance == "all")
+        return _SinkInput(codec, schema, deserialize, tolerance == "all", dlq)
 
-        schemas_enable = str(cfg.get("value.converter.schemas.enable", "true")).lower() == "true"
-        payload = _json.loads(rows[0][0])
-        payload = payload.get("payload", payload) if schemas_enable else payload
-        ddl_str = self.spark.range(1).select(
-            F.schema_of_json(F.lit(_json.dumps(payload)))
-        ).collect()[0][0]
-        schema = T._parse_datatype_string(ddl_str)
-        cfg["__resolved.value.schema"] = _json.dumps(schema.jsonValue())
-        return schema
+    def _decode(self, batch_df: DataFrame, name: str, sink: _SinkInput) -> DataFrame:
+        """A stream sink's micro-batch with its value bytes decoded.
+
+        Poison-pill guard: a parse can yield NULL for malformed input
+        (a bare record under schemas.enable=true, an empty string), and
+        NULL value == tombstone == DELETE downstream — a corrupt record
+        must not silently delete live data. Only a null WIRE value is a
+        genuine tombstone."""
+        parsed = sink.deserialize("value")
+        if not sink.tolerate:
+            parse_err = (
+                f"pipeline {name!r}: malformed value record (parse "
+                "returned NULL for non-null bytes) — not a tombstone; "
+                "check the converter config, or set errors.tolerance=all "
+                "(+ errors.deadletterqueue.topic.name) to skip/route it"
+            )
+            return batch_df.withColumn(
+                "value",
+                F.when(F.col("value").isNull(), parsed).otherwise(
+                    F.coalesce(parsed, F.raise_error(F.lit(parse_err)).cast(sink.schema))
+                ),
+            )
+        # permissive serde: parsed carries a _corrupt_record channel —
+        # non-null there ⇔ poison bytes (a null wire value stays a
+        # genuine tombstone: parsed is NULL and the flag coalesces to
+        # false)
+        malformed = F.coalesce(parsed["_corrupt_record"].isNotNull(), F.lit(False))
+        if sink.dlq is not None:
+            self.transport.append(
+                batch_df.where(malformed).select(
+                    F.col("key").cast("string").alias("key"),
+                    F.col("value").cast("string").alias("value"),
+                    F.lit(str(sink.dlq)).alias("topic"),
+                )
+            )
+        clean = F.when(
+            F.col("value").isNull() | parsed.isNull(), F.lit(None).cast(sink.schema)
+        ).otherwise(F.struct(*[parsed[f.name].alias(f.name) for f in sink.schema.fields]))
+        return batch_df.where(~malformed).withColumn("value", clean)
+
+    def _streamed(self, spec: PipelineSpec, stream: DataFrame, process, **extras) -> Pipeline:
+        """A foreachBatch pipeline: each cycle is one _drain_stream."""
+        ckpt = str(self.checkpoint_root / spec.name)
+        return Pipeline(
+            spec=spec,
+            run_one=lambda: self._drain_stream(spec.name, stream, process, ckpt),
+            extras=extras,
+        )
 
     # ------------------------------------------------------------------
     # compilation: spec -> pipeline
@@ -456,8 +579,7 @@ class Engine:
         )
         store = OffsetStore(self.checkpoint_root, spec.name)
         chain = build_transform_chain(spec.transforms)
-        # default true, like Connect's JsonConverter
-        schemas_enable = str(cfg.get("value.converter.schemas.enable", "true")).lower() == "true"
+        codec = Codec.of(cfg, self.transport.is_file)
         tables = self._effective_tables(spec)
         if not tables:
             raise SpecError(
@@ -474,41 +596,13 @@ class Engine:
         def run_one() -> int:
             total = 0
             for table in tables:
-                tdf = self.table_resolver(table)
-                offset = store.get(table)
-                batch, new_offset = poller.poll(tdf, offset)
-                records = batch.select(
-                    F.struct(*[F.col(c).alias(c) for c in batch.columns]).alias("value")
-                ).withColumn("topic", F.lit(spec.topic_for_table(table)))
-                records = chain(records)
-                # serde resolves AFTER the SMT chain: transforms reshape
-                # the value struct, and a pre-chain schema would put a
-                # stale schema block (or Avro writer schema) on the wire
-                value_schema = records.schema["value"].dataType
-                serialize, _ = self._value_serde(
-                    cfg, value_schema, spec.topic_for_table(table)
-                )
-                wire = records.withColumn("value", serialize("value"))
-                if "key" in wire.columns:
-                    key_type = wire.schema["key"].dataType
-                    if isinstance(key_type, T.StructType):
-                        wire = wire.withColumn(
-                            "key",
-                            json_serialize("key", key_type, schemas_enable=schemas_enable),
-                        )
-                    else:
-                        wire = wire.withColumn("key", F.col("key").cast("string"))
-                else:
-                    wire = wire.withColumn("key", F.lit(None).cast("string"))
-                wire = wire.select("key", "value", "topic")
-                cnt = wire.count()
-                if cnt:
-                    self.transport.append(wire)
+                topic = spec.topic_for_table(table)
+                batch, new_offset = poller.poll(self.table_resolver(table), store.get(table))
+                total += self._publish(chain(_records(batch, topic)), codec, topic)
                 # commit offset only after the append succeeded
                 # (at-least-once, like connect-offsets commit post-produce)
                 store.put(table, new_offset)
                 batch.unpersist()  # poll() pinned it for offset/append consistency
-                total += cnt
             return total
 
         return Pipeline(spec=spec, run_one=run_one, extras={"offset_store": store})
@@ -522,13 +616,11 @@ class Engine:
         # accept an explicit glob, and reject anything else loudly
         # (silently ingesting *.csv when the spec says .txt reads the
         # WRONG files).
-        import re as _re
-
         raw = str(cfg.get("input.file.pattern", "^.*\\.csv$"))
-        m = _re.fullmatch(r"\^?\.\*\\\.(\w+)\$?", raw)
+        m = re.fullmatch(r"\^?\.\*\\\.(\w+)\$?", raw)
         if m:
             pattern = f"*.{m.group(1)}"
-        elif _re.fullmatch(r"\*\.\w+", raw):
+        elif re.fullmatch(r"\*\.\w+", raw):
             pattern = raw
         else:
             raise SpecError(
@@ -543,18 +635,17 @@ class Engine:
         # re-infer a different schema against the existing checkpoint.
         cached = cfg.get("__inferred.schema")
         if cached:
-            import json as _json
-
-            schema = T.StructType.fromJson(_json.loads(str(cached)))
+            schema = T.StructType.fromJson(json.loads(str(cached)))
         else:
             schema = generate_schema(self.spark, input_path, pattern)
-            import json as _json
-
-            cfg["__inferred.schema"] = _json.dumps(schema.jsonValue())
+            cfg["__inferred.schema"] = json.dumps(schema.jsonValue())
         chain = build_transform_chain(spec.transforms)
-        halt = str(cfg.get("halt.on.error", "false")).lower() == "true"
+        codec = Codec.of(cfg, self.transport.is_file)
         error_path = cfg.get("error.path")
-        schemas_enable = str(cfg.get("value.converter.schemas.enable", "true")).lower() == "true"
+        # KIP-298 parity on the source side: corrupt CSV lines can also
+        # route to a dead-letter TOPIC (same config key as the sink),
+        # in addition to the SpoolDir-style error.path directory
+        src_dlq = cfg.get("errors.deadletterqueue.topic.name")
 
         stream = read_spooldir_stream(
             self.spark,
@@ -562,51 +653,24 @@ class Engine:
             schema,
             finished_path=str(cfg["finished.path"]) if cfg.get("finished.path") else None,
             pattern=pattern,
-            halt_on_error=halt,
+            halt_on_error=str(cfg.get("halt.on.error", "false")).lower() == "true",
         )
-
-        transport = self.transport
-
-        # KIP-298 parity on the source side: corrupt CSV lines can also
-        # route to a dead-letter TOPIC (same config key as the sink),
-        # in addition to the SpoolDir-style error.path directory
-        src_dlq = cfg.get("errors.deadletterqueue.topic.name")
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
             good, bad = split_errors(batch_df)
             if error_path is not None:
                 bad.write.mode("append").text(str(error_path).rstrip("/") + "/corrupt")
             if src_dlq is not None:
-                transport.append(
+                self.transport.append(
                     bad.select(
                         F.lit(None).cast("string").alias("key"),
                         F.col(bad.columns[0]).cast("string").alias("value"),
                         F.lit(str(src_dlq)).alias("topic"),
                     )
                 )
-            records = good.select(
-                F.struct(*[F.col(c).alias(c) for c in good.columns]).alias("value")
-            ).withColumn("topic", F.lit(topic))
-            records = chain(records)
-            # post-chain schema: SMTs may have reshaped the value struct
-            wire = records.withColumn(
-                "value",
-                json_serialize(
-                    "value",
-                    records.schema["value"].dataType,
-                    schemas_enable=schemas_enable,
-                ),
-            )
-            if "key" not in wire.columns:
-                wire = wire.withColumn("key", F.lit(None).cast("string"))
-            transport.append(wire.select("key", "value", "topic"))
+            self._publish(chain(_records(good, topic)), codec, topic)
 
-        ckpt = str(self.checkpoint_root / spec.name)
-
-        def run_one() -> int:
-            return self._drain_stream(spec.name, stream, process, ckpt)
-
-        return Pipeline(spec=spec, run_one=run_one, extras={"schema": schema})
+        return self._streamed(spec, stream, process, schema=schema)
 
     def _compile_jdbc_sink(self, spec: PipelineSpec) -> Pipeline:
         cfg = spec.config
@@ -615,7 +679,7 @@ class Engine:
                 "jdbc-sink: topics.regex is not supported by this engine — "
                 "list the topics explicitly via `topics`"
             )
-        topics = [t.strip() for t in str(cfg["topics"]).split(",") if t.strip()]
+        topics = _topic_list(cfg["topics"])
         if len(topics) > 1:
             # ${topic} routing is resolved per PIPELINE, not per record:
             # a multi-topic sink would funnel every topic into one table
@@ -637,32 +701,9 @@ class Engine:
         table = str(cfg.get("table.name.format", "${topic}")).replace(
             "${topic}", topics[0]
         )
-        schemas_enable = str(cfg.get("value.converter.schemas.enable", "true")).lower() == "true"
         chain = build_transform_chain(spec.transforms)
-
-        # error handling per KIP-298 (public Connect semantics):
-        # errors.tolerance=none (default) fails the task on a malformed
-        # record; =all skips it, optionally routing the raw record to a
-        # dead-letter topic (errors.deadletterqueue.topic.name).
-        tolerance = str(cfg.get("errors.tolerance", "none")).lower()
-        if tolerance not in ("none", "all"):
-            raise SpecError(
-                f"errors.tolerance must be 'none' or 'all', got {tolerance!r}"
-            )
-        dlq_topic = cfg.get("errors.deadletterqueue.topic.name")
-        if dlq_topic is not None and tolerance != "all":
-            raise SpecError(
-                "errors.deadletterqueue.topic.name requires "
-                "errors.tolerance=all (a tolerance-none task fails the "
-                "batch before anything could reach the DLQ)"
-            )
-        # Schema resolution at registration (SURVEY §1.3): explicit DDL
-        # wins; else Schema Registry (Avro); else sample the topic.
-        value_schema = self._resolve_sink_schema(cfg, topics)
-        _, deserialize = self._value_serde(
-            cfg, value_schema, topics[0], permissive=tolerance == "all"
-        )
-
+        # Schema resolution at registration (SURVEY §1.3)
+        sink = self._sink_input(spec, topics)
         pk = spec.pk_fields
         writer = JdbcSinkWriter(
             table=table,
@@ -676,99 +717,13 @@ class Engine:
             num_writers=int(cfg.get("tasks.max", 1)) if dialect.name == "sqlite" else None,
         )
 
-        key_schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in pk]
-        )
-
-        transport = self.transport
-
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            recs = batch_df
-            # poison-pill guard: from_json yields NULL for malformed
-            # input, and NULL value == tombstone == DELETE downstream —
-            # a corrupt record must not silently delete live data.
-            # Only a null WIRE value is a genuine tombstone.
-            parse_err = (
-                f"pipeline {spec.name!r}: malformed value record (parse "
-                "returned NULL for non-null bytes) — not a tombstone; "
-                "check the converter config, or set errors.tolerance=all "
-                "(+ errors.deadletterqueue.topic.name) to skip/route it"
-            )
-            parsed = deserialize("value")
-            if tolerance == "all":
-                # permissive serde: parsed carries a _corrupt_record
-                # channel — non-null there ⇔ poison bytes (null wire
-                # value stays a genuine tombstone: parsed is NULL and
-                # the flag coalesces to false)
-                malformed = F.coalesce(
-                    parsed["_corrupt_record"].isNotNull(), F.lit(False)
-                )
-                if dlq_topic is not None:
-                    bad = recs.where(malformed)
-                    transport.append(
-                        bad.select(
-                            F.col("key").cast("string").alias("key"),
-                            F.col("value").cast("string").alias("value"),
-                            F.lit(str(dlq_topic)).alias("topic"),
-                        )
-                    )
-                clean = F.when(
-                    F.col("value").isNull() | parsed.isNull(),
-                    F.lit(None).cast(value_schema),
-                ).otherwise(
-                    F.struct(
-                        *[
-                            parsed[f.name].alias(f.name)
-                            for f in value_schema.fields
-                        ]
-                    )
-                )
-                recs = recs.where(~malformed).withColumn("value", clean)
-            else:
-                recs = recs.withColumn(
-                    "value",
-                    F.when(F.col("value").isNull(), parsed).otherwise(
-                        F.coalesce(
-                            parsed,
-                            F.raise_error(F.lit(parse_err)).cast(value_schema),
-                        )
-                    ),
-                )
-            recs = chain(recs)
-            # key: json struct of pk fields, or scalar pk — normalize to
-            # struct keyed by pk names, casting to the value's pk types.
+            recs = chain(self._decode(batch_df, spec.name, sink))
             if pk:
-                parsed = json_deserialize("key", key_schema, schemas_enable=schemas_enable)
-                if len(pk) == 1:
-                    # scalar key (post-ExtractField$Key) or struct JSON key
-                    key_col = F.when(
-                        F.col("key").startswith("{"), parsed[pk[0]]
-                    ).otherwise(F.col("key"))
-                    recs = recs.withColumn(
-                        "key",
-                        F.struct(
-                            key_col.cast(value_schema[pk[0]].dataType).alias(pk[0])
-                        ),
-                    )
-                else:
-                    recs = recs.withColumn(
-                        "key",
-                        F.struct(
-                            *[
-                                parsed[c].cast(value_schema[c].dataType).alias(c)
-                                for c in pk
-                            ]
-                        ),
-                    )
+                recs = recs.withColumn("key", sink.codec.key_struct(pk, sink.schema))
             writer.process_batch(recs, batch_id)
 
-        ckpt = str(self.checkpoint_root / spec.name)
-        stream = self.transport.read_stream(topics)
-
-        def run_one() -> int:
-            return self._drain_stream(spec.name, stream, process, ckpt)
-
-        return Pipeline(spec=spec, run_one=run_one, extras={"writer": writer})
+        return self._streamed(spec, self.transport.read_stream(topics), process, writer=writer)
 
     def _compile_parquet_sink(self, spec: PipelineSpec) -> Pipeline:
         """Parquet-lake sink (engine-native, SURVEY §2.7): per-batch
@@ -779,54 +734,44 @@ class Engine:
         from kafkaconnect_spark.operators.layout import merge_into_partitioned
 
         cfg = spec.config
-        topics = [t.strip() for t in str(cfg["topics"]).split(",") if t.strip()]
+        topics = _topic_list(cfg["topics"])
         path = str(cfg["path"])
         partition_field = str(cfg["partition.field"])
         order_field = str(cfg["order.field"])
         delete_field = cfg.get("delete.field")
         chain = build_transform_chain(spec.transforms)
-        value_schema = self._resolve_sink_schema(cfg, topics)
-        _, deserialize = self._value_serde(cfg, value_schema, topics[0])
-        pk = spec.pk_fields
+        sink = self._sink_input(spec, topics)
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            recs = batch_df.withColumn("value", deserialize("value"))
-            recs = chain(recs)
+            recs = chain(self._decode(batch_df, spec.name, sink))
             # null-value (key-only) tombstones carry no partition value,
             # so this sink cannot target them — fail loudly rather than
             # silently retaining deleted rows; route deletes through a
             # flagged column (delete.field, e.g. Debezium rewrite mode)
-            n_tombstones = recs.where(F.col("value").isNull()).limit(1).count()
-            if n_tombstones:
+            if recs.where(F.col("value").isNull()).limit(1).count():
                 raise SpecError(
                     f"pipeline {spec.name!r}: parquet-sink cannot apply "
                     "null-value tombstones (no partition value); use "
                     "delete.field with flagged delete records"
                 )
-            flat = recs.select("value.*")
             merge_into_partitioned(
                 self.spark,
-                flat,
+                recs.select("value.*"),
                 path,
-                pk,
+                spec.pk_fields,
                 partition_field,
                 order_field,
                 delete_col=str(delete_field) if delete_field else None,
             )
 
-        ckpt = str(self.checkpoint_root / spec.name)
-        stream = self.transport.read_stream(topics)
-
-        def run_one() -> int:
-            return self._drain_stream(spec.name, stream, process, ckpt)
-
-        return Pipeline(spec=spec, run_one=run_one, extras={"path": path})
+        return self._streamed(spec, self.transport.read_stream(topics), process, path=path)
 
     def _compile_cdc_ingest(self, spec: PipelineSpec) -> Pipeline:
         """Debezium-format topic ingest (S7/S8): parse envelope, apply
         SMT chain (typically ExtractNewRecordState + RegexRouter), and
         re-publish flat records — the 'source-side unwrap' shape of
-        …실습 - 01.md:287-311."""
+        …실습 - 01.md:287-311. Both sides are schemaless JSON, whatever
+        the spec's converter keys say."""
         cfg = spec.config
         if not cfg.get("cdc.topic.pattern"):
             raise SpecError(
@@ -848,23 +793,15 @@ class Engine:
         ddl = cfg.get("value.schema.ddl")
         if not ddl:
             raise SpecError("cdc-source ingest needs value.schema.ddl (row schema)")
-        row_schema = T._parse_datatype_string(str(ddl))
         from kafkaconnect_spark.functions.envelope import envelope_schema
 
-        env_schema = envelope_schema(row_schema)
-        ckpt = str(self.checkpoint_root / spec.name)
-        transport = self.transport
+        env_schema = envelope_schema(T._parse_datatype_string(str(ddl)))
+        codec = Codec(registry_url=None, schemas_enable=False, base64=self.transport.is_file)
+        _, deserialize = codec.value_serde(env_schema, in_topics[0])
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            recs = batch_df.withColumn(
-                "value", json_deserialize("value", env_schema, schemas_enable=False)
-            )
-            recs = chain(recs)
-            value_type = recs.schema["value"].dataType
-            wire = recs.withColumn(
-                "value", json_serialize("value", value_type, schemas_enable=False)
-            ).select("key", "value", "topic")
-            transport.append(wire)
+            recs = chain(batch_df.withColumn("value", deserialize("value")))
+            self._publish(recs, codec, in_topics[0])
 
         stream = self.transport.read_stream(
             in_topics,
@@ -872,8 +809,15 @@ class Engine:
             if str(cfg.get("snapshot.mode", "initial")) == "schema_only"
             else "earliest",
         )
+        return self._streamed(spec, stream, process)
 
-        def run_one() -> int:
-            return self._drain_stream(spec.name, stream, process, ckpt)
 
-        return Pipeline(spec=spec, run_one=run_one)
+def _records(rows: DataFrame, topic: str) -> DataFrame:
+    """Source rows as records: the whole row as the ``value`` struct."""
+    return rows.select(
+        F.struct(*[F.col(c).alias(c) for c in rows.columns]).alias("value")
+    ).withColumn("topic", F.lit(topic))
+
+
+def _topic_list(topics: Any) -> list[str]:
+    return [t.strip() for t in str(topics).split(",") if t.strip()]

@@ -41,7 +41,9 @@ def all_configs():
     return sorted(REF.rglob("*.json"))
 
 
-@pytest.mark.parametrize("path", all_configs(), ids=lambda p: p.stem)
+# with the corpus absent the list is empty and pytest passes its NOTSET
+# placeholder to ``ids`` — name only real paths so the module skips
+@pytest.mark.parametrize("path", all_configs(), ids=lambda p: getattr(p, "stem", None))
 def test_reference_config_parses(path):
     try:
         spec = PipelineSpec.from_json(path)

@@ -124,7 +124,7 @@ def test_engine_avro_pipeline_against_http_registry(tmp_path, spark):
     try:
         import pyspark.sql.types as T
 
-        from kafkaconnect_spark.streaming.engine import Engine
+        from kafkaconnect_spark.streaming.engine import Codec, Engine
 
         (tmp_path / "topics").mkdir(exist_ok=True)
         eng = Engine(
@@ -133,11 +133,11 @@ def test_engine_avro_pipeline_against_http_registry(tmp_path, spark):
             checkpoint_root=tmp_path / "ckpt",
         )
         schema = T.StructType([T.StructField("id", T.LongType())])
-        ser, de = eng._value_serde(
+        ser, de = Codec.of(
             {"value.converter": "io.confluent.connect.avro.AvroConverter",
              "value.converter.schema.registry.url": url},
-            schema, topic="t1",
-        )
+            eng.transport.is_file,
+        ).value_serde(schema, topic="t1")
         # the subject landed in the REAL (http-served) registry, and a
         # row round-trips through the wire-format serde built from it
         assert backing.subjects() == ["t1-value"]
