@@ -65,19 +65,27 @@ def _driver_covered() -> set[str]:
 # they can never displace a genuinely-unproven query out of the
 # window (pinned in tests/test_entry_ordering.py).
 _REPROVE_CHANGED = [
-    # the three index SMTs now run one shared skeleton
-    # (index_base.StreamingDedup) over one id-set value, and add()
-    # commits the membership table last — every query that drives an
-    # index SMT re-proves first.
+    # every index build/compact/delete/retrain now runs through one
+    # generational store (index_base.IndexStore) — each query that
+    # calls one of them re-proves first
+    "dedup_incremental",
+    "dedup_lsh_index_lifecycle",
+    "dedup_incremental_indexed",
+    "dedup_lsh_index_erasure",
+    "embedding_pq_index_lifecycle",
+    "embedding_pq_index_erasure",
     "streaming_dedup_replay",
     "streaming_semdedup_replay",
     "streaming_dedup_within_batch_replay",
     "streaming_semdedup_within_batch_replay",
+    "embedding_pq_index_retrain",
+    "multimodal_dedup_index",
+    "dedup_simhash_index",
     "streaming_fingerprint_dedup_replay",
-    "streaming_fingerprint_fallback_minhash",
     "index_retention_audit",
     "embedding_pq_retention_audit",
     "fingerprint_retention_audit",
+    "streaming_fingerprint_fallback_minhash",
 ]
 
 

@@ -21,7 +21,8 @@ verify XOR runs on two 32-bit halves, so no value ever touches the
 sign bit of a 64-bit integer (a top-bit hash would otherwise
 overflow/NULL under signed casts, differently per engine).
 
-Tables (layout mirrors lsh_index; fs access through index_fs):
+Tables (index_base.IndexStore over the two declared in ``STORE``;
+fs access through index_fs):
 
     index_dir/MANIFEST.json   {"version", "bits", "bands",
                                "max_hamming", "id_col", "hash_col",
@@ -100,39 +101,22 @@ every match — only the remedy is sized to the measured disease.
 
 from __future__ import annotations
 
-import json
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafkaconnect_spark.operators import index_fs as ifs
-from kafkaconnect_spark.operators.index_base import (
+from kafkaconnect_spark.operators.index_base import (  # noqa: F401 — _table_path re-exported
     IdSet,
+    IndexStore,
+    StoredTable,
     StreamingDedup,
-    _clear_manifestless_debris,
-    _commit_generation_table,
-    _gc_locked,
-    _manifest_path,
-    _maybe_broadcast_tombstones,
     _shingle_bucket_expr,  # id-hash bucket — shared partition key expr
-    _spread_for_write,
-    _stage_then_move,
     _table_path,
-    _write_manifest,
-    _writer_lock,
     as_id_set,
     band_self_pairs,
-    delete_ids,
     inline_rows,
-    late_tombstones,
-    membership_probe,
-    snapshot_tombstones,
-    stage_pair_then_move,
-    tombstone_set,
 )
-
-_HAM_TABLES = ("hashes", "bands", "tombstones")
 
 DEFAULT_BAND_BUCKETS = 8
 DEFAULT_HASH_BUCKETS = 8
@@ -186,17 +170,6 @@ class HotPairRefusalError(ValueError):
     pre-r11 caller and test keeps working."""
 
 
-def _read_manifest(index_dir: str) -> dict:
-    m = json.loads(ifs.read_text(_manifest_path(index_dir)))
-    if "bits" not in m or "bands" not in m:
-        raise ValueError(
-            f"index at {index_dir} has no banding parameters in its manifest; "
-            "rebuild it — bits/bands must be manifest-pinned so an append can "
-            "never silently band in a different slice geometry"
-        )
-    return m
-
-
 def _check_geometry(bits: int, bands: int, max_hamming: int) -> int:
     """Nibbles per band; raises unless the pigeonhole recall guarantee
     holds (max_hamming < bands) and the slices are hex-aligned."""
@@ -225,13 +198,32 @@ def _banded(df: DataFrame, bands: int, npb: int, id_col: str, hash_col: str) -> 
     )
 
 
-def _band_bucket_expr(n_buckets: int):
+def _band_bucket_expr(n_buckets: int, _id_col: str | None = None):
     """Partition key of the stored band table: the band value's int
     form mod n (band values are ≤ 4 nibbles — always in int range).
     Engine-internal only, like the lsh/pq bucket keys."""
     return F.pmod(
         F.conv(F.col("band_val"), 16, 10).cast("int"), F.lit(n_buckets)
     ).cast("int")
+
+
+STORE = IndexStore(
+    __name__,
+    (
+        StoredTable("hashes", "hash_bucket", "hash_buckets", _shingle_bucket_expr),
+        StoredTable("bands", "band_bucket", "band_buckets", _band_bucket_expr,
+                    by_id=False, sort="band_val"),
+    ),
+    required=("bits", "bands"),
+    why="bits/bands and bucket counts must be manifest-pinned so an append can "
+    "never silently band in a different slice geometry or layout",
+)
+_read_manifest = STORE.manifest
+_HAM_TABLES = STORE.dirs
+
+# test seam (tests/test_hamming_index.py): as in lsh_index — IndexStore.rewrite
+# runs it after compact's tombstone snapshot
+_POST_SNAPSHOT_HOOK = None
 
 
 def _hamming_expr(a: str, b: str):
@@ -260,71 +252,34 @@ def build(
     """Create generation v1 from (id, hex-fingerprint) rows. Geometry
     (bits/bands/max_hamming) is manifest-pinned; match/add replay it."""
     npb = _check_geometry(bits, bands, max_hamming)
-    with _writer_lock(index_dir):
-        _clear_manifestless_debris(index_dir, _HAM_TABLES)
-        src = hashes.select(F.col(id_col), F.col(hash_col))
-        _spread_for_write(
-            src.withColumn(
-                "hash_bucket", _shingle_bucket_expr(hash_buckets, id_col)
-            ),
-            hash_buckets, "hash_bucket", id_col,
-        ).write.mode(
-            "errorifexists"
-        ).partitionBy("hash_bucket").parquet(
-            _table_path(index_dir, "hashes", 1)
-        )
-        stored = hashes.sparkSession.read.parquet(
-            _table_path(index_dir, "hashes", 1)
-        )
-        _spread_for_write(
-            _banded(stored, bands, npb, id_col, hash_col).withColumn(
-                "band_bucket", _band_bucket_expr(band_buckets)
-            ),
-            band_buckets, "band_bucket", id_col,
-        ).write.mode(
-            "errorifexists"
-        ).partitionBy("band_bucket").parquet(
-            _table_path(index_dir, "bands", 1)
-        )
-        src.select(id_col).limit(0).write.mode("errorifexists").parquet(
-            _table_path(index_dir, "tombstones", 1)
-        )
+    m = {
+        "bits": bits, "bands": bands, "max_hamming": max_hamming, "id_col": id_col,
+        "hash_col": hash_col, "band_buckets": band_buckets, "hash_buckets": hash_buckets,
+    }
+
+    def fill(write):
+        stored = write("hashes", hashes.select(F.col(id_col), F.col(hash_col)))
+        banded = write("bands", _banded(stored, bands, npb, id_col, hash_col))
         # corpus band-value histogram, recorded so fingerprint
         # hostility (correlated hashes → hot band values → quadratic
         # candidates) is visible at BUILD time, not first-match time;
         # match() measures live per batch and routes/refuses on it
         skew = (
-            hashes.sparkSession.read.parquet(
-                _table_path(index_dir, "bands", 1)
-            )
-            .groupBy("band", "band_val")
+            banded.groupBy("band", "band_val")
             .agg(F.count(F.lit(1)).alias("df"))
             .agg(
                 F.max("df").alias("max_df"),
-                F.sum(
-                    F.when(F.col("df") > DEFAULT_HOT_DF_CAP, 1).otherwise(0)
-                ).alias("n_hot"),
+                F.sum(F.when(F.col("df") > DEFAULT_HOT_DF_CAP, 1).otherwise(0)).alias("n_hot"),
             )
             .collect()[0]
         )
-        _write_manifest(
-            index_dir,
-            {
-                "version": 1,
-                "bits": bits,
-                "bands": bands,
-                "max_hamming": max_hamming,
-                "id_col": id_col,
-                "hash_col": hash_col,
-                "band_buckets": band_buckets,
-                "hash_buckets": hash_buckets,
-                "band_skew": {
-                    "hot_df_cap": DEFAULT_HOT_DF_CAP,
-                    "max_df": int(skew["max_df"] or 0),
-                    "n_hot_values": int(skew["n_hot"] or 0),
-                },
-            },
-        )
+        m["band_skew"] = {
+            "hot_df_cap": DEFAULT_HOT_DF_CAP,
+            "max_df": int(skew["max_df"] or 0),
+            "n_hot_values": int(skew["n_hot"] or 0),
+        }
+
+    STORE.build(index_dir, m, fill)
 
 
 def match(
@@ -384,13 +339,13 @@ def match(
 
     from kafkaconnect_spark.operators.dedup import _track_cached
 
-    m = _read_manifest(index_dir)
+    m = STORE.manifest(index_dir)
     id_col, hash_col = m["id_col"], m["hash_col"]
     if max_hamming is None:
         max_hamming = m["max_hamming"]
     npb = _check_geometry(m["bits"], m["bands"], max_hamming)
     v = m["version"]
-    idx_hashes = spark.read.parquet(_table_path(index_dir, "hashes", v))
+    idx_hashes = STORE.read(spark, index_dir, "hashes", v)
     # r11 (guide §8 — decide with small rows): a bounded batch is
     # collected ONCE and its band values replayed driver-side — the
     # bucket hit set and the skew histogram's batch half then cost
@@ -449,12 +404,11 @@ def match(
             }
         )
     idx_b = (
-        spark.read.parquet(_table_path(index_dir, "bands", v))
+        STORE.read(spark, index_dir, "bands", v)
         .where(F.col("band_bucket").isin(hit))
         .drop("band_bucket")
     )
-    tomb_dir = _table_path(index_dir, "tombstones", v)
-    idx_b = tombstone_set(spark, tomb_dir).drop_from(idx_b, id_col)
+    idx_b = STORE.gone(spark, index_dir, m).drop_from(idx_b, id_col)
     exclude = as_id_set(exclude_ids)
     if exclude is not None:
         idx_b = exclude.drop_from(idx_b, id_col)
@@ -716,29 +670,17 @@ def add(
     absent, so the SMT's replay re-appends it. Committing hashes first
     made a half-appended id read as present: the replay skipped it and
     it never gained bands (the same argument as lsh_index)."""
-    with _writer_lock(index_dir):
-        m = _read_manifest(index_dir)
+    with STORE.writing(index_dir) as m:
         npb = _check_geometry(m["bits"], m["bands"], m["max_hamming"])
-        id_col, hash_col = m["id_col"], m["hash_col"]
-        src = new_hashes.select(F.col(id_col), F.col(hash_col))
-        hd = src.withColumn(
-            "hash_bucket", _shingle_bucket_expr(m["hash_buckets"], id_col)
-        ).repartition(m["hash_buckets"], "hash_bucket")
-        bd = _banded(src, m["bands"], npb, id_col, hash_col).withColumn(
-            "band_bucket", _band_bucket_expr(m["band_buckets"])
-        ).repartition(m["band_buckets"], "band_bucket")
-        # staging writes overlap (guide §2.6); commit order keeps the
-        # crash contract — bands BEFORE hashes
-        stage_pair_then_move(
-            spark, index_dir, m["version"],
-            (bd, "bands", "band_bucket"), (hd, "hashes", "hash_bucket"),
-        )
+        src = new_hashes.select(F.col(m["id_col"]), F.col(m["hash_col"]))
+        bands = _banded(src, m["bands"], npb, m["id_col"], m["hash_col"])
+        STORE.append(spark, index_dir, m, {"hashes": src, "bands": bands})
 
 
 def delete(spark: SparkSession, index_dir: str, ids) -> int:
     """Tombstone fingerprint ids — immediate serving-surface removal,
     physical drop at compact (the shared contract)."""
-    return delete_ids(spark, index_dir, ids, _read_manifest)
+    return STORE.delete(spark, index_dir, ids)
 
 
 def compact(
@@ -746,60 +688,21 @@ def compact(
     index_dir: str,
     keep_generations: int = 1,
 ) -> dict:
-    """Generation v+1 minus tombstones, bucket-partitioned; tombstone
-    snapshot + carry-forward and retention GC exactly as in
-    lsh_index.compact."""
-    with _writer_lock(index_dir):
-        m = _read_manifest(index_dir)
-        v, id_col = m["version"], m["id_col"]
-        idx_hashes = spark.read.parquet(_table_path(index_dir, "hashes", v))
-        idx_bands = spark.read.parquet(_table_path(index_dir, "bands", v))
-        tomb, snap_files, tomb_dir = snapshot_tombstones(spark, index_dir, v)
-        n_tomb = tomb.count()
-        tomb_gated = _maybe_broadcast_tombstones(tomb, tomb_dir)
-        hb, bb = m["hash_buckets"], m["band_buckets"]
-        hashes_c = (
-            idx_hashes.dropDuplicates([id_col])
-            .join(tomb_gated, id_col, "left_anti")
-            .transform(lambda df: _spread_for_write(df, hb, "hash_bucket", id_col))
-        )
-        _commit_generation_table(
-            hashes_c, index_dir, "hashes", v + 1, partition_by="hash_bucket"
-        )
-        bands_c = (
-            idx_bands.distinct()
-            .join(tomb_gated, id_col, "left_anti")
-            .transform(lambda df: _spread_for_write(df, bb, "band_bucket", id_col))
-            .sortWithinPartitions("band_val")
-        )
-        _commit_generation_table(
-            bands_c, index_dir, "bands", v + 1, partition_by="band_bucket"
-        )
-        late = late_tombstones(spark, tomb_dir, snap_files, tomb)
-        _commit_generation_table(late, index_dir, "tombstones", v + 1)
-        m2 = dict(m)
-        m2["version"] = v + 1
-        _write_manifest(index_dir, m2)
-        gc = _gc_locked(index_dir, m2, keep_generations, _HAM_TABLES)
-        return {
-            "version": v + 1,
-            "n_hashes": spark.read.parquet(
-                _table_path(index_dir, "hashes", v + 1)
-            ).count(),
-            "n_tombstones_dropped": n_tomb,
-            "oldest_retained": gc["oldest_retained"],
-        }
+    """Generation v+1 minus tombstones, bucket-partitioned, bands
+    sorted by band_val; tombstone snapshot + carry-forward and
+    retention GC as in every index (IndexStore.rewrite)."""
+    out = STORE.rewrite(spark, index_dir, keep_generations)
+    return {
+        "version": out["version"],
+        "n_hashes": STORE.read(spark, index_dir, "hashes", out["version"]).count(),
+        "n_tombstones_dropped": out["n_tombstones_dropped"],
+        "oldest_retained": out["oldest_retained"],
+    }
 
 
 def drop_generations(index_dir: str, keep: int = 1) -> dict:
     """Explicit retention GC — see lsh_index.drop_generations."""
-    with _writer_lock(index_dir):
-        m = _read_manifest(index_dir)
-        return _gc_locked(index_dir, m, keep, _HAM_TABLES)
-
-
-_UNSET = object()  # hot_df_cap=None means "disable the guard", so the
-# transform needs a distinct "use match's default" sentinel
+    return STORE.drop_generations(index_dir, keep)
 
 
 class _FingerprintDedup(StreamingDedup):
@@ -818,7 +721,7 @@ class _FingerprintDedup(StreamingDedup):
 
     cols = ("id_new", "id_corpus", "hamming")
     row_width = 2
-    read_manifest = staticmethod(_read_manifest)
+    store = STORE
     refusals = (HotPairRefusalError,)
 
     def keyed(self, b):
@@ -874,12 +777,6 @@ class _FingerprintDedup(StreamingDedup):
                 f"{line:,}: these fingerprints cannot discriminate within one batch — "
                 "text near-dup belongs to lsh_index (MinHash); or raise max.hot.pairs."
             )
-
-    def membership(self, b):
-        return membership_probe(
-            b.spark, self.index_dir, b.ids, b.m["version"], "hashes",
-            b.m["hash_buckets"], "hash_bucket", b.m["id_col"],
-        )
 
     def self_pairs(self, b):
         i, h = b.m["id_col"], b.m["hash_col"]

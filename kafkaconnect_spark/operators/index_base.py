@@ -2,23 +2,25 @@
 shares (r9 judge directive #3: lsh/pq/hamming triplicated their
 plumbing, so every protocol fix landed three times).
 
-One set of primitives, three thin geometry/verify layers on top:
+One store, three thin geometry/verify layers on top:
 
 - operators/lsh_index.py     — MinHash shingles (text near-dup)
 - operators/pq_index.py      — IVF-PQ codes (embedding ANN/semantic)
 - operators/hamming_index.py — fixed-width fingerprints (perceptual)
 
-The protocol: manifest-pinned GENERATIONS (readers pin the version the
-manifest names; compaction never rewrites in place), a single-WRITER
-lock with staging-sweep on acquisition, uuid-staged ATOMIC commits
-(stage-then-move for append deltas, commit-generation for compact
-rewrites), TOMBSTONES (immediate serving-surface erasure, physical
-drop at compact, late-entry carry-forward), retention GC (storage
-bounded at keep+1 generations; erased bytes leave disk when the last
-generation carrying them falls out of the window), salted corpus-wide
-bucket writes (one task per bucket is a hard width ceiling), durable
-per-batch REPORTS with auto-fold retention, and the bucket-pruned
-membership probe the streaming SMTs share.
+The protocol (IndexStore — each module declares its tables once and
+the store runs every lifecycle step for it): manifest-pinned
+GENERATIONS (readers pin the version the manifest names; compaction
+never rewrites in place), a single-WRITER lock with staging-sweep on
+acquisition, uuid-staged ATOMIC commits (stage-then-move for append
+deltas, commit-generation for rewrites), TOMBSTONES (immediate
+serving-surface erasure, physical drop at compact, late-entry
+carry-forward), retention GC (storage bounded at keep+1 generations;
+erased bytes leave disk when the last generation carrying them falls
+out of the window), salted corpus-wide bucket writes (one task per
+bucket is a hard width ceiling), durable per-batch REPORTS with
+auto-fold retention, the bucket-pruned membership probe, and the
+streaming dedup skeleton (StreamingDedup) the three SMTs share.
 
 Everything here is geometry-agnostic: nothing knows about shingles,
 codes, or hex slices. All filesystem access goes through
@@ -27,8 +29,9 @@ object-store paths the POSIX commit protocol cannot safely drive.
 
 History note: these primitives grew inside lsh_index.py across r5-r9
 (citations in the per-function docstrings reference those rounds'
-directives); r10 moved them here verbatim. lsh_index re-exports every
-name, so pre-r10 import sites keep working.
+directives); r10 moved them here. lsh_index still re-exports the
+names its callers use (the writer lock and its error, table paths,
+report dirs and compact_reports).
 """
 
 from __future__ import annotations
@@ -36,7 +39,10 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import sys
 import uuid
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -419,9 +425,9 @@ def _spread_for_write(
     file into its bucket dir. k sizes to the session's core pool and
     collapses to the exact-one-file-per-bucket layout when the pool
     is no wider than the bucket count. APPEND deltas keep the
-    1-file-per-bucket shape (_shingles_delta/_bands_delta) — batches
-    are bounded, and k files per micro-batch would re-create the
-    staging-spray defect compact exists to fold."""
+    1-file-per-bucket shape (IndexStore.append) — batches are bounded,
+    and k files per micro-batch would re-create the staging-spray
+    defect compact exists to fold."""
     width = df.sparkSession.sparkContext.defaultParallelism
     k = max(1, width // max(n_buckets, 1))
     if k == 1:
@@ -491,125 +497,15 @@ def _cast_to_stored_schema(
     )
 
 
-# stored-table schema per generation dir: immutable once the
-# generation is written (deltas are cast TO it; compact/retrain open a
-# NEW v{n} dir), so the per-append `read.parquet(dest).schema` footer
-# read + file listing is pure repeated driver latency (r11)
-_DEST_SCHEMA_CACHE: dict[str, object] = {}
-
-
-def _stage_delta(
-    df: DataFrame,
-    index_dir: str,
-    table: str,
-    version: int,
-    partition_by: str | None = None,
-) -> tuple[str, str]:
-    """The WRITE half of _stage_then_move: cast to the stored schema
-    and write to a uuid staging dir. Returns (staging, dest) for
-    _move_staged. Safe to run concurrently for independent tables —
-    the commit ORDER is fixed by the order of the _move_staged calls,
-    not the writes."""
-    dest = _table_path(index_dir, table, version)
-    dest_schema = _DEST_SCHEMA_CACHE.get(dest)
-    if dest_schema is None:
-        dest_schema = df.sparkSession.read.parquet(dest).schema
-        _DEST_SCHEMA_CACHE[dest] = dest_schema
-    df = _cast_to_stored_schema(df, dest_schema, table, partition_col=partition_by)
-    staging = os.path.join(index_dir, ".staging", uuid.uuid4().hex[:12])
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(staging)
-    return staging, dest
-
-
 def _move_staged(staging: str, dest: str) -> None:
-    """The COMMIT half of _stage_then_move: rename the staged part
-    files into the live table dir."""
+    """The COMMIT half of a staged append: rename the staged part files
+    into the live table dir."""
     # part names are uuid'd — no collisions with live files
     for rel in ifs.parquet_files(staging):
         target = os.path.join(dest, rel)
         ifs.makedirs(os.path.dirname(target), exist_ok=True)
         ifs.replace(os.path.join(staging, rel), target)
     ifs.rmtree(staging, ignore_errors=True)
-
-
-def _stage_then_move(
-    df: DataFrame,
-    index_dir: str,
-    table: str,
-    version: int,
-    partition_by: str | None = None,
-) -> None:
-    """Write `df` to a uuid staging dir, then move its part files into
-    the live table dir — narrows append's non-atomic window from a
-    full Spark write to a handful of file renames. For a
-    hive-partitioned table (``partition_by``), the staged write uses
-    the same layout and each ``col=value`` subdir's files move into
-    the matching live subdir (created when the delta opens a new
-    partition value).
-
-    The delta is first cast to the stored table's schema — widening
-    casts only; a non-widening mismatch raises (see
-    _cast_to_stored_schema)."""
-    _move_staged(*_stage_delta(df, index_dir, table, version, partition_by))
-
-
-def stage_pair_then_move(
-    spark: SparkSession,
-    index_dir: str,
-    version: int,
-    first: tuple[DataFrame, str, str | None],
-    second: tuple[DataFrame, str, str | None],
-) -> None:
-    """Append two independent table deltas with their STAGING writes
-    overlapped in a 2-thread pool (guide §2.6 — each staged write is
-    a small job whose tail leaves the pool idle; the two deltas of an
-    index append have no data dependence) while the COMMIT renames
-    keep the caller's crash-ordering contract: ``first`` is always
-    moved before ``second``. Each tuple is (delta_df, table,
-    partition_by). Job-group/description properties are copied into
-    the worker threads so bench/UI attribution is unchanged."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    sc = spark.sparkContext
-    props = {
-        k: sc.getLocalProperty(k)
-        for k in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        )
-    }
-
-    def _stage_with_props(df, table, part):
-        for k, v in props.items():
-            if v is not None:
-                sc.setLocalProperty(k, v)
-        return _stage_delta(df, index_dir, table, version, part)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(_stage_with_props, *first)
-        f2 = pool.submit(_stage_with_props, *second)
-        err1 = err2 = staged1 = staged2 = None
-        try:
-            staged1 = f1.result()
-        except Exception as exc:  # noqa: BLE001 — re-raised below
-            err1 = exc
-        try:
-            staged2 = f2.result()
-        except Exception as exc:  # noqa: BLE001
-            err2 = exc
-    if err1 is not None or err2 is not None:
-        # neither staging was committed; sweep whichever succeeded
-        # (the writer-lock acquisition sweep would catch it anyway)
-        for staged in (staged1, staged2):
-            if staged is not None:
-                ifs.rmtree(staged[0], ignore_errors=True)
-        raise err1 or err2
-    _move_staged(*staged1)
-    _move_staged(*staged2)
 
 
 def band_self_pairs(banded: DataFrame, id_col: str, key: str) -> DataFrame:
@@ -779,16 +675,18 @@ class StreamingDedup:
 
     Plug-in contract. A subclass is built with the index dir plus its
     factory's keyword arguments, which become attributes. It sets
-    ``read_manifest``, ``cols`` (report column names) and
-    ``row_width`` (leading keyed columns collected with the ids), and
-    implements these hooks over ``b``, the batch namespace (spark,
+    ``store`` (its module's IndexStore), ``cols`` (report column names)
+    and ``row_width`` (leading keyed columns collected with the ids),
+    and implements these hooks over ``b``, the batch namespace (spark,
     records, m = manifest, keyed, rows, ids, pre, plus whatever the
     hooks add):
 
     - ``keyed(b)`` → (frame keyed by id first, record id SQL);
     - ``sign(b, hold)``: derive the batch frames, ``hold`` each one;
     - ``guard(b)``: raise to refuse the batch (optional);
-    - ``membership(b)``: frame of b.ids present in the index;
+    - membership — which of b.ids the index holds — is the store's
+      probe, over the partitions ``b.parts`` when a hook sets them
+      (default: the ids' id-hash buckets);
     - ``self_pairs(b)``: verified within-batch pairs, ``cols`` shaped;
     - ``match(b, drops)``: corpus pairs of the batch minus ``drops``;
     - ``add(b, skip)``: append the batch minus ``skip``;
@@ -807,6 +705,9 @@ class StreamingDedup:
     def guard(self, b) -> None:
         pass
 
+    def membership(self, b) -> DataFrame:
+        return self.store.probe(b.spark, self.index_dir, b.m, b.ids, getattr(b, "parts", None))
+
     def reroute(self, exc: Exception):
         return None
 
@@ -819,7 +720,7 @@ class StreamingDedup:
 
         spark, mem = records.sparkSession, StorageLevel.MEMORY_AND_DISK
         _auto_compact_reports(spark, self.index_dir)
-        b = SimpleNamespace(spark=spark, records=records, m=self.read_manifest(self.index_dir))
+        b = SimpleNamespace(spark=spark, records=records, m=self.store.manifest(self.index_dir))
         keyed, id_sql = self.keyed(b)
         b.keyed = keyed.persist(mem)
         b.rows = inline_rows(b.keyed, keyed.columns[: self.row_width], narrow=True)
@@ -914,12 +815,12 @@ def _commit_generation_table(
     new_version: int,
     partition_by: str | None = None,
 ) -> None:
-    """Compact's table commit: write to a uuid staging dir, rename into
-    v{N}. A pre-existing v{N} dir is an unreferenced leftover of an
-    interrupted compact (the manifest still names N-1, so nothing
-    reads it) — cleared, else a crash would wedge every future compact
-    on errorifexists. Shared by lsh_index.compact and pq_index.compact.
-    """
+    """A rewrite's table commit (IndexStore.rewrite — every index's
+    compact, and pq_index.retrain): write to a uuid staging dir, rename
+    into v{N}. A pre-existing v{N} dir is an unreferenced leftover of an
+    interrupted rewrite (the manifest still names N-1, so nothing reads
+    it) — cleared, else a crash would wedge every future rewrite on
+    errorifexists."""
     staging = os.path.join(index_dir, ".staging", uuid.uuid4().hex[:12])
     writer = df.write.mode("errorifexists")
     if partition_by:
@@ -932,36 +833,319 @@ def _commit_generation_table(
     ifs.replace(staging, dest)
 
 
+def id_buckets(spark: SparkSession, ids: IdSet, n_buckets: int) -> list:
+    """The id-hash buckets (_shingle_bucket_expr) an id set can live
+    in. Literal ids evaluate driver-side (local_bucket_set — no cluster
+    job); a frame-form set collects its bucket set."""
+    def bucket(c):
+        return _shingle_bucket_expr(n_buckets, c)
+
+    if ids.ids is not None:
+        return local_bucket_set(spark, ids.ids, bucket, "id") if ids.ids else []
+    return sorted({r[0] for r in ids.frame.select(bucket("__id")).distinct().collect()})
+
+
 # ---------------------------------------------------------------------------
-# shared lifecycle fragments the three modules previously triplicated
+# the generational index store: the storage lifecycle of every index
 # ---------------------------------------------------------------------------
 
 
-def delete_ids(
-    spark: SparkSession, index_dir: str, ids, read_manifest
-) -> int:
-    """The shared ``delete`` body: tombstone ids so they stop matching
-    immediately (match/append exclude them); rows drop physically at
-    the next compact. ``ids`` is a one-column DataFrame or a plain
-    list; ``read_manifest`` is the calling module's validator (each
-    index pins different geometry). Returns the number newly
-    tombstoned after de-dup against the existing log."""
-    with _writer_lock(index_dir):
-        m = read_manifest(index_dir)
-        v = m["version"]
-        id_col = m.get("id_col", "doc_id")
-        existing = spark.read.parquet(_table_path(index_dir, "tombstones", v))
-        if isinstance(ids, DataFrame):
-            ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
-        else:
-            ids_df = spark.createDataFrame(
-                [(i,) for i in ids], schema=existing.schema
+@dataclass(frozen=True)
+class StoredTable:
+    """One declared table of an index: stored as
+    ``<index_dir>/<name>/v<N>/``, hive-partitioned by ``part``, whose
+    bucket count the manifest pins under ``n_key``. ``bucket(n,
+    id_col)`` derives ``part`` for a delta (None: the delta already
+    carries it — pq's coded ``cell``). A compact keeps one row per id
+    (``by_id``) or the distinct rows, sorted by ``sort`` within each
+    write task."""
+
+    name: str
+    part: str
+    n_key: str
+    bucket: Callable | None = None
+    by_id: bool = True
+    sort: str | None = None
+
+
+class IndexStore:
+    """The generational storage every persisted index shares — one
+    instance per index module, declared once over its tables (the
+    FIRST is the membership table the streaming SMTs probe):
+
+        index_dir/MANIFEST.json          {"version": N, pinned params…}
+        index_dir/<table>/v{N}/<part>=…/ each declared table
+        index_dir/tombstones/v{N}/       the tombstone log (one id column)
+        index_dir/reports/               durable per-batch drop reports
+
+    Readers pin the version the manifest names; writers hold the
+    single-writer lock (``writing``). The store owns the manifest and
+    its validation, table paths and reads, the v1 write (``build``),
+    bucketed append deltas committed membership-LAST (``append``), the
+    pruned membership ``probe``, ``delete`` (tombstones), one
+    ``rewrite`` into v+1 (every compact, and pq's retrain) and retention
+    GC (``drop_generations``). The modules keep only what differs:
+    signing/coding, match, and their streaming plug-in.
+
+    Append deltas are cast to the stored schema of the live generation
+    dir, cached per dir (``schemas``: a generation's schema is fixed
+    once written — deltas are cast TO it and rewrites open a NEW v{N} —
+    so the per-append footer read + file listing was pure repeated
+    driver latency, r11). ``build`` clears its index dir's entries: a
+    rebuild at the same path may store different types. No DataFrame
+    handles are cached: appends move part files into the live dir, so
+    a handle would serve a stale file listing."""
+
+    def __init__(self, module: str, tables: tuple[StoredTable, ...],
+                 required: tuple[str, ...], why: str):
+        self.module, self.tables, self.why = module, tables, why
+        self.schemas: dict[str, object] = {}
+        self.membership = tables[0]
+        self.required = (*required, *(t.n_key for t in tables))
+        self.dirs = (*(t.name for t in tables), "tombstones")
+
+    def manifest(self, index_dir: str) -> dict:
+        """The manifest, validated: every pinned parameter and layout
+        key must be present, or the index must be rebuilt."""
+        m = json.loads(ifs.read_text(_manifest_path(index_dir)))
+        missing = [k for k in self.required if k not in m]
+        if missing:
+            raise ValueError(
+                f"index at {index_dir} has no {'/'.join(missing)} in its manifest; "
+                f"rebuild it — {self.why}"
             )
-        fresh = ids_df.distinct().join(existing, id_col, "left_anti")
-        n_new = fresh.count()
-        if n_new:
-            _stage_then_move(fresh, index_dir, "tombstones", v)
-        return n_new
+        return m
+
+    @contextlib.contextmanager
+    def writing(self, index_dir: str):
+        """The writer lock, yielding the validated manifest."""
+        with _writer_lock(index_dir):
+            yield self.manifest(index_dir)
+
+    def read(self, spark: SparkSession, index_dir: str, table: str, version: int) -> DataFrame:
+        return spark.read.parquet(_table_path(index_dir, table, version))
+
+    def gone(self, spark: SparkSession, index_dir: str, m: dict) -> IdSet:
+        """The current tombstone log as an IdSet (tombstone_set)."""
+        return tombstone_set(spark, _table_path(index_dir, "tombstones", m["version"]))
+
+    def live_ids(self, spark: SparkSession, index_dir: str, m: dict,
+                 gone: DataFrame | None = None) -> DataFrame:
+        """The membership table's distinct ids minus tombstones —
+        ``gone`` (a rewrite's snapshot) or the whole current log."""
+        i = m["id_col"]
+        if gone is None:
+            tomb_dir = _table_path(index_dir, "tombstones", m["version"])
+            gone = _maybe_broadcast_tombstones(spark.read.parquet(tomb_dir), tomb_dir)
+        ids = self.read(spark, index_dir, self.membership.name, m["version"]).select(i)
+        return ids.distinct().join(gone, i, "left_anti")
+
+    def _parted(self, df: DataFrame, t: StoredTable, m: dict) -> DataFrame:
+        return df if t.bucket is None else df.withColumn(t.part, t.bucket(m[t.n_key], m["id_col"]))
+
+    def build(self, index_dir: str, m: dict, fill) -> None:
+        """Generation v1. Under the writer lock: clear a crashed build's
+        debris and this dir's cached schemas, then ``fill(write)`` —
+        the module's code — writes each table through ``write(name,
+        df)`` (bucketed and spread by _spread_for_write; returns the
+        stored read-back) and may add manifest fields to ``m``. The
+        store then writes the empty tombstone log (the membership
+        table's stored id type) and commits ``m`` as version 1."""
+        with _writer_lock(index_dir):
+            _clear_manifestless_debris(index_dir, self.dirs)
+            root = os.path.join(index_dir, "")
+            for k in [k for k in self.schemas if k.startswith(root)]:
+                del self.schemas[k]
+            stored = {}
+
+            def write(name: str, df: DataFrame) -> DataFrame:
+                t = next(t for t in self.tables if t.name == name)
+                path = _table_path(index_dir, name, 1)
+                _spread_for_write(self._parted(df, t, m), m[t.n_key], t.part, m["id_col"]) \
+                    .write.mode("errorifexists").partitionBy(t.part).parquet(path)
+                stored[name] = df.sparkSession.read.parquet(path)
+                return stored[name]
+
+            fill(write)
+            stored[self.membership.name].select(m["id_col"]).limit(0).write.mode(
+                "errorifexists"
+            ).parquet(_table_path(index_dir, "tombstones", 1))
+            _write_manifest(index_dir, {"version": 1, **m})
+
+    def append(self, spark: SparkSession, index_dir: str, m: dict, deltas: dict) -> None:
+        """Add ``deltas`` ({table: rows}) to generation ``m`` — the
+        caller holds ``writing``. Each delta gains its bucket column and
+        is repartitioned by it, so the staged write emits one file per
+        touched bucket (a partitionBy write from T tasks otherwise
+        sprays up to T×buckets part files per append, moved one rename
+        at a time and paid for by every later scan). The membership
+        table commits LAST: a crash between the renames leaves an id
+        whose other rows are invisible without it and which membership
+        reads as absent, so a replay re-appends it ("present" implies
+        "fully appended" — the StreamingDedup replay argument)."""
+        order = (*self.tables[1:], self.membership)
+        self._stage_then_move(spark, index_dir, m["version"], [
+            (self._parted(deltas[t.name], t, m).repartition(m[t.n_key], t.part), t.name, t.part)
+            for t in order if t.name in deltas
+        ])
+
+    def _stage(self, df: DataFrame, index_dir: str, table: str, version: int,
+               part: str | None) -> tuple[str, str]:
+        """Cast to the stored schema (widening only —
+        _cast_to_stored_schema) and write to a uuid staging dir, with
+        the live table's hive layout. Returns (staging, dest)."""
+        dest = _table_path(index_dir, table, version)
+        schema = self.schemas.get(dest)
+        if schema is None:
+            schema = self.schemas[dest] = df.sparkSession.read.parquet(dest).schema
+        df = _cast_to_stored_schema(df, schema, table, partition_col=part)
+        staging = os.path.join(index_dir, ".staging", uuid.uuid4().hex[:12])
+        writer = df.write.mode("errorifexists")
+        (writer.partitionBy(part) if part else writer).parquet(staging)
+        return staging, dest
+
+    def _stage_then_move(self, spark: SparkSession, index_dir: str, version: int,
+                         deltas: list[tuple[DataFrame, str, str | None]]) -> None:
+        """Stage each (delta, table, part) — the staging writes overlap
+        in a thread pool (guide §2.6: each is a small job whose tail
+        leaves the pool idle, and the deltas have no data dependence) —
+        then move their part files into the live dirs IN LIST ORDER
+        (the crash-ordering contract). The non-atomic window narrows
+        from a full Spark write to a handful of renames. Job-group and
+        description properties are copied into the workers so bench/UI
+        attribution is unchanged; if any staging fails, none commits."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        sc = spark.sparkContext
+        props = {
+            k: sc.getLocalProperty(k)
+            for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+        }
+
+        def stage(df, table, part):
+            for k, v in props.items():
+                if v is not None:
+                    sc.setLocalProperty(k, v)
+            return self._stage(df, index_dir, table, version, part)
+
+        with ThreadPoolExecutor(max_workers=len(deltas)) as pool:
+            futures = [pool.submit(stage, *d) for d in deltas]
+        errors = [f.exception() for f in futures if f.exception() is not None]
+        if errors:  # sweep what staged (the next lock acquisition would too)
+            for f in futures:
+                if f.exception() is None:
+                    ifs.rmtree(f.result()[0], ignore_errors=True)
+            raise errors[0]
+        for f in futures:
+            _move_staged(*f.result())
+
+    def probe(self, spark: SparkSession, index_dir: str, m: dict, ids: IdSet,
+              parts: list | None = None) -> DataFrame:
+        """Which of ``ids`` the CURRENT generation's membership table
+        holds, reading only its partitions ``parts`` — by default the
+        ids' own id-hash buckets (exact whatever the content: the
+        partition key is an id hash); pq passes the batch's coded
+        cells. Literal ids make it ONE narrow job."""
+        t, i = self.membership, m["id_col"]
+        if parts is None:
+            parts = id_buckets(spark, ids, m[t.n_key])
+        stored = self.read(spark, index_dir, t.name, m["version"])
+        return ids.keep_in(stored.where(F.col(t.part).isin(parts)).select(i), i).distinct()
+
+    def delete(self, spark: SparkSession, index_dir: str, ids) -> int:
+        """Tombstone ids so they stop matching immediately (match and
+        append exclude them); their rows drop physically at the next
+        rewrite. ``ids`` is a one-column DataFrame or a plain list.
+        Returns the number newly tombstoned after de-dup against the
+        existing log."""
+        with self.writing(index_dir) as m:
+            v, i = m["version"], m["id_col"]
+            existing = self.read(spark, index_dir, "tombstones", v)
+            if isinstance(ids, DataFrame):
+                fresh = ids.select(F.col(ids.columns[0]).alias(i))
+            else:
+                fresh = spark.createDataFrame([(x,) for x in ids], schema=existing.schema)
+            fresh = fresh.distinct().join(existing, i, "left_anti")
+            n_new = fresh.count()
+            if n_new:
+                self._stage_then_move(spark, index_dir, v, [(fresh, "tombstones", None)])
+            return n_new
+
+    def drop_generations(self, index_dir: str, keep: int) -> dict:
+        """Retention GC on demand (_gc_locked under the writer lock) —
+        e.g. keep=0 right after an erasure-driven compact makes the
+        erased rows' bytes leave disk without waiting for the next
+        compact. Returns {"oldest_retained", "n_generation_dirs_dropped"}."""
+        with self.writing(index_dir) as m:
+            return _gc_locked(index_dir, m, keep, self.dirs)
+
+    def _n_files(self, index_dir: str, version: int) -> int:
+        return sum(
+            len(ifs.parquet_files(_table_path(index_dir, t.name, version))) for t in self.tables
+        )
+
+    def rewrite(self, spark: SparkSession, index_dir: str, keep: int, derive=None) -> dict:
+        """Generation v+1 under the writer lock — every compact, and
+        pq_index.retrain:
+
+        1. SNAPSHOT the tombstone log: the applied set is the part-file
+           list captured here (r6 ADVICE);
+        2. the module's ``_POST_SNAPSHOT_HOOK`` test seam runs — a
+           writer that bypassed the lock, the only way to exercise
+           step 5, which the lock makes unreachable by design;
+        3. ``derive(m, gone)`` → ({table: rows}, manifest) — by default
+           each stored table's compact row rule (one row per id, or
+           distinct rows) anti-joined with the snapshot ``gone``;
+        4. each table is spread (_spread_for_write at its pinned bucket
+           count), sorted, and committed into v+1;
+        5. tombstones written AFTER the snapshot carry into the v+1 log
+           suppressed-but-unapplied, never silently discarded (defense
+           in depth for the GDPR path: a late delete() survives);
+        6. the manifest commits v+1 atomically;
+        7. retention GC (_gc_locked) drops generations older than
+           ``v+1 - keep``: storage stays bounded at keep+1 copies, and
+           an applied tombstone's rows leave disk once no retained
+           generation carries them (immediately at keep=0).
+
+        Returns {"version", "n_tombstones_dropped", "n_files_before",
+        "n_files_after", "oldest_retained"}."""
+        with self.writing(index_dir) as m:
+            v, i = m["version"], m["id_col"]
+            tomb_dir = _table_path(index_dir, "tombstones", v)
+            snap = ifs.parquet_files(tomb_dir)
+            tomb = spark.read.parquet(*[os.path.join(tomb_dir, f) for f in snap])
+            n_tomb = tomb.count()
+            hook = getattr(sys.modules[self.module], "_POST_SNAPSHOT_HOOK", None)
+            if hook is not None:
+                hook()
+            gone = _maybe_broadcast_tombstones(tomb.withColumnRenamed(tomb.columns[0], i), tomb_dir)
+            def compacted(m, gone):  # each stored table's compact row rule
+                out = {}
+                for t in self.tables:
+                    df = self.read(spark, index_dir, t.name, v)
+                    df = df.dropDuplicates([i]) if t.by_id else df.distinct()
+                    out[t.name] = df.join(gone, i, "left_anti")
+                return out, m
+
+            frames, m2 = (derive or compacted)(m, gone)
+            n_before = self._n_files(index_dir, v)
+            for t in self.tables:
+                df = _spread_for_write(frames[t.name], m2[t.n_key], t.part, i)
+                df = df.sortWithinPartitions(t.sort) if t.sort else df
+                _commit_generation_table(df, index_dir, t.name, v + 1, t.part)
+            late = [os.path.join(tomb_dir, f) for f in ifs.parquet_files(tomb_dir) if f not in snap]
+            late = spark.read.parquet(*late).join(tomb, tomb.columns[0], "left_anti") if late else tomb.limit(0)
+            _commit_generation_table(late, index_dir, "tombstones", v + 1)
+            m2 = {**m2, "version": v + 1}
+            _write_manifest(index_dir, m2)
+            gc = _gc_locked(index_dir, m2, keep, self.dirs)
+            return {
+                "version": v + 1,
+                "n_tombstones_dropped": n_tomb,
+                "n_files_before": n_before,
+                "n_files_after": self._n_files(index_dir, v + 1),
+                "oldest_retained": gc["oldest_retained"],
+            }
 
 
 def membership_probe(
@@ -970,57 +1154,11 @@ def membership_probe(
     ids: IdSet,
     version: int,
     table: str,
-    n_buckets: int | None,
+    n_buckets: int,
     bucket_col: str,
     id_col: str,
 ) -> DataFrame:
-    """Which of ``ids`` are in the CURRENT generation's ``table`` (id
-    column ``id_col``) — the stored id-bucketed table PRUNED to the
-    ids' own bucket partitions, so the probe reads a batch-bounded
-    fraction of the index, never the table (the partition key is an
-    id hash, so the prune is exact whatever the content).
-    ``n_buckets=None`` skips pruning (pre-partitioned-layout indexes).
-    Literal ids evaluate their bucket set driver-side (local_bucket_set
-    — no cluster job) and the probe is ONE narrow job; a frame-form
-    set collects its bucket set and semi-joins."""
-    t = spark.read.parquet(_table_path(index_dir, table, version))
-    if n_buckets is not None:
-        def bucket(c):
-            return _shingle_bucket_expr(n_buckets, c)
-
-        if ids.ids is not None:
-            hit = local_bucket_set(spark, ids.ids, bucket, id_col) if ids.ids else []
-        else:
-            hit = sorted(
-                {r[0] for r in ids.frame.select(bucket("__id")).distinct().collect()}
-            )
-        t = t.where(F.col(bucket_col).isin(hit))
-    return ids.keep_in(t.select(id_col), id_col).distinct()
-
-
-def snapshot_tombstones(spark: SparkSession, index_dir: str, version: int):
-    """Compact's tombstone SNAPSHOT (r6 ADVICE): the applied set is
-    the part-file list captured here; anything landing after it
-    carries forward via :func:`late_tombstones` instead of being
-    cleared wholesale. Returns (tomb_df, snap_files, tomb_dir)."""
-    tomb_dir = _table_path(index_dir, "tombstones", version)
-    snap_files = ifs.parquet_files(tomb_dir)
-    tomb = spark.read.parquet(*[os.path.join(tomb_dir, f) for f in snap_files])
-    return tomb, snap_files, tomb_dir
-
-
-def late_tombstones(
-    spark: SparkSession, tomb_dir: str, snap_files, tomb: DataFrame
-) -> DataFrame:
-    """Entries written AFTER the snapshot (lock-bypass defense in
-    depth): new part files minus the snapshotted rows — carried into
-    the v+1 log suppressed-but-uncompacted rather than silently
-    discarded."""
-    late_files = [
-        f for f in ifs.parquet_files(tomb_dir) if f not in set(snap_files)
-    ]
-    if not late_files:
-        return tomb.limit(0)
-    return spark.read.parquet(
-        *[os.path.join(tomb_dir, f) for f in late_files]
-    ).join(tomb, tomb.columns[0], "left_anti")
+    """IndexStore.probe over one id-hash-bucketed ``table`` named
+    directly (``bucket_col`` partitions it into ``n_buckets``)."""
+    store = IndexStore(__name__, (StoredTable(table, bucket_col, "n"),), (), "")
+    return store.probe(spark, index_dir, {"version": version, "id_col": id_col, "n": n_buckets}, ids)

@@ -1,5 +1,6 @@
 """Filesystem choke point for the persisted-index commit protocol
-(operators/lsh_index.py, operators/pq_index.py).
+(operators/index_base.py's IndexStore, which stores the lsh_index,
+pq_index and hamming_index tables).
 
 The index layout's crash-safety story — O_EXCL writer locks, uuid
 staging dirs renamed into place, part-file moves, atomic manifest

@@ -50,20 +50,16 @@ in a different hash space — near-dups missed with no error — so
 ``match``/``append`` default to the manifest values and RAISE on an
 explicit mismatch (r5 ADVICE).
 
-Crash safety: compact writes each v+1 table to a uuid staging dir
-and renames it into place before the atomic manifest commit, and
-removes any stale unreferenced v+1 dirs a previous interrupted
-compact left behind (rename-into-place means a crash can no longer
-permanently wedge compaction on errorifexists). append stages both
-table deltas before moving their files into the live dirs — the
-crash window is two file renames, and the shingles table (the
-MEMBERSHIP table the streaming SMT probes) is moved LAST: a crash
-between the renames leaves a doc with bands but no shingles, whose
-candidates verify cannot score — it is invisible, exactly as if
-absent — and membership reads it as absent, so the SMT's replay
-re-appends it. The reverse order made a half-appended doc read as
-present, so the replay skipped it and it never gained bands: later
-near-duplicates of it survived.
+The storage lifecycle — manifest, lock, v1 write, staged appends,
+tombstones, the compact rewrite, retention GC — is
+index_base.IndexStore over the two tables declared in ``STORE``.
+Crash safety: append stages both table deltas before moving their
+files into the live dirs — the crash window is two file renames, and
+the shingles table (the MEMBERSHIP table the streaming SMT probes)
+is moved LAST: a crash between the renames leaves a doc with bands
+but no shingles, whose candidates verify cannot score — it is
+invisible, exactly as if absent — and membership reads it as absent,
+so the SMT's replay re-appends it.
 
 Scale shape: match/append is one (band, band_hash) equi-join of a
 batch-sized frame against the band table plus a candidate-sized
@@ -84,16 +80,13 @@ commit protocol cannot safely drive (r7 judge directive #4).
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafkaconnect_spark.operators import index_fs as ifs
-
-from kafkaconnect_spark.operators.dedup import (
+from kafkaconnect_spark.operators.dedup import (  # noqa: F401 — shingle_arrays re-exported
     _banded,
     _check_banding,
     _jaccard_verify,
@@ -102,59 +95,23 @@ from kafkaconnect_spark.operators.dedup import (
     shingle_arrays,
 )
 
-# r10 (judge directive #3): the index PROTOCOL primitives moved to
-# operators/index_base — ONE implementation shared by lsh/pq/hamming
-# instead of three. Re-exported here so pre-r10 import sites (tests,
-# queries, the other index modules' historical imports) keep working.
+# the protocol lives in operators/index_base; the names callers reach
+# through this module (lock + its error, table paths, report dirs)
+# are re-exported
 from kafkaconnect_spark.operators.index_base import (  # noqa: F401
     IdSet,
+    IndexStore,
     IndexWriterLockError,
-    REPORTS_AUTO_COMPACT_AFTER,
+    StoredTable,
     StreamingDedup,
-    TOMBSTONE_BROADCAST_MAX_BYTES,
-    _SAFE_WIDENING_CHAIN,
-    _auto_compact_reports,
-    _cast_to_stored_schema,
-    _clear_manifestless_debris,
-    _commit_generation_table,
-    _gc_locked,
-    _manifest_path,
-    _maybe_broadcast_tombstones,
     _report_dirs,
-    _reports_root,
     _shingle_bucket_expr,
-    _spread_for_write,
-    _stage_then_move,
     _table_path,
-    _winner_rule_drops,
-    _write_manifest,
     _writer_lock,
     as_id_set,
     band_self_pairs,
     compact_reports,
-    delete_ids,
-    drop_ids_filter,
-    inline_ids,
-    keep_ids_pred,
-    late_tombstones,
-    membership_probe,
-    small_tombstone_ids,
-    snapshot_tombstones,
-    stage_pair_then_move,
-    tombstone_set,
 )
-
-
-def _read_manifest(index_dir: str) -> dict:
-    m = json.loads(ifs.read_text(_manifest_path(index_dir)))
-    if "num_hashes" not in m:
-        raise ValueError(
-            f"index at {index_dir} has a pre-parameter manifest (version-only); "
-            "rebuild it — banding parameters must be manifest-pinned so an "
-            "append can never silently sign in a different hash space"
-        )
-    return m
-
 
 # hive-partition bucket counts; pinned in the manifest at build() so
 # every append writes the same layout. The SHINGLE table (full arrays
@@ -164,12 +121,32 @@ DEFAULT_BAND_BUCKETS = 8
 DEFAULT_SHINGLE_BUCKETS = 16
 
 
-def _band_bucket_expr(n_buckets: int):
+def _band_bucket_expr(n_buckets: int, _id_col: str | None = None):
     """Deterministic bucket from the md5-hex band_hash — the hive
     partition key of the stored band table. First 4 hex chars → int
     (uniform), mod n. Engine-portable (conv/substring exist in DuckDB
     too), though the bucket never appears in query output."""
     return F.expr(f"int(conv(substring(band_hash, 1, 4), 16, 10) % {n_buckets})")
+
+
+STORE = IndexStore(
+    __name__,
+    (
+        StoredTable("shingles", "shingle_bucket", "shingle_buckets", _shingle_bucket_expr),
+        StoredTable("bands", "band_bucket", "band_buckets", _band_bucket_expr,
+                    by_id=False, sort="band_hash"),
+    ),
+    required=("num_hashes",),
+    why="banding parameters and bucket counts must be manifest-pinned so an "
+    "append can never silently sign in a different hash space or layout",
+)
+_read_manifest = STORE.manifest
+_LSH_TABLES = STORE.dirs
+
+# test seam (tests/test_lsh_index.py): IndexStore.rewrite runs it inside
+# compact right after its tombstone snapshot, standing in for a
+# concurrent writer that bypassed the lock
+_POST_SNAPSHOT_HOOK = None
 
 
 def _check_params(manifest: dict, num_hashes, bands, n) -> tuple[int, int, int]:
@@ -190,17 +167,16 @@ def _check_params(manifest: dict, num_hashes, bands, n) -> tuple[int, int, int]:
 
 
 def _tables(spark: SparkSession, index_dir: str) -> tuple[DataFrame, DataFrame, dict]:
-    m = _read_manifest(index_dir)
-    v = m["version"]
+    m = STORE.manifest(index_dir)
     return (
-        spark.read.parquet(_table_path(index_dir, "shingles", v)),
-        spark.read.parquet(_table_path(index_dir, "bands", v)),
+        STORE.read(spark, index_dir, "shingles", m["version"]),
+        STORE.read(spark, index_dir, "bands", m["version"]),
         m,
     )
 
 
 def _tombstones(spark: SparkSession, index_dir: str, version: int) -> DataFrame:
-    return spark.read.parquet(_table_path(index_dir, "tombstones", version))
+    return STORE.read(spark, index_dir, "tombstones", version)
 
 
 def build(
@@ -226,58 +202,15 @@ def build(
     larger I/O saving; size ``shingle_buckets`` so corpus_bytes/n is
     a sane file size at the deployment's scale)."""
     _check_banding(num_hashes, bands)
-    with _writer_lock(index_dir):
-        _clear_manifestless_debris(index_dir, ("shingles", "bands", "tombstones"))
-        _build_locked(
-            corpus, index_dir, num_hashes, bands, n, threshold, text_col,
-            id_col, band_buckets, shingle_buckets,
-        )
 
+    def fill(write):
+        sh = write("shingles", shingle_arrays(corpus, text_col, id_col, n))
+        write("bands", _banded(_signatures_from_arrays(sh, num_hashes, id_col), bands, id_col))
 
-def _build_locked(
-    corpus, index_dir, num_hashes, bands, n, threshold, text_col, id_col,
-    band_buckets, shingle_buckets,
-) -> None:
-    sh = shingle_arrays(corpus, text_col, id_col, n)
-    _spread_for_write(
-        sh.withColumn(
-            "shingle_bucket", _shingle_bucket_expr(shingle_buckets, id_col)
-        ),
-        shingle_buckets,
-        "shingle_bucket",
-        id_col,
-    ).write.mode("errorifexists").partitionBy("shingle_bucket").parquet(
-        _table_path(index_dir, "shingles", 1)
-    )
-    sh = corpus.sparkSession.read.parquet(_table_path(index_dir, "shingles", 1))
-    b = _banded(_signatures_from_arrays(sh, num_hashes, id_col), bands, id_col)
-    # group by the bucket key (plus the write salt) first so partitionBy
-    # emits k files per bucket dir instead of (tasks × buckets) spray
-    _spread_for_write(
-        b.withColumn("band_bucket", _band_bucket_expr(band_buckets)),
-        band_buckets,
-        "band_bucket",
-        id_col,
-    ).write.mode("errorifexists").partitionBy("band_bucket").parquet(
-        _table_path(index_dir, "bands", 1)
-    )
-    # empty tombstone log, schema = the id column as stored
-    sh.select(id_col).limit(0).write.mode("errorifexists").parquet(
-        _table_path(index_dir, "tombstones", 1)
-    )
-    _write_manifest(
-        index_dir,
-        {
-            "version": 1,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "n": n,
-            "threshold": threshold,
-            "id_col": id_col,
-            "band_buckets": band_buckets,
-            "shingle_buckets": shingle_buckets,
-        },
-    )
+    STORE.build(index_dir, {
+        "num_hashes": num_hashes, "bands": bands, "n": n, "threshold": threshold,
+        "id_col": id_col, "band_buckets": band_buckets, "shingle_buckets": shingle_buckets,
+    }, fill)
 
 
 def match(
@@ -368,74 +301,43 @@ def _match(
     if exclude is not None:
         idx_bands = exclude.drop_from(idx_bands, id_col)
         idx_sh = exclude.drop_from(idx_sh, id_col)
-    if "band_buckets" in m:
-        # the batch's hashes can only join rows in the batch's OWN
-        # bucket set — collect it (bounded by band_buckets, a manifest
-        # constant) and push it as a PARTITION filter on the stored
-        # hive layout: a small batch reads only the probed fraction of
-        # the band table, not the whole index (r7 judge directive #1)
-        hit = sorted(
-            r[0]
-            for r in b_new.select(
-                _band_bucket_expr(m["band_buckets"]).alias("bb")
-            )
-            .distinct()
-            .collect()
-        )
-        idx_bands = idx_bands.where(F.col("band_bucket").isin(hit)).drop(
-            "band_bucket"
-        )
+    # the batch's hashes can only join rows in the batch's OWN bucket
+    # set — collect it (bounded by band_buckets, a manifest constant)
+    # and push it as a PARTITION filter on the stored hive layout: a
+    # small batch reads only the probed fraction of the band table, not
+    # the whole index (r7 judge directive #1)
+    hit = sorted(
+        r[0] for r in b_new.select(_band_bucket_expr(m["band_buckets"]).alias("bb")).distinct().collect()
+    )
+    idx_bands = idx_bands.where(F.col("band_bucket").isin(hit)).drop("band_bucket")
     # filter the band table before the join so a deleted doc never
     # becomes a candidate (verify never sees it)
-    idx_bands = tombstone_set(
-        spark, _table_path(index_dir, "tombstones", m["version"])
-    ).drop_from(idx_bands, id_col)
+    idx_bands = STORE.gone(spark, index_dir, m).drop_from(idx_bands, id_col)
+    # the verify join only ever fetches CANDIDATE corpus docs from the
+    # stored shingle table (the index's biggest table — full arrays) —
+    # collect the candidates' bucket set (bounded by shingle_buckets)
+    # and push it as a partition filter, so verify reads only those
+    # buckets. cands is persisted so the collect materializes the SAME
+    # frame _jaccard_verify's two consumers replay (its own persist of
+    # the same object is a no-op), not a recompute.
     cands = (
         b_new.withColumnRenamed(id_col, "id_new")
-        .join(
-            idx_bands.withColumnRenamed(id_col, "id_corpus"),
-            ["band", "band_hash"],
-        )
+        .join(idx_bands.withColumnRenamed(id_col, "id_corpus"), ["band", "band_hash"])
         # a re-ingested doc present on both sides is not its own dup
         .where(F.col("id_new") != F.col("id_corpus"))
         .select("id_new", "id_corpus")
         .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if "shingle_buckets" in m:
-        # the verify join only ever fetches CANDIDATE corpus docs from
-        # the stored shingle table (the index's biggest table — full
-        # arrays) — collect the candidates' bucket set (bounded by
-        # shingle_buckets, a manifest constant) and push it as a
-        # partition filter, so verify reads only those buckets instead
-        # of scanning the whole table. cands is persisted here so the
-        # collect materializes the SAME frame _jaccard_verify's two
-        # consumers replay (its own persist of the same object is a
-        # no-op), not a recompute.
-        from pyspark import StorageLevel as _SL
-
-        cands = cands.persist(_SL.MEMORY_AND_DISK)
-        hit_sb = sorted(
-            r[0]
-            for r in cands.select(
-                _shingle_bucket_expr(m["shingle_buckets"], "id_corpus").alias(
-                    "sb"
-                )
-            )
-            .distinct()
-            .collect()
-        )
-        idx_sh = idx_sh.where(F.col("shingle_bucket").isin(hit_sb)).drop(
-            "shingle_bucket"
-        )
+    sb = _shingle_bucket_expr(m["shingle_buckets"], "id_corpus")
+    hit_sb = sorted(r[0] for r in cands.select(sb.alias("sb")).distinct().collect())
+    idx_sh = idx_sh.where(F.col("shingle_bucket").isin(hit_sb)).drop("shingle_bucket")
     pairs = _jaccard_verify(
         cands, sh_new, idx_sh, threshold, "id_new", "id_corpus", id_col
     )
     return _track_cached(pairs, own_cache), sh_new
 
 
-# widenings a staged delta may silently take to match the stored
-# schema; anything else raises instead of casting (non-ANSI Cast
-# would null-corrupt the index — r7 ADVICE #3)
 def append(
     spark: SparkSession,
     index_dir: str,
@@ -462,19 +364,12 @@ def append(
     generation) — append-after-delete-after-compact re-adds it."""
     from kafkaconnect_spark.operators.dedup import release_cached
 
-    with _writer_lock(index_dir):
-        m = _read_manifest(index_dir)
+    with STORE.writing(index_dir) as m:
         num_hashes, bands, n = _check_params(m, num_hashes, bands, n)
-        v = m["version"]
         pairs, sh_new = _match(
-            spark,
-            index_dir,
-            new_batch,
-            threshold=threshold,
-            text_col=text_col,
-            id_col=id_col,
+            spark, index_dir, new_batch, threshold=threshold, text_col=text_col, id_col=id_col,
         )
-        report = os.path.join(index_dir, "reports", f"v{v}-{uuid.uuid4().hex[:12]}")
+        report = os.path.join(index_dir, "reports", f"v{m['version']}-{uuid.uuid4().hex[:12]}")
         pairs.write.mode("errorifexists").parquet(report)
         # the index deltas derive from _match's still-live sh_new cache
         # — the batch is shingled exactly ONCE per append (r6 ADVICE;
@@ -482,53 +377,10 @@ def append(
         # writes replay it instead of recomputing). sh_new reads only
         # the BATCH's lineage, so neither the report write nor the
         # delta moves below can refreshByPath-invalidate it.
-        b_new = _banded(
-            _signatures_from_arrays(sh_new, num_hashes, id_col), bands, id_col
-        )
-        # stage both deltas (overlapped, guide §2.6), then move —
-        # shingles last (see module docstring for the ordering
-        # rationale; the commit order is fixed by the move calls)
-        sd, spart = _shingles_delta(sh_new, m, id_col)
-        bd, bpart = _bands_delta(b_new, m)
-        stage_pair_then_move(
-            spark, index_dir, v, (bd, "bands", bpart), (sd, "shingles", spart)
-        )
+        b_new = _banded(_signatures_from_arrays(sh_new, num_hashes, id_col), bands, id_col)
+        STORE.append(spark, index_dir, m, {"shingles": sh_new, "bands": b_new})
         release_cached(pairs)  # sh_new + verify's candidate cache
         return spark.read.parquet(report)
-
-
-def _bands_delta(b_new: DataFrame, m: dict) -> tuple[DataFrame, str | None]:
-    """(delta, partition_by) for a band-table append: hive-partitioned
-    indexes get the bucket column + partitioned staging; a legacy flat
-    index (pre-band_buckets manifest) appends flat. The delta is
-    REPARTITIONED by the bucket key first — a partitionBy write from T
-    tasks otherwise sprays up to T×buckets part files per append
-    (moved one rename at a time, then paid for by every later scan);
-    repartitioned it is exactly one file per touched bucket."""
-    if "band_buckets" in m:
-        bb = m["band_buckets"]
-        return (
-            b_new.withColumn("band_bucket", _band_bucket_expr(bb)).repartition(
-                bb, "band_bucket"
-            ),
-            "band_bucket",
-        )
-    return b_new, None
-
-
-def _shingles_delta(
-    sh_new: DataFrame, m: dict, id_col: str
-) -> tuple[DataFrame, str | None]:
-    """Shingle-table twin of _bands_delta."""
-    if "shingle_buckets" in m:
-        sb = m["shingle_buckets"]
-        return (
-            sh_new.withColumn(
-                "shingle_bucket", _shingle_bucket_expr(sb, id_col)
-            ).repartition(sb, "shingle_bucket"),
-            "shingle_bucket",
-        )
-    return sh_new, None
 
 
 def add(spark: SparkSession, index_dir: str, new_batch: DataFrame,
@@ -544,32 +396,20 @@ def add(spark: SparkSession, index_dir: str, new_batch: DataFrame,
     exactly the rows to add (the streaming SMT passes its batch frames
     filtered to the survivors) — without it the batch was shingled a
     third time per micro-batch; the caller owns the cache lifetime."""
-    with _writer_lock(index_dir):
-        m = _read_manifest(index_dir)
-        num_hashes, bands, n = _check_params(m, None, None, None)
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
+    with STORE.writing(index_dir) as m:
+        own = None
         if precomputed is not None:
             sh_new, b_new = precomputed
-            own = None
         else:
-            sh_new = shingle_arrays(new_batch, text_col, id_col, n).persist(
+            sh_new = own = shingle_arrays(new_batch, text_col, id_col, m["n"]).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
             b_new = _banded(
-                _signatures_from_arrays(sh_new, num_hashes, id_col), bands, id_col
+                _signatures_from_arrays(sh_new, m["num_hashes"], id_col), m["bands"], id_col
             )
-            own = sh_new
-        sd, spart = _shingles_delta(sh_new, m, id_col)
-        bd, bpart = _bands_delta(b_new, m)
-        # staging writes overlap (independent tables, guide §2.6); the
-        # commit renames keep the crash order: the membership table
-        # (shingles) LAST, so "present" implies "fully appended" (see
-        # the module docstring)
-        stage_pair_then_move(
-            spark, index_dir, m["version"],
-            (bd, "bands", bpart), (sd, "shingles", spart),
-        )
+        STORE.append(spark, index_dir, m, {"shingles": sh_new, "bands": b_new})
         if own is not None:
             own.unpersist()
 
@@ -581,7 +421,7 @@ class _TextDedup(StreamingDedup):
     band_hash), pairs verify by exact Jaccard."""
 
     cols = ("id_new", "id_corpus", "jaccard")
-    read_manifest = staticmethod(_read_manifest)
+    store = STORE
 
     def keyed(self, b):
         b.th = self.threshold if self.threshold is not None else b.m["threshold"]
@@ -595,12 +435,6 @@ class _TextDedup(StreamingDedup):
         b.sh = hold(shingle_arrays(b.keyed, self.text_field, i, m["n"]))
         sig = _signatures_from_arrays(b.sh, m["num_hashes"], i)
         b.bands = hold(_banded(sig, m["bands"], i))
-
-    def membership(self, b):
-        return membership_probe(
-            b.spark, self.index_dir, b.ids, b.m["version"], "shingles",
-            b.m.get("shingle_buckets"), "shingle_bucket", self.id_field,
-        )
 
     def self_pairs(self, b):
         cands = band_self_pairs(b.bands, self.id_field, "band_hash")
@@ -642,23 +476,13 @@ def streaming_dedup_transform(
     return _TextDedup(**locals())
 
 
-# streaming transforms auto-fold their per-micro-batch report dirs
-# once this many accumulate — without it a long-lived pipeline grows
-# one small parquet dir per batch forever (r7 judge directive #3a)
-# generation directories this index keeps under retention (the GC
-# sweep below walks exactly these; pq_index passes its own set)
-_LSH_TABLES = ("shingles", "bands", "tombstones")
-
-
 def drop_generations(index_dir: str, keep: int = 1) -> dict:
     """Explicit generation GC (the retention policy compact applies
     automatically, runnable on demand — e.g. keep=0 right after an
     erasure-driven compact to make the erased docs' bytes leave disk
     without waiting for the next compact cycle). Returns
     {"oldest_retained", "n_generation_dirs_dropped"}."""
-    with _writer_lock(index_dir):
-        m = _read_manifest(index_dir)
-        return _gc_locked(index_dir, m, keep, _LSH_TABLES)
+    return STORE.drop_generations(index_dir, keep)
 
 
 def delete(spark: SparkSession, index_dir: str, ids) -> int:
@@ -668,116 +492,28 @@ def delete(spark: SparkSession, index_dir: str, ids) -> int:
     one-column DataFrame or a plain list of id values. Returns the
     number of ids tombstoned (after de-dup against the existing log).
     """
-    return delete_ids(spark, index_dir, ids, _read_manifest)
+    return STORE.delete(spark, index_dir, ids)
 
 
-# test seam (tests/test_lsh_index.py): runs inside compact right after
-# its tombstone snapshot, standing in for a concurrent writer that
-# bypassed the lock — the only way to exercise carry-forward, which is
-# unreachable under the lock by design
-_POST_SNAPSHOT_HOOK = None
-
-
-def compact(
-    spark: SparkSession,
-    index_dir: str,
-    n_buckets: int = 8,
-    keep_generations: int = 1,
-) -> dict:
+def compact(spark: SparkSession, index_dir: str, keep_generations: int = 1) -> dict:
     """Rewrite the current generation (base + append deltas, minus
-    tombstoned docs) as generation v+1: one row per doc in
-    `shingles`, distinct rows in `bands` clustered (repartitioned) by
-    band_hash so a batch join scans only matching clusters, and the
-    tombstone log reduced to exactly the entries compact did NOT
-    apply. Each table is written to a uuid staging dir and renamed
-    into v{N+1} before the manifest commits atomically; stale
-    unreferenced v{N+1} dirs from an interrupted prior compact are
-    removed on entry. Returns {"version", "n_docs", "n_band_rows",
-    "n_tombstones_dropped", "n_files_before/after",
-    "oldest_retained"}.
+    tombstoned docs) as generation v+1 (IndexStore.rewrite): one row
+    per doc in `shingles`, distinct rows in `bands` clustered by
+    band_hash within each bucket so a batch join scans few row groups,
+    and the tombstone log reduced to exactly the entries compact did
+    NOT apply (late entries carry forward). Returns {"version",
+    "n_docs", "n_band_rows", "n_tombstones_dropped",
+    "n_files_before/after", "oldest_retained"}.
 
     Retention (r8 judge directive #1): generations older than
     ``version - keep_generations`` are deleted after the manifest
-    commit (_gc_locked), so storage is bounded at keep+1 index copies
-    instead of growing one per compact forever. keep_generations=1
-    (default) keeps the previous generation readable for readers that
-    pinned it before this compact; an applied tombstone's rows are
-    then physically gone from disk after the NEXT compact (or
-    immediately with keep_generations=0 / a drop_generations(keep=0)
-    call — the full-GDPR path the erasure queries exercise).
-
-    Tombstone handling (r6 ADVICE): the applied tombstone set is the
-    part-file SNAPSHOT taken here, and the v+1 log carries forward any
-    entries that land after it instead of being cleared wholesale.
-    Under the writer lock no late entry can appear, so this is defense
-    in depth for the GDPR path — if the lock is ever bypassed (manual
-    removal of a stale lock racing a live writer), a late delete()
-    survives into v+1 suppressed-but-uncompacted rather than being
-    silently discarded."""
-    with _writer_lock(index_dir):
-        idx_sh, idx_bands, m = _tables(spark, index_dir)
-        v = m["version"]
-        id_col = m.get("id_col", "doc_id")
-        tomb, snap_files, tomb_dir = snapshot_tombstones(spark, index_dir, v)
-        n_tomb = tomb.count()
-        if _POST_SNAPSHOT_HOOK is not None:  # test seam: simulate a
-            _POST_SNAPSHOT_HOOK()  # writer that bypassed the lock
-
-        def _n_files(table: str, version: int) -> int:
-            return len(ifs.parquet_files(_table_path(index_dir, table, version)))
-
-        files_before = _n_files("shingles", v) + _n_files("bands", v)
-        tomb_gated = _maybe_broadcast_tombstones(
-            tomb.withColumnRenamed(tomb.columns[0], id_col), tomb_dir
-        )
-        sb = m.get("shingle_buckets", DEFAULT_SHINGLE_BUCKETS)
-        sh_c = idx_sh.dropDuplicates([idx_sh.columns[0]]).join(
-            tomb_gated, id_col, "left_anti"
-        )
-        if "shingle_bucket" not in sh_c.columns:  # pre-r8 flat index
-            sh_c = sh_c.withColumn(
-                "shingle_bucket", _shingle_bucket_expr(sb, id_col)
-            )
-        sh_c = _spread_for_write(sh_c, sb, "shingle_bucket", id_col)
-        _commit_generation_table(
-            sh_c, index_dir, "shingles", v + 1, partition_by="shingle_bucket"
-        )
-        # restore (or, for a pre-r8 flat index, INTRODUCE — compact
-        # rewrites the whole table anyway) the pruned hive layout:
-        # bucket dirs, clustered by band_hash inside each so a probe
-        # scans few row groups
-        bb = m.get("band_buckets", DEFAULT_BAND_BUCKETS)
-        bands_c = idx_bands.distinct().join(tomb_gated, id_col, "left_anti")
-        if "band_bucket" not in bands_c.columns:
-            bands_c = bands_c.withColumn("band_bucket", _band_bucket_expr(bb))
-        bands_c = _spread_for_write(
-            bands_c, bb, "band_bucket", id_col
-        ).sortWithinPartitions("band_hash")
-        _commit_generation_table(
-            bands_c, index_dir, "bands", v + 1, partition_by="band_bucket"
-        )
-        # applied tombstones drop from the v+1 tables; the erased rows'
-        # BYTES leave disk when retention GC below deletes the old
-        # generations that still carry them (immediately at
-        # keep_generations=0; after the next compact at the default
-        # keep=1). Any entry written AFTER the snapshot carries
-        # forward into the v+1 log.
-        late = late_tombstones(spark, tomb_dir, snap_files, tomb)
-        _commit_generation_table(late, index_dir, "tombstones", v + 1)
-        m2 = dict(m)
-        m2["version"] = v + 1
-        # a legacy index is partitioned from here on
-        m2["band_buckets"] = bb
-        m2["shingle_buckets"] = sb
-        _write_manifest(index_dir, m2)
-        gc = _gc_locked(index_dir, m2, keep_generations, _LSH_TABLES)
-        new_sh, new_bands, _ = _tables(spark, index_dir)
-        return {
-            "version": v + 1,
-            "n_docs": new_sh.count(),
-            "n_band_rows": new_bands.count(),
-            "n_tombstones_dropped": n_tomb,
-            "n_files_before": files_before,
-            "n_files_after": _n_files("shingles", v + 1) + _n_files("bands", v + 1),
-            "oldest_retained": gc["oldest_retained"],
-        }
+    commit, so storage is bounded at keep+1 index copies.
+    keep_generations=1 (default) keeps the previous generation
+    readable for readers that pinned it before this compact; an
+    applied tombstone's rows are then physically gone from disk after
+    the NEXT compact (or immediately with keep_generations=0 / a
+    drop_generations(keep=0) call — the full-GDPR path the erasure
+    queries exercise)."""
+    out = STORE.rewrite(spark, index_dir, keep_generations)
+    sh, bands, _ = _tables(spark, index_dir)
+    return {"version": out.pop("version"), "n_docs": sh.count(), "n_band_rows": bands.count(), **out}

@@ -328,3 +328,49 @@ def test_malformed_batch_hashes_keep_the_cluster_plan(spark, tmp_path):
     got = {(r.id_new, r.id_corpus, r.hamming) for r in res.collect()}
     release_cached(res)
     assert got == {(10, 1, 0)}
+
+
+def test_compact_carries_forward_late_tombstones(spark, tmp_path):
+    """A tombstone written after compact's snapshot (lock bypassed —
+    simulated via the post-snapshot test seam the shared rewrite runs)
+    survives into the v+1 log instead of being cleared wholesale: the
+    erasure stays suppressed, as in the lsh and pq indexes."""
+    import shutil as _sh
+
+    d = str(tmp_path / "ham")
+    hamming_index.build(_hashes(spark, CORPUS), d, bits=64, bands=8,
+                        max_hamming=4)
+    hamming_index.delete(spark, d, [3])  # applied by the compact below
+    v = hamming_index._read_manifest(d)["version"]
+    tomb_dir = hamming_index._table_path(d, "tombstones", v)
+
+    def late_delete():
+        # a late delete() lands after compact's snapshot: write a
+        # tombstone part file for doc 4 directly (the real delete()
+        # would block on the lock)
+        late = spark.createDataFrame([(4,)], "doc_id long")
+        tmp = os.path.join(d, "__late")
+        late.coalesce(1).write.mode("overwrite").parquet(tmp)
+        for f in os.listdir(tmp):
+            if f.endswith(".parquet"):
+                _sh.move(os.path.join(tmp, f), os.path.join(tomb_dir, "late-" + f))
+        _sh.rmtree(tmp)
+
+    try:
+        hamming_index._POST_SNAPSHOT_HOOK = late_delete
+        res = hamming_index.compact(spark, d)
+    finally:
+        hamming_index._POST_SNAPSHOT_HOOK = None
+    assert res["n_tombstones_dropped"] == 1  # doc 3 (the snapshot)
+    assert hamming_index._read_manifest(d)["version"] == v + 1
+    # doc 3 physically gone, doc 4's late tombstone carried forward
+    stored = spark.read.parquet(hamming_index._table_path(d, "hashes", v + 1))
+    ids = {r.doc_id for r in stored.select("doc_id").collect()}
+    assert 3 not in ids and 4 in ids  # 4 compacts later, suppressed now
+    tomb = spark.read.parquet(hamming_index._table_path(d, "tombstones", v + 1))
+    assert {r.doc_id for r in tomb.collect()} == {4}
+    # and the suppression is live: batch 12 (hamming 1 from 4) matches nothing
+    res = hamming_index.match(spark, d, _hashes(spark, BATCH))
+    got = {(r.id_new, r.id_corpus) for r in res.collect()}
+    release_cached(res)
+    assert got == {(10, 1)}
