@@ -7,18 +7,24 @@ consume, global BACKWARD compatibility with per-subject override
 (:533-537), and the Confluent wire format on every message: 1 magic
 byte 0x00 + 4-byte big-endian schema id + Avro binary body.
 
-This container ships no spark-avro jar, so the Avro *body* codec is a
-pure-Python implementation of the Avro binary spec subset Connect
-emits (null/boolean/int/long/float/double/string/bytes/record +
-nullable unions + logical timestamp-millis/date/decimal). On a real
-cluster the body encode/decode swaps to ``from_avro``/``to_avro``
-(org.apache.spark:spark-avro) with identical framing — the framing
-and registry logic here is the part Spark doesn't provide.
+This container ships no spark-avro jar, so the Avro *body* codec is
+in-repo: one columnar codec over Arrow arrays, written with numpy, for
+the Avro binary spec subset Connect emits (null/boolean/int/long/
+float/double/string/bytes/array/record + nullable unions + logical
+timestamp-millis/date/decimal). ``encode_column``/``decode_column``
+turn a whole struct column into framed wire bytes and back; the
+one-record entry points (``encode_message``, ``decode_message``,
+``_encode_record``, ``_decode_record``) are one-row calls into the
+same two functions. On a real cluster the body encode/decode swaps to
+``from_avro``/``to_avro`` (org.apache.spark:spark-avro) with identical
+framing — the framing and registry logic here is the part Spark
+doesn't provide.
 
-Spark integration is Arrow-batched pandas UDFs (the serde crosses to
-Python once per batch, not per row); the registry client is
-driver-side only (schema resolved once per pipeline start — SURVEY
-§1.3), executors get the schema by closure.
+Spark integration is two ``arrow_udf``s around those functions (the
+serde crosses to Python once per Arrow batch, and no value becomes a
+Python object); the registry client is driver-side only (schema
+resolved once per pipeline start — SURVEY §1.3), executors get the
+schema by closure.
 """
 
 from __future__ import annotations
@@ -27,9 +33,10 @@ import io
 import json
 import struct
 from pathlib import Path
-from typing import Any, Union
+from typing import Any
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import types as T
 
 MAGIC_BYTE = b"\x00"
@@ -131,177 +138,449 @@ def spark_schema_for(avro: dict) -> T.StructType:
 
 
 # ---------------------------------------------------------------------------
-# Avro binary codec (spec subset)
+# Avro binary codec (spec subset), one column at a time
 # ---------------------------------------------------------------------------
+#
+# Encode: each Avro node turns a column into pieces — a flat uint8
+# payload plus its byte length per row — and one _interleave lays the
+# pieces out row by row behind the 5-byte frame. Decode walks the same
+# layout with a read position per row (_Reader).
 
-def _zigzag_encode(n: int) -> bytes:
-    z = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+_PRIMITIVE = {
+    "boolean": pa.bool_(),
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "float": pa.float32(),
+    "double": pa.float64(),
+    "string": pa.string(),
+    "bytes": pa.binary(),
+}
 
-
-def _zigzag_decode(buf: io.BytesIO) -> int:
-    shift = 0
-    acc = 0
-    while True:
-        b = buf.read(1)[0]
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
+# the instants and days Spark can hold: 0001-01-01 .. 9999-12-31
+_TS_MS = (-62_135_596_800_000, 253_402_300_799_999)
+_DAYS = (-719_162, 2_932_896)
+_INT = (-(2**31), 2**31 - 1)
 
 
-def _encode_value(t: Any, v: Any, out: io.BytesIO) -> None:
-    if isinstance(t, list):  # union — Connect emits [null, T]
-        # pandas null spellings (NaN/NaT) count as Avro null
-        if v is None or (
-            not isinstance(v, (list, tuple, dict, bytes, bytearray)) and pd.isna(v)
-        ):
-            out.write(_zigzag_encode(t.index("null")))
-            return
-        branch = next(i for i, b in enumerate(t) if b != "null")
-        out.write(_zigzag_encode(branch))
-        _encode_value(t[branch], v, out)
-        return
+def _branches(t: list) -> tuple[int, int, Any]:
+    """(null branch, value branch, value type) of a ``[null, T]`` union."""
+    value = next(i for i, b in enumerate(t) if b != "null")
+    return t.index("null"), value, t[value]
+
+
+def _kind(t: Any) -> str:
+    """A non-union node's logical type, else its Avro type name."""
     if isinstance(t, dict):
-        lt = t.get("logicalType")
-        if lt == "timestamp-millis":
-            import datetime
-
-            if isinstance(v, datetime.datetime):
-                # naive datetimes are session-UTC instants (session tz
-                # pinned in session.py) — don't let .timestamp() apply
-                # the host's local zone.
-                # integer math end-to-end: total_seconds()/timestamp()
-                # return doubles, which round the millisecond once the
-                # epoch exceeds ~2^43 ms (post-2248... but the µs term
-                # already wobbles by 2038)
-                if v.tzinfo is None:
-                    d = v - datetime.datetime(1970, 1, 1)
-                else:
-                    d = v - datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
-                ms = (d.days * 86_400 + d.seconds) * 1000 + d.microseconds // 1000
-            else:
-                ms = int(v)
-            out.write(_zigzag_encode(ms))
-            return
-        if lt == "date":
-            import datetime
-
-            days = (v - datetime.date(1970, 1, 1)).days if hasattr(v, "year") else int(v)
-            out.write(_zigzag_encode(days))
-            return
-        if lt == "decimal":
-            from decimal import Decimal
-
-            unscaled = int(Decimal(v).scaleb(t["scale"]).to_integral_value())
-            blen = max(1, (unscaled.bit_length() + 8) // 8)
-            body = unscaled.to_bytes(blen, "big", signed=True)
-            out.write(_zigzag_encode(len(body)))
-            out.write(body)
-            return
-        if t.get("type") == "record":
-            _encode_record(t, v, out)
-            return
-        if t.get("type") == "array":
-            if v:
-                out.write(_zigzag_encode(len(v)))
-                for item in v:
-                    _encode_value(t["items"], item, out)
-            out.write(_zigzag_encode(0))
-            return
-        t = t["type"]
-    if t == "null":
-        return
-    if t == "boolean":
-        out.write(b"\x01" if v else b"\x00")
-    elif t in ("int", "long"):
-        out.write(_zigzag_encode(int(v)))
-    elif t == "float":
-        out.write(struct.pack("<f", float(v)))
-    elif t == "double":
-        out.write(struct.pack("<d", float(v)))
-    elif t == "string":
-        b = str(v).encode("utf-8")
-        out.write(_zigzag_encode(len(b)))
-        out.write(b)
-    elif t == "bytes":
-        out.write(_zigzag_encode(len(v)))
-        out.write(bytes(v))
-    else:
-        raise TypeError(f"cannot encode Avro type {t!r}")
+        return t.get("logicalType") or _kind(t["type"])
+    return t
 
 
-def _encode_record(schema: dict, record: dict, out: io.BytesIO) -> None:
-    for f in schema["fields"]:
-        _encode_value(f["type"], None if record is None else record.get(f["name"]), out)
-
-
-def _decode_value(t: Any, buf: io.BytesIO) -> Any:
+def _arrow_type(t: Any) -> pa.DataType:
+    """The Arrow type the codec reads and writes for Avro type ``t``."""
     if isinstance(t, list):
-        branch = _zigzag_decode(buf)
-        return _decode_value(t[branch], buf)
-    if isinstance(t, dict):
-        lt = t.get("logicalType")
-        if lt == "timestamp-millis":
-            import datetime
-
-            ms = _zigzag_decode(buf)
-            # timedelta keeps ms exact; utcfromtimestamp(ms/1000.0)
-            # would round through double
-            return datetime.datetime(1970, 1, 1) + datetime.timedelta(milliseconds=ms)
-        if lt == "date":
-            import datetime
-
-            return datetime.date(1970, 1, 1) + datetime.timedelta(days=_zigzag_decode(buf))
-        if lt == "decimal":
-            from decimal import Decimal
-
-            n = _zigzag_decode(buf)
-            unscaled = int.from_bytes(buf.read(n), "big", signed=True)
-            return Decimal(unscaled).scaleb(-t["scale"])
-        if t.get("type") == "record":
-            return _decode_record(t, buf)
-        if t.get("type") == "array":
-            out = []
-            while True:
-                n = _zigzag_decode(buf)
-                if n == 0:
-                    break
-                if n < 0:  # block with byte size prefix
-                    _zigzag_decode(buf)
-                    n = -n
-                for _ in range(n):
-                    out.append(_decode_value(t["items"], buf))
-            return out
-        t = t["type"]
-    if t == "null":
-        return None
-    if t == "boolean":
-        return buf.read(1) == b"\x01"
-    if t in ("int", "long"):
-        return _zigzag_decode(buf)
-    if t == "float":
-        return struct.unpack("<f", buf.read(4))[0]
-    if t == "double":
-        return struct.unpack("<d", buf.read(8))[0]
-    if t == "string":
-        return buf.read(_zigzag_decode(buf)).decode("utf-8")
-    if t == "bytes":
-        return buf.read(_zigzag_decode(buf))
-    raise TypeError(f"cannot decode Avro type {t!r}")
+        return _arrow_type(_branches(t)[2])
+    kind = _kind(t)
+    if kind == "timestamp-millis":
+        return pa.timestamp("us")
+    if kind == "date":
+        return pa.date32()
+    if kind == "decimal":
+        return pa.decimal128(t["precision"], t["scale"])
+    if kind == "record":
+        # non-union fields are non-nullable, as spark_schema_for maps them
+        return pa.struct(
+            [
+                pa.field(f["name"], _arrow_type(f["type"]), isinstance(f["type"], list))
+                for f in t["fields"]
+            ]
+        )
+    if kind == "array":
+        return pa.list_(_arrow_type(t["items"]))
+    if kind not in _PRIMITIVE:
+        raise TypeError(f"no codec for Avro type {t!r}")
+    return _PRIMITIVE[kind]
 
 
-def _decode_record(schema: dict, buf: io.BytesIO) -> dict:
-    return {f["name"]: _decode_value(f["type"], buf) for f in schema["fields"]}
+# -- encode -----------------------------------------------------------------
+
+_Piece = tuple[np.ndarray, np.ndarray]  # flat uint8 payload, its bytes per row
+
+
+def _scatter(mask: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Per-row lengths: ``lens`` on the rows where ``mask`` holds, else 0."""
+    out = np.zeros(len(mask), np.int64)
+    out[mask] = lens
+    return out
+
+
+def _fixed(v: np.ndarray) -> _Piece:
+    """Little-endian fixed-width values (booleans as one byte)."""
+    v = np.ascontiguousarray(v, v.dtype.newbyteorder("<"))
+    return v.view(np.uint8), np.full(len(v), v.dtype.itemsize, np.int64)
+
+
+def _varints(v: np.ndarray) -> _Piece:
+    """Zigzag varints of int64 ``v``: 7 bits a byte, low groups first."""
+    v = v.astype(np.int64, copy=False)
+    z = (v.view(np.uint64) << np.uint64(1)) ^ (v >> 63).view(np.uint64)
+    lens = np.ones(len(z), np.int64)
+    rest = z >> np.uint64(7)
+    while rest.any():
+        lens += rest != 0
+        rest >>= np.uint64(7)
+    width = int(lens.max(initial=1))
+    groups = np.empty((len(z), width), np.uint8)
+    for k in range(width):
+        low = (z >> np.uint64(7 * k)) & np.uint64(0x7F)
+        groups[:, k] = low.astype(np.uint8) | np.where(lens > k + 1, 0x80, 0).astype(np.uint8)
+    return groups[np.arange(width) < lens[:, None]], lens
+
+
+def _blob(arr: pa.Array) -> list[_Piece]:
+    """Length-prefixed string/bytes values, straight from the Arrow
+    offsets and data buffers."""
+    _, offs_buf, data_buf = arr.buffers()
+    offs = np.frombuffer(offs_buf, np.int32, len(arr) + 1, 4 * arr.offset).astype(np.int64)
+    lens = np.diff(offs)
+    data = np.frombuffer(data_buf, np.uint8) if data_buf else np.empty(0, np.uint8)
+    return [_varints(lens), (data[offs[0] : offs[-1]], lens)]
+
+
+def _decimal(arr: pa.Array) -> list[_Piece]:
+    """Length-prefixed big-endian two's complement of each unscaled
+    value, ``bit_length(|v|) // 8 + 1`` bytes long (Python's
+    ``int.to_bytes`` at ``(bit_length + 8) // 8``)."""
+    le = np.frombuffer(arr.buffers()[1], np.uint8, 16 * len(arr), 16 * arr.offset)
+    le = le.reshape(-1, 16)
+    lanes = le.view("<u8")
+    lo, hi = lanes[:, 0], lanes[:, 1]
+    neg = hi >> np.uint64(63) == 1
+    # |v| as two 64-bit lanes: negate the negative rows, carrying into hi
+    mag_lo = np.where(neg, ~lo + np.uint64(1), lo)
+    mag_hi = np.where(neg, ~hi + (mag_lo == 0), hi)
+    mag = np.stack([mag_lo, mag_hi], axis=1).astype("<u8").view(np.uint8)
+    top = 15 - np.argmax(mag[:, ::-1] != 0, axis=1)  # highest non-zero byte
+    size = np.where(mag.any(axis=1), top + 1 + (mag[np.arange(len(le)), top] >= 0x80), 1)
+    body = le[:, ::-1][np.arange(16) >= 16 - size[:, None]]
+    return [_varints(size), (body, size)]
+
+
+def _array(items: Any, arr: pa.Array) -> list[_Piece]:
+    """Each array as one block: its item count (when non-zero), the
+    items, then a 0 count."""
+    offs = arr.offsets.to_numpy().astype(np.int64)
+    offs -= offs[0]
+    counts = np.diff(offs)
+    data, item_lens = _interleave(_encode(items, arr.flatten()))
+    ends = np.concatenate([[0], np.cumsum(item_lens)])
+    some = counts > 0
+    head, head_lens = _varints(counts[some])
+    return [
+        (head, _scatter(some, head_lens)),
+        (data, ends[offs[1:]] - ends[offs[:-1]]),
+        _fixed(np.zeros(len(arr), np.uint8)),
+    ]
+
+
+def _encode(t: Any, arr: pa.Array) -> list[_Piece]:
+    """The pieces of the Avro encoding of each value of ``arr``."""
+    if isinstance(t, list):
+        null_b, value_b, t = _branches(t)
+        if arr.null_count:
+            present = arr.is_valid()
+            valid = present.to_numpy(zero_copy_only=False)
+            tag = np.where(valid, 2 * value_b, 2 * null_b).astype(np.uint8)
+            inner = [(d, _scatter(valid, n)) for d, n in _encode(t, arr.filter(present))]
+        else:
+            tag = np.full(len(arr), 2 * value_b, np.uint8)
+            inner = _encode(t, arr)
+        return [_fixed(tag)] + inner  # a branch index < 64 is one zigzag byte
+    if arr.null_count:
+        raise ValueError(f"null value for non-nullable Avro type {t!r}")
+    kind = _kind(t)
+    if kind not in ("record", "array") and arr.type != _arrow_type(t):
+        arr = arr.cast(_arrow_type(t))  # e.g. Spark's UTC-zoned timestamps, short ints
+    if kind == "timestamp-millis":
+        return [_varints(arr.view(pa.int64()).to_numpy() // 1000)]
+    if kind == "date":
+        return [_varints(arr.view(pa.int32()).to_numpy())]
+    if kind == "decimal":
+        return _decimal(arr)
+    if kind == "record":
+        return [p for f, col in zip(t["fields"], arr.flatten()) for p in _encode(f["type"], col)]
+    if kind == "array":
+        return _array(t["items"], arr)
+    if kind in ("int", "long"):
+        return [_varints(arr.to_numpy())]
+    if kind in ("float", "double"):
+        return [_fixed(arr.to_numpy())]
+    if kind == "boolean":
+        return [_fixed(arr.to_numpy(zero_copy_only=False).astype(np.uint8))]
+    return _blob(arr)
+
+
+def _interleave(pieces: list[_Piece]) -> _Piece:
+    """Row-wise concatenation: row r is piece 0's row r, then piece 1's
+    row r, and so on."""
+    lens = np.sum([n for _, n in pieces], axis=0)
+    at = np.cumsum(lens) - lens
+    out = np.empty(int(lens.sum()), np.uint8)
+    for data, n in pieces:
+        out[np.repeat(at - (np.cumsum(n) - n), n) + np.arange(len(data))] = data
+        at += n
+    return out, lens
+
+
+def encode_column(schema: dict, records: pa.Array, schema_id: int) -> pa.Array:
+    """Framed wire bytes of each record of a struct column; a null
+    record stays null."""
+    n = len(records)
+    present = records.is_valid()
+    valid = present.to_numpy(zero_copy_only=False)
+    rows = records.filter(present) if records.null_count else records
+    header = np.frombuffer(frame(schema_id, b""), np.uint8)
+    data, lens = _interleave(
+        [(np.tile(header, len(rows)), np.full(len(rows), len(header), np.int64))]
+        + _encode(schema, rows)
+    )
+    offsets = np.concatenate([[0], np.cumsum(_scatter(valid, lens))])
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise OverflowError("an Arrow batch of wire bytes is limited to 2 GiB")
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) if records.null_count else None
+    return pa.Array.from_buffers(
+        pa.binary(), n, [bitmap, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)]
+    )
+
+
+# -- decode -----------------------------------------------------------------
+
+_PAD = 16  # zero bytes past the column: a short read lands there, in bounds
+
+
+class _Reader:
+    """Read cursors over a column of wire bytes, one per row: ``pos`` and
+    ``end`` index ``buf``, ``err`` holds each row's first failure. Every
+    read is checked against its row's ``end``, so a corrupt row may read
+    garbage (its record is dropped) but never another row's bytes, and
+    no length or count it reads can exceed the bytes it has left."""
+
+    def __init__(self, buf: np.ndarray, pos: np.ndarray, end: np.ndarray):
+        self.buf, self.pos, self.end = buf, pos, end
+        self.err = np.full(len(pos), None, object)
+
+    def fail(self, rows: np.ndarray, bad: np.ndarray, msg: str) -> None:
+        hit = rows[bad]
+        hit = hit[self.err[hit] == None]  # noqa: E711 — elementwise
+        self.err[hit] = msg
+
+    def check(self, rows: np.ndarray, v: np.ndarray, lo: int, hi: int, what: str) -> np.ndarray:
+        """``v`` with the values outside [lo, hi] failed and zeroed."""
+        bad = (v < lo) | (v > hi)
+        if bad.any():
+            self.fail(rows, bad, f"{what} out of range")
+            v = np.where(bad, 0, v)
+        return v
+
+    def fixed(self, rows: np.ndarray, width: int) -> np.ndarray:
+        """The next ``width`` bytes of each row, as a (rows, width) array."""
+        p, end = self.pos[rows], self.end[rows]
+        short = p + width > end
+        if short.any():
+            self.fail(rows, short, "truncated Avro body")
+        self.pos[rows] = np.where(short, end, p + width)
+        p = np.where(short, len(self.buf) - _PAD, p)
+        return self.buf[p[:, None] + np.arange(width)]
+
+    def varint(self, rows: np.ndarray) -> np.ndarray:
+        """The next zigzag varint of each row (at most 64 bits)."""
+        p, end = self.pos[rows], self.end[rows]
+        z = np.zeros(len(rows), np.uint64)
+        live = np.arange(len(rows))
+        for k in range(10):
+            short = p[live] >= end[live]
+            if short.any():
+                self.fail(rows, live[short], "truncated Avro body")
+                live = live[~short]
+            b = self.buf[p[live]].astype(np.uint64)
+            z[live] |= (b & np.uint64(0x7F)) << np.uint64(7 * k)
+            p[live] += 1
+            if k == 9:  # the 10th byte holds bit 63 alone
+                self.fail(rows, live[b > 1], "Avro varint wider than 64 bits")
+            live = live[(b & np.uint64(0x80)) != 0]
+            if not len(live):
+                break
+        self.pos[rows] = p
+        return (z >> np.uint64(1)).view(np.int64) ^ -(z & np.uint64(1)).view(np.int64)
+
+    def blob(self, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """The next length-prefixed bytes of each row: (flat bytes, lengths)."""
+        lens = self.varint(rows)
+        p = self.pos[rows]
+        lens = self.check(rows, lens, 0, self.end[rows] - p, "Avro length")
+        self.pos[rows] = p + lens
+        return self.buf[np.repeat(p - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())], lens
+
+
+def _offsets(lens: np.ndarray) -> np.ndarray:
+    return np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+
+
+def _decode_blob(kind: str, rd: _Reader, rows: np.ndarray) -> pa.Array:
+    data, lens = rd.blob(rows)
+    arr = pa.Array.from_buffers(
+        _PRIMITIVE[kind], len(rows), [None, pa.py_buffer(_offsets(lens)), pa.py_buffer(data)]
+    )
+    if kind == "string":
+        try:
+            arr.validate(full=True)
+        except pa.ArrowInvalid:
+            bad = np.array([not _is_utf8(b) for b in arr.view(pa.binary()).to_pylist()])
+            rd.fail(rows, bad, "invalid UTF-8 in Avro string")
+    return arr
+
+
+def _is_utf8(b: bytes) -> bool:
+    try:
+        b.decode("utf-8")
+    except UnicodeDecodeError:
+        return False
+    return True
+
+
+def _decode_decimal(t: dict, rd: _Reader, rows: np.ndarray) -> pa.Array:
+    """Length-prefixed big-endian two's complement → 16-byte little-endian
+    decimal128 values, sign-extended."""
+    data, lens = rd.blob(rows)
+    wide = lens > 16
+    rd.fail(rows, wide, "Avro decimal wider than 16 bytes")
+    start = np.cumsum(lens) - lens
+    le = np.zeros((len(rows), 16), np.uint8)
+    le[(lens > 0) & (np.append(data, 0)[start] >= 0x80)] = 0xFF
+    row = np.repeat(np.arange(len(rows)), lens)
+    col = np.repeat(start + lens - 1, lens) - np.arange(len(data))
+    fits = ~wide[row]
+    le[row[fits], col[fits]] = data[fits]
+    return pa.Array.from_buffers(_arrow_type(t), len(rows), [None, pa.py_buffer(le)])
+
+
+def _decode_array(items: Any, rd: _Reader, rows: np.ndarray) -> pa.Array:
+    """Arrays in blocks (count, [byte size,] items) up to a 0 count; the
+    j-th items of all rows decode together, then regroup by row."""
+    owner, parts = [], []
+    live = np.arange(len(rows))
+    while len(live):
+        counts = rd.varint(rows[live])
+        sized = counts < 0
+        if sized.any():
+            rd.varint(rows[live[sized]])  # a block's byte size: not needed
+            counts = np.abs(counts)
+        # every item takes at least one byte
+        room = rd.end[rows[live]] - rd.pos[rows[live]]
+        counts = rd.check(rows[live], counts, 0, room, "Avro array count")
+        live, counts = live[counts > 0], counts[counts > 0]
+        for j in range(int(counts.max(initial=0))):
+            owner.append(live[counts > j])
+            parts.append(_decode(items, rd, rows[owner[-1]]))
+    owner = np.concatenate(owner) if owner else np.empty(0, np.int64)
+    values = (
+        pa.concat_arrays(parts).take(np.argsort(owner, kind="stable"))
+        if parts
+        else pa.array([], _arrow_type(items))
+    )
+    offsets = _offsets(np.bincount(owner, minlength=len(rows)))
+    return pa.ListArray.from_arrays(pa.array(offsets), values)
+
+
+def _decode(t: Any, rd: _Reader, rows: np.ndarray) -> pa.Array:
+    """The next value of type ``t`` of each of ``rows``."""
+    if isinstance(t, list):
+        null_b, value_b, t = _branches(t)
+        branch = rd.varint(rows)
+        has = branch == value_b
+        rd.fail(rows, ~has & (branch != null_b), "Avro union branch out of range")
+        inner = _decode(t, rd, rows[has])
+        if has.all():
+            return inner
+        return inner.take(pa.array(np.cumsum(has) - 1, mask=~has))
+    kind = _kind(t)
+    if kind == "timestamp-millis":
+        ms = rd.check(rows, rd.varint(rows), *_TS_MS, "Avro timestamp-millis")
+        return pa.array(ms * 1000, pa.timestamp("us"))
+    if kind == "date":
+        days = rd.check(rows, rd.varint(rows), *_DAYS, "Avro date")
+        return pa.array(days.astype(np.int32), pa.date32())
+    if kind == "decimal":
+        return _decode_decimal(t, rd, rows)
+    if kind == "record":
+        return pa.StructArray.from_arrays(
+            [_decode(f["type"], rd, rows) for f in t["fields"]], fields=list(_arrow_type(t))
+        )
+    if kind == "array":
+        return _decode_array(t["items"], rd, rows)
+    if kind == "int":
+        return pa.array(rd.check(rows, rd.varint(rows), *_INT, "Avro int"), pa.int32())
+    if kind == "long":
+        return pa.array(rd.varint(rows), pa.int64())
+    if kind == "float":
+        return pa.array(rd.fixed(rows, 4).view("<f4")[:, 0], pa.float32())
+    if kind == "double":
+        return pa.array(rd.fixed(rows, 8).view("<f8")[:, 0], pa.float64())
+    if kind == "boolean":
+        return pa.array(rd.fixed(rows, 1)[:, 0] == 1)
+    return _decode_blob(kind, rd, rows)
+
+
+def decode_column(
+    schema: dict, wire: pa.Array, expected_id: int | None = None, permissive: bool = False
+) -> pa.StructArray:
+    """Records of a column of framed wire bytes; null bytes stay null.
+    A row that fails to decode — bad framing, a schema id other than
+    ``expected_id`` (when given), a truncated or malformed body — raises
+    (the first such row's error), or with ``permissive`` reads as a
+    record of nulls whose extra ``_corrupt_record`` field says why.
+    Bytes past the end of a record are ignored."""
+    if wire.type != pa.binary():
+        wire = wire.cast(pa.binary())
+    n = len(wire)
+    _, offs_buf, data_buf = wire.buffers()
+    offs = np.frombuffer(offs_buf, np.int32, n + 1, 4 * wire.offset).astype(np.int64)
+    data = np.frombuffer(data_buf, np.uint8) if data_buf else np.empty(0, np.uint8)
+    buf = np.concatenate([data[: offs[-1]], np.zeros(_PAD, np.uint8)])
+    start, end = offs[:-1], offs[1:]
+    rd = _Reader(buf, start + 5, end)
+    valid = wire.is_valid().to_numpy(zero_copy_only=False)
+    every = np.arange(n)
+    # framing: magic byte 0, then the 4-byte big-endian schema id
+    head = buf[start[:, None] + np.arange(5)].astype(np.int64)
+    sid = (head[:, 1] << 24) | (head[:, 2] << 16) | (head[:, 3] << 8) | head[:, 4]
+    magic = (end > start) & (head[:, 0] == 0)
+    rd.fail(every, valid & ~magic, "not Confluent wire format (bad magic byte)")
+    rd.fail(every, valid & (end - start < 5), "truncated Confluent header")
+    if expected_id is not None:
+        for r in np.nonzero(valid & (sid != expected_id))[0]:
+            rd.fail(every, [r], (
+                f"message written with schema id {sid[r]}, reader bound "
+                f"to {expected_id} — schema evolved mid-stream; "
+                "restart the pipeline against the new version"
+            ))
+    rows = np.nonzero(valid & (rd.err == None))[0]  # noqa: E711 — elementwise
+    fields = [_decode(f["type"], rd, rows) for f in schema["fields"]]
+    types = list(_arrow_type(schema))
+    bad = valid & (rd.err != None)  # noqa: E711 — elementwise
+    if bad.any() and not permissive:
+        raise ValueError(rd.err[np.argmax(bad)])
+    ok = valid & ~bad
+    if not ok.all():
+        at = np.zeros(n, np.int64)
+        at[rows] = np.arange(len(rows))
+        fields = [f.take(pa.array(at, mask=~ok)) for f in fields]
+    if permissive:
+        # a corrupt record has no values, whatever the schema requires
+        types = [t.with_nullable(True) for t in types] + [pa.field("_corrupt_record", pa.string())]
+        why = [None if e is None else f"ValueError: {e}" for e in rd.err]
+        fields.append(pa.array(why, pa.string()))
+    nulls = None if valid.all() else pa.array(~valid)
+    return pa.StructArray.from_arrays(fields, fields=types, mask=nulls)
 
 
 # ---------------------------------------------------------------------------
@@ -417,60 +696,48 @@ def unframe(wire: bytes) -> tuple[int, bytes]:
     return schema_id, wire[5:]
 
 
+def _column(schema: dict, record: dict) -> pa.Array:
+    return pa.array([record], _arrow_type(schema))
+
+
+def _encode_record(schema: dict, record: dict, out: io.BytesIO) -> None:
+    """Write one record's Avro body to ``out`` (a one-row column)."""
+    out.write(encode_column(schema, _column(schema, record), 0)[0].as_py()[5:])
+
+
+def _decode_record(schema: dict, buf: io.BytesIO) -> dict:
+    """One record from the Avro body in the rest of ``buf`` (a one-row
+    column); bytes past the record are ignored."""
+    return decode_column(schema, pa.array([frame(0, buf.read())])).to_pylist()[0]
+
+
 def encode_message(schema: dict, record: dict | None, schema_id: int) -> bytes | None:
     """Record dict → framed wire bytes; None record → tombstone (None)."""
     if record is None:
         return None
-    out = io.BytesIO()
-    _encode_record(schema, record, out)
-    return frame(schema_id, out.getvalue())
+    return encode_column(schema, _column(schema, record), schema_id)[0].as_py()
 
 
 def decode_message(wire: bytes | None, registry_lookup) -> dict | None:
     if wire is None:
         return None
-    schema_id, body = unframe(bytes(wire))
-    schema = registry_lookup(schema_id)
-    return _decode_record(schema, io.BytesIO(body))
+    schema_id, _ = unframe(bytes(wire))
+    return decode_column(registry_lookup(schema_id), pa.array([bytes(wire)])).to_pylist()[0]
 
 
 # ---------------------------------------------------------------------------
-# Spark integration — Arrow-batched pandas UDFs
+# Spark integration — Arrow UDFs
 # ---------------------------------------------------------------------------
 
 def avro_serialize_udf(avro_schema: dict, schema_id: int):
-    """Returns a pandas UDF struct→binary producing framed wire bytes.
+    """Returns an Arrow UDF struct→binary producing framed wire bytes.
     The avro schema travels by closure (resolved once, driver-side) —
     it alone drives encoding; no Spark-side schema is needed."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    # struct input arrives as pd.DataFrame; the hint checker wants the
-    # Union spelling for that protocol
-    import numpy as np
-
-    def _clean(v):
-        # Arrow->pandas hands back numpy scalars/arrays and NaN/NaT —
-        # normalize to plain Python before the codec sees them
-        if isinstance(v, np.ndarray):
-            return [_clean(x) for x in v.tolist()]
-        if isinstance(v, list):
-            return [_clean(x) for x in v]
-        if isinstance(v, np.generic):
-            v = v.item()
-        if v is None or v is pd.NaT:
-            return None
-        if isinstance(v, float) and pd.isna(v):
-            return None
-        return v
-
-    @pandas_udf(T.BinaryType())
-    def _ser(s: Union[pd.Series, pd.DataFrame]) -> pd.Series:
-        out = []
-        for rec in s.to_dict("records"):
-            out.append(
-                encode_message(avro_schema, {k: _clean(v) for k, v in rec.items()}, schema_id)
-            )
-        return pd.Series(out, dtype=object)
+    @arrow_udf(T.BinaryType())
+    def _ser(records: pa.Array) -> pa.Array:
+        return encode_column(avro_schema, records, schema_id)
 
     return _ser
 
@@ -496,42 +763,17 @@ def avro_deserialize_udf(
     mismatch after topic evolution becomes a per-record DLQ entry in
     this mode (the loud restart-on-evolution signal is traded away;
     that is what tolerance=all means)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     out_schema = value_schema
     if permissive:
         out_schema = T.StructType(
-            list(value_schema.fields)
+            [T.StructField(f.name, f.dataType, True) for f in value_schema.fields]
             + [T.StructField("_corrupt_record", T.StringType(), True)]
         )
-    names = [f.name for f in out_schema.fields]
 
-    @pandas_udf(out_schema)
-    def _de(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for wire in s:
-            if wire is None:
-                rows.append({n: None for n in names})
-                continue
-            try:
-                sid, body = unframe(bytes(wire))
-                if expected_id is not None and sid != expected_id:
-                    raise ValueError(
-                        f"message written with schema id {sid}, reader bound "
-                        f"to {expected_id} — schema evolved mid-stream; "
-                        "restart the pipeline against the new version"
-                    )
-                rec = _decode_record(avro_schema, io.BytesIO(body))
-                if permissive:
-                    rec = dict(rec)
-                    rec["_corrupt_record"] = None
-                rows.append(rec)
-            except Exception as e:  # noqa: BLE001
-                if not permissive:
-                    raise
-                bad = {n: None for n in names}
-                bad["_corrupt_record"] = f"{type(e).__name__}: {e}"
-                rows.append(bad)
-        return pd.DataFrame(rows, columns=names)
+    @arrow_udf(out_schema)
+    def _de(wire: pa.Array) -> pa.Array:
+        return decode_column(avro_schema, wire, expected_id, permissive)
 
     return _de

@@ -13,7 +13,8 @@ Three converters from the reference:
   (magic byte 0x00 + 4-byte big-endian schema id + avro binary body).
   Implemented in functions/avro_wire.py; gated because this container
   ships no spark-avro jar — the framing/registry logic is real and
-  unit-tested, the avro body encode falls back to a pure-Python codec.
+  unit-tested, the avro body is one in-repo columnar codec run as
+  Arrow UDFs.
 
 All JSON work is built-in ``to_json``/``from_json``/``schema_of_json``
 — JVM-side, no Python UDFs.

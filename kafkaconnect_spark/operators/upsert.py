@@ -61,29 +61,42 @@ def dedupe_last_per_key(
     )
 
 
-def _to_db_value(v: Any, sqlite: bool) -> Any:
-    if sqlite and isinstance(v, (_dt.datetime, _dt.date)):
-        return v.isoformat(sep=" ") if isinstance(v, _dt.datetime) else v.isoformat()
-    return v
+def _to_db_value(v: Any) -> Any:
+    """A date or timestamp as the ISO text SQLite stores."""
+    if isinstance(v, _dt.datetime):
+        return v.isoformat(sep=" ")
+    return v.isoformat() if isinstance(v, _dt.date) else v
 
 
 class _PartitionWriter:
-    """Picklable executor-side closure: one DB connection per partition."""
+    """Picklable executor-side closure: one DB connection per partition.
+    Each row's fields are the statement's parameters, in order; on
+    SQLite the date and timestamp fields are bound as ISO text."""
 
-    def __init__(self, sql: str, columns: list[str], connect: ConnectionFactory, sqlite: bool):
+    def __init__(self, sql: str, schema: T.StructType, connect: ConnectionFactory, sqlite: bool):
         self.sql = sql
-        self.columns = columns
         self.connect = connect
-        self.sqlite = sqlite
+        temporal = (T.DateType, T.TimestampType, T.TimestampNTZType)
+        self.temporal = [
+            i for i, f in enumerate(schema.fields) if sqlite and isinstance(f.dataType, temporal)
+        ]
 
     CHUNK = 5000  # bound Python-side buffering per partition
+
+    def _params(self, row: Any) -> tuple:
+        if not self.temporal:
+            return tuple(row)
+        vals = list(row)
+        for i in self.temporal:
+            vals[i] = _to_db_value(vals[i])
+        return tuple(vals)
 
     def __call__(self, rows: Iterator[Any]) -> None:
         conn = None
         batch: list[tuple] = []
         try:
             for row in rows:
-                batch.append(tuple(_to_db_value(row[c], self.sqlite) for c in self.columns))
+                batch.append(self._params(row))
                 if len(batch) >= self.CHUNK:
                     if conn is None:
                         conn = self.connect()
@@ -261,9 +274,9 @@ class JdbcSinkWriter:
                 if self.insert_mode == "upsert"
                 else self.dialect.insert_sql(self.table, value_cols)
             )
-            upserts.foreachPartition(
-                _PartitionWriter(sql, value_cols, self.connect, self.dialect.name == "sqlite")
-            )
+            sqlite = self.dialect.name == "sqlite"
+            # select("value.*") yields the fields in value_cols order
+            upserts.foreachPartition(_PartitionWriter(sql, value_type, self.connect, sqlite))
 
             if self.delete_enabled:
                 deletes = records.where(F.col("value").isNull()).select("key.*")
@@ -294,7 +307,7 @@ class JdbcSinkWriter:
                     deletes = deletes.repartition(n, *[F.col(c) for c in self.pk])
                 del_sql = self.dialect.delete_sql(self.table, self.pk)
                 deletes.foreachPartition(
-                    _PartitionWriter(del_sql, self.pk, self.connect, self.dialect.name == "sqlite")
+                    _PartitionWriter(del_sql, deletes.schema, self.connect, sqlite)
                 )
         finally:
             # unpersist even when a write fails (e.g. the NULL-key

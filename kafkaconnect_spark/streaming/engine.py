@@ -149,11 +149,11 @@ class Codec:
         )
         wrap, unwrap = (F.base64, F.unbase64) if self.base64 else (lambda c: c, lambda c: c)
 
-        # tombstones need guards on BOTH sides of the UDF boundary: a
-        # null struct entering a pandas UDF arrives as an all-NaN row
-        # (which would encode as a record of nulls, destroying the
-        # delete), and null wire bytes must come back as a null STRUCT
-        # (the writer splits on value IS NULL — K2).
+        # tombstones are guarded on BOTH sides of the UDF boundary: a
+        # null value must go out as null wire bytes (never as a record
+        # of nulls, which would destroy the delete), and null wire bytes
+        # must come back as a null STRUCT (the writer splits on value IS
+        # NULL — K2); the guards hold that here, whatever the UDF does.
         def serialize(col: str) -> Column:
             c = F.col(col)
             return wrap(F.when(c.isNull(), F.lit(None).cast("binary")).otherwise(ser_udf(c)))

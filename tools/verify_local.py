@@ -89,7 +89,14 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from kafkaconnect_spark.session import get_spark
 
-    spark = get_spark("verify-local", master="local[8]", shuffle_partitions=8)
+    # no console progress bar: its \r-joined text would share a line
+    # with the pass/FAIL lines a captured log is read for
+    spark = get_spark(
+        "verify-local",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
     con = duckdb.connect()
     for t in TABLES:
