@@ -4,29 +4,39 @@ Connect's JDBC sink task buffers a consumer batch, then issues
 keyed upserts (insert.mode=upsert,
 connector_configs/mysql_jdbc_sink_customers.json:10-12) and deletes on
 tombstones (delete.enabled=true, :13). The Spark-native equivalent is
-a ``foreachBatch`` function:
+a ``foreachBatch`` function that makes one pass over the batch:
 
-1. **Last-write-wins dedupe within the batch** — one terminal action
+1. **Shuffle once on the PK** — ``repartition`` by the ``key.<pk>``
+   fields (into ``tasks.max`` partitions on SQLite), so each key lands
+   in exactly one task.
+2. **Last-write-wins dedupe within the batch** — one terminal action
    per key, via ``row_number() over (partition by pk order by
    timestamp desc, offset desc)`` (offsets are comparable only within
    one source partition; the timestamp is the cross-partition signal
    and the offset breaks ties within a partition). Catalyst won't do
    this for us (SURVEY §4); it's the one custom piece of sink logic.
-2. **Split** on ``value IS NULL``: tombstone → DELETE set, else UPSERT
-   set. Because of (1) the sets are disjoint per key, so apply order
-   between the sets can't violate per-key ordering.
-3. **Write per partition** — rows are repartitioned by PK so each key
-   lands in exactly one task; every task opens its own DB connection
-   (like each Connect sink task) and executes parameterized
-   upsert/delete statements via executemany.
+   The windows are partitioned by the PK (plus the source partition),
+   which the shuffle of (1) already satisfies, so Spark adds no
+   exchange for them.
+3. **Write per partition** — every task opens its own DB connection
+   (like each Connect sink task), executes its parameterized upserts
+   and, with delete.enabled, its tombstone deletes via executemany,
+   and commits once: like Connect's sink task, a partition's writes
+   are one transaction. Because of (2) each key has one record, so the
+   upsert and delete sets are disjoint and their apply order can't
+   violate per-key ordering.
+
+Nothing is persisted: the one write action reads the deduped frame
+once. A sink without ``pk.fields`` (``insert.mode=insert``) has no key
+semantics: it runs no dedupe and no shuffle and inserts every record.
 
 End-to-end guarantee matches the reference: at-least-once delivery +
 idempotent keyed MERGE ⇒ re-processing a batch re-applies the same
 final state (SURVEY §3 E2).
 
-Scale notes (100 TB): the shuffle in (1)/(3) is keyed by PK — the same
-partitioning serves dedupe and write co-location, one shuffle total.
-Batch size is governed by the stream trigger (maxOffsetsPerTrigger /
+Scale notes (100 TB): the one shuffle is keyed by PK — the same
+partitioning serves dedupe and write co-location. Batch size is
+governed by the stream trigger (maxOffsetsPerTrigger /
 maxFilesPerTrigger), not by collecting to the driver; nothing here is
 driver-side except optional DDL.
 """
@@ -34,7 +44,9 @@ driver-side except optional DDL.
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Any, Callable, Iterable, Iterator
+import decimal
+import itertools
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,14 +58,12 @@ ConnectionFactory = Callable[[], Any]  # returns a DB-API 2.0 connection
 
 
 def dedupe_last_per_key(
-    df: DataFrame, pk_cols: list[Any], order_cols: list[Any]
+    df: DataFrame, pk_cols: list[Column], order_cols: list[Column]
 ) -> DataFrame:
-    """Keep the last record per key by ``order_cols`` (names or Column
-    expressions; each is applied DESC). One shuffle on the key."""
-    order = [
-        (c if isinstance(c, Column) else F.col(str(c))).desc() for c in order_cols
-    ]
-    w = Window.partitionBy(*pk_cols).orderBy(*order)
+    """Keep the last record per key by ``order_cols`` (each applied
+    DESC). Shuffles on the key unless ``df`` is already partitioned by
+    it."""
+    w = Window.partitionBy(*pk_cols).orderBy(*[c.desc() for c in order_cols])
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
@@ -61,56 +71,65 @@ def dedupe_last_per_key(
     )
 
 
+# types SQLite cannot bind natively: stored as text
+_SQLITE_TEXT = (T.DateType, T.TimestampType, T.TimestampNTZType, T.DecimalType)
+
+
 def _to_db_value(v: Any) -> Any:
-    """A date or timestamp as the ISO text SQLite stores."""
+    """A date or timestamp as the ISO text SQLite stores; a decimal as
+    its exact digits."""
     if isinstance(v, _dt.datetime):
         return v.isoformat(sep=" ")
+    if isinstance(v, decimal.Decimal):
+        return format(v, "f")
     return v.isoformat() if isinstance(v, _dt.date) else v
 
 
 class _PartitionWriter:
-    """Picklable executor-side closure: one DB connection per partition.
-    Each row's fields are the statement's parameters, in order; on
-    SQLite the date and timestamp fields are bound as ISO text."""
-
-    def __init__(self, sql: str, schema: T.StructType, connect: ConnectionFactory, sqlite: bool):
-        self.sql = sql
-        self.connect = connect
-        temporal = (T.DateType, T.TimestampType, T.TimestampNTZType)
-        self.temporal = [
-            i for i, f in enumerate(schema.fields) if sqlite and isinstance(f.dataType, temporal)
-        ]
+    """Picklable executor-side closure: one DB connection and one commit
+    per partition. Each row is ``(tombstone, *value fields, *key
+    fields)``: a record binds its value fields to ``sql``, a tombstone
+    its key fields to ``delete_sql``, in order; on SQLite the date,
+    timestamp and decimal fields are bound as text."""
 
     CHUNK = 5000  # bound Python-side buffering per partition
 
-    def _params(self, row: Any) -> tuple:
-        if not self.temporal:
-            return tuple(row)
-        vals = list(row)
-        for i in self.temporal:
-            vals[i] = _to_db_value(vals[i])
-        return tuple(vals)
+    def __init__(
+        self, sql: str, delete_sql: str | None, schema: T.StructType, n_value: int,
+        connect: ConnectionFactory, sqlite: bool,
+    ):
+        self.sql = (sql, delete_sql)
+        self.end = 1 + n_value
+        self.connect = connect
+        self.text = [
+            i for i, f in enumerate(schema.fields) if sqlite and isinstance(f.dataType, _SQLITE_TEXT)
+        ]
 
     def __call__(self, rows: Iterator[Any]) -> None:
-        conn = None
-        batch: list[tuple] = []
+        rows = iter(rows)
+        first = next(rows, None)
+        if first is None:
+            return  # an empty partition opens no connection
+        conn = self.connect()
         try:
-            for row in rows:
-                batch.append(self._params(row))
-                if len(batch) >= self.CHUNK:
-                    if conn is None:
-                        conn = self.connect()
-                    conn.cursor().executemany(self.sql, batch)
-                    batch.clear()
-            if batch:
-                if conn is None:
-                    conn = self.connect()
-                conn.cursor().executemany(self.sql, batch)
-            if conn is not None:
-                conn.commit()
+            cur = conn.cursor()
+            pending: tuple[list[tuple], list[tuple]] = ([], [])
+            for row in itertools.chain([first], rows):
+                if self.text:
+                    row = list(row)
+                    for i in self.text:
+                        row[i] = _to_db_value(row[i])
+                kind = 1 if row[0] else 0
+                pending[kind].append(tuple(row[self.end:] if kind else row[1:self.end]))
+                if len(pending[kind]) >= self.CHUNK:
+                    cur.executemany(self.sql[kind], pending[kind])
+                    pending[kind].clear()
+            for sql, params in zip(self.sql, pending):
+                if params:
+                    cur.executemany(sql, params)
+            conn.commit()
         finally:
-            if conn is not None:
-                conn.close()
+            conn.close()
 
 
 class JdbcSinkWriter:
@@ -219,98 +238,84 @@ class JdbcSinkWriter:
     def process_batch(self, records: DataFrame, batch_id: int = 0) -> None:
         """``records``: canonical record frame — ``key`` struct of PK
         fields, ``value`` struct (null = tombstone), optional
-        ``partition``/``offset`` ordering metadata."""
+        ``partition``/``offset``/``timestamp`` ordering metadata."""
         value_type = records.schema["value"].dataType
         if not isinstance(value_type, T.StructType):
             raise TypeError("records.value must be a struct column")
         self.ensure_table(value_type)
 
-        from pyspark import StorageLevel
+        n = self.num_writers
+        keys = [F.col(f"key.{c}") for c in self.pk]
+        if keys:
+            # the batch's one shuffle: both dedupe windows below are
+            # partitioned by the key (plus the source partition), which
+            # this partitioning satisfies, and it is the writers' too
+            records = records.repartition(n, *keys) if n else records.repartition(*keys)
+            records = self._last_per_key(records, keys)
+        elif n:
+            records = records.coalesce(n)
 
-        # ordering: Kafka offsets are authoritative WITHIN a source
-        # partition (CreateTime timestamps need not be monotone there —
-        # producer retries/clock steps reorder them), but offsets are
-        # NOT comparable across partitions (a hot partition's stale
-        # offset 100000 would beat another's fresh offset 52). So:
-        # phase 1 reduces per (key, source-partition) by offset — exact
-        # Connect semantics — and phase 2 picks among the per-partition
-        # winners by timestamp, the only cross-partition signal. For
-        # the common keyed-topic case (one partition per key) phase 2
-        # is a no-op and this is pure offset ordering.
-        pk_key_cols = [F.col(f"key.{c}") for c in self.pk]
-        has_part = "partition" in records.columns
-        order_cols = [c for c in ("timestamp", "offset") if c in records.columns] or None
-        if order_cols:
-            if has_part and "offset" in records.columns:
-                records = dedupe_last_per_key(
-                    records, pk_key_cols + [F.col("partition")], ["offset"]
-                )
-            records = dedupe_last_per_key(records, pk_key_cols, order_cols)
+        value = F.col("value")
+        key_cols = []
+        if self.delete_enabled and keys:
+            # parity with the reference's PK-less-delete probe
+            # (…PostgreSQL CDC….md:339-353): a tombstone whose key
+            # fields are NULL (source lacked REPLICA IDENTITY FULL /
+            # a PK) would DELETE nothing — surface it, don't no-op.
+            # raise_error fires executor-side while the writer reads its
+            # partition, before that partition commits anything.
+            err = (
+                f"tombstone with NULL key field(s) {self.pk} cannot be "
+                "applied — source table needs a PK or REPLICA IDENTITY FULL"
+            )
+            key_type = records.schema["key"].dataType
+            key_cols = [
+                F.when(
+                    value.isNull(),
+                    F.coalesce(k, F.raise_error(F.lit(err)).cast(key_type[c].dataType)),
+                ).alias(f"__key_{c}")
+                for c, k in zip(self.pk, keys)
+            ]
         else:
-            # no ordering metadata: still collapse to ONE record per
-            # key so the upsert and delete sets stay DISJOINT — the
-            # delete-after-upsert apply order depends on it (a key with
+            records = records.where(value.isNotNull())
+        # select("value.*") yields the fields in value_cols order
+        rows = records.select(value.isNull().alias("__tombstone"), "value.*", *key_cols)
+        value_cols = [f.name for f in value_type.fields]
+        sql = (
+            self.dialect.upsert_sql(self.table, value_cols, self.pk)
+            if self.insert_mode == "upsert"
+            else self.dialect.insert_sql(self.table, value_cols)
+        )
+        delete_sql = self.dialect.delete_sql(self.table, self.pk) if key_cols else None
+        rows.foreachPartition(
+            _PartitionWriter(
+                sql, delete_sql, rows.schema, len(value_cols), self.connect,
+                self.dialect.name == "sqlite",
+            )
+        )
+
+    @staticmethod
+    def _last_per_key(records: DataFrame, keys: list[Column]) -> DataFrame:
+        """One record per key. Kafka offsets are authoritative WITHIN a
+        source partition (CreateTime timestamps need not be monotone
+        there — producer retries/clock steps reorder them), but offsets
+        are NOT comparable across partitions (a hot partition's stale
+        offset 100000 would beat another's fresh offset 52). So: phase 1
+        reduces per (key, source-partition) by offset — exact Connect
+        semantics — and phase 2 picks among the per-partition winners by
+        timestamp, the only cross-partition signal. For the common
+        keyed-topic case (one partition per key) phase 2 is a no-op and
+        this is pure offset ordering."""
+        cols = records.columns
+        order_cols = [F.col(c) for c in ("timestamp", "offset") if c in cols]
+        if not order_cols:
+            # no ordering metadata: still collapse to ONE record per key
+            # so the upsert and delete sets stay DISJOINT (a key with
             # both a value and a tombstone would otherwise be upserted
-            # then deleted regardless of intent). Preference is
+            # and deleted regardless of intent). Preference is
             # deterministic: a value record beats a tombstone, ties
             # break on the value itself.
-            records = dedupe_last_per_key(
-                records,
-                pk_key_cols,
-                [F.col("value").isNotNull(), F.col("value")],
-            )
-        # both the upsert and the delete pass execute this frame —
-        # persist so the dedupe shuffle runs once per batch
-        records = records.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-
-            n = self.num_writers
-            upserts = records.where(F.col("value").isNotNull()).select("value.*")
-            if n:
-                upserts = upserts.repartition(n, *[F.col(c) for c in self.pk])
-            value_cols = [f.name for f in value_type.fields]
-            sql = (
-                self.dialect.upsert_sql(self.table, value_cols, self.pk)
-                if self.insert_mode == "upsert"
-                else self.dialect.insert_sql(self.table, value_cols)
-            )
-            sqlite = self.dialect.name == "sqlite"
-            # select("value.*") yields the fields in value_cols order
-            upserts.foreachPartition(_PartitionWriter(sql, value_type, self.connect, sqlite))
-
-            if self.delete_enabled:
-                deletes = records.where(F.col("value").isNull()).select("key.*")
-                # parity with the reference's PK-less-delete probe
-                # (…PostgreSQL CDC….md:339-353): a tombstone whose key
-                # fields are NULL (source lacked REPLICA IDENTITY FULL /
-                # a PK) would DELETE nothing — surface it, don't no-op.
-                # raise_error fires executor-side DURING the delete pass:
-                # zero extra jobs on the hot path. Like Connect, the batch
-                # is not atomic — upserts may have applied before the
-                # failure — but PK-idempotent writes make retries safe.
-                err = (
-                    f"tombstone with NULL key field(s) {self.pk} cannot be "
-                    "applied — source table needs a PK or REPLICA IDENTITY FULL"
-                )
-                deletes = deletes.select(
-                    *[
-                        F.when(
-                            F.col(c).isNull(),
-                            F.raise_error(F.lit(err)).cast(deletes.schema[c].dataType),
-                        )
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        for c in self.pk
-                    ]
-                )
-                if n:
-                    deletes = deletes.repartition(n, *[F.col(c) for c in self.pk])
-                del_sql = self.dialect.delete_sql(self.table, self.pk)
-                deletes.foreachPartition(
-                    _PartitionWriter(del_sql, deletes.schema, self.connect, sqlite)
-                )
-        finally:
-            # unpersist even when a write fails (e.g. the NULL-key
-            # tombstone probe raises) — a retried batch re-persists,
-            # and leaked blocks would accumulate per retry
-            records.unpersist()
+            return dedupe_last_per_key(records, keys, [F.col("value").isNotNull(), F.col("value")])
+        if "partition" in cols and "offset" in cols:
+            records = dedupe_last_per_key(records, keys + [F.col("partition")], [F.col("offset")])
+        return dedupe_last_per_key(records, keys, order_cols)

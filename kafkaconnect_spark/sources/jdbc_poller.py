@@ -87,10 +87,7 @@ class OffsetStore:
     def put(self, table: str, offset: Offset) -> None:
         data = self._load()
         data[table] = offset.to_json()
-        fd, tmp = tempfile.mkstemp(dir=self.path.parent)
-        with os.fdopen(fd, "w") as f:
-            json.dump(data, f)
-        os.replace(tmp, self.path)
+        self._save(data)
 
     def reset(self, table: str | None = None) -> None:
         if table is None:
@@ -99,6 +96,9 @@ class OffsetStore:
             return
         data = self._load()
         data.pop(table, None)
+        self._save(data)
+
+    def _save(self, data: dict[str, dict]) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.path.parent)
         with os.fdopen(fd, "w") as f:
             json.dump(data, f)

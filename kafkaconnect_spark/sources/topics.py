@@ -20,6 +20,7 @@ record schema is the Kafka source schema either way.
 
 from __future__ import annotations
 
+import functools
 import json
 from pathlib import Path
 
@@ -145,52 +146,28 @@ class TopicTransport:
 
     # ---- read ----------------------------------------------------------
     def read_stream(self, topics: list[str], starting_offsets: str = "earliest") -> DataFrame:
-        if not self.is_file:
-            return (
-                self.spark.readStream.format("kafka")
-                .option("kafka.bootstrap.servers", self.servers)
-                .option("subscribe", ",".join(topics))
-                .option("startingOffsets", starting_offsets)
-                .load()
-                .select(
-                    F.col("key").cast("string"),
-                    F.col("value").cast("string"),
-                    "topic",
-                    "partition",
-                    "offset",
-                    "timestamp",
-                )
-            )
-        # file transport: union of per-topic parquet streams.
-        # startingOffsets=latest = skip records that exist when the
-        # stream is built (snapshot.mode=schema_only analogue, SURVEY
-        # §2.1 S7): snapshot the topic's end offset now and filter —
-        # exactly Kafka's latest semantics, robust to file timestamps.
-        dfs = []
-        for topic in topics:
-            tdir = _topic_dir(self.servers, topic) / "log"
-            tdir.mkdir(parents=True, exist_ok=True)
-            reader = self.spark.readStream.schema(RECORD_SCHEMA).format("parquet")
-            df = reader.load(str(tdir))
-            if starting_offsets == "latest":
-                start_at = self._next_offset(tdir.parent)
-                df = df.where(
-                    (F.col("topic") != topic) | (F.col("offset") >= start_at)
-                )
-            dfs.append(df)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return self._read(topics, stream=True, starting_offsets=starting_offsets)
 
     def read_batch(self, topics: list[str]) -> DataFrame:
         """Whole-topic batch read (test/verify path — kafkacat analogue,
         scripts/show_topic_messages:1-7)."""
+        return self._read(topics, stream=False)
+
+    def _read(self, topics: list[str], stream: bool, starting_offsets: str = "earliest") -> DataFrame:
+        """The union of ``topics`` as canonical records, streamed or as
+        one batch. File transport: a streamed topic's log directory is
+        created if missing, a batch read skips a topic with no records
+        yet. startingOffsets=latest = skip records that exist when the
+        stream is built (snapshot.mode=schema_only analogue, SURVEY
+        §2.1 S7): snapshot the topic's end offset now and filter —
+        exactly Kafka's latest semantics, robust to file timestamps."""
+        reader = self.spark.readStream if stream else self.spark.read
         if not self.is_file:
+            reader = reader.format("kafka").option("kafka.bootstrap.servers", self.servers)
+            if stream:
+                reader = reader.option("startingOffsets", starting_offsets)
             return (
-                self.spark.read.format("kafka")
-                .option("kafka.bootstrap.servers", self.servers)
-                .option("subscribe", ",".join(topics))
+                reader.option("subscribe", ",".join(topics))
                 .load()
                 .select(
                     F.col("key").cast("string"),
@@ -204,14 +181,18 @@ class TopicTransport:
         dfs = []
         for topic in topics:
             tdir = _topic_dir(self.servers, topic) / "log"
-            if any(tdir.glob("*.parquet")):
-                dfs.append(self.spark.read.schema(RECORD_SCHEMA).parquet(str(tdir)))
+            if stream:
+                tdir.mkdir(parents=True, exist_ok=True)
+            elif not any(tdir.glob("*.parquet")):
+                continue
+            df = reader.schema(RECORD_SCHEMA).format("parquet").load(str(tdir))
+            if starting_offsets == "latest":
+                start_at = self._next_offset(tdir.parent)
+                df = df.where((F.col("topic") != topic) | (F.col("offset") >= start_at))
+            dfs.append(df)
         if not dfs:
             return self.spark.createDataFrame([], RECORD_SCHEMA)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return functools.reduce(DataFrame.unionByName, dfs)
 
     # ---- topic admin (O5) ------------------------------------------------
     def create_topic(self, topic: str, partitions: int = 1, replication: int = 1) -> None:

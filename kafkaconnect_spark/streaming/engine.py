@@ -747,16 +747,19 @@ class Engine:
             # null-value (key-only) tombstones carry no partition value,
             # so this sink cannot target them — fail loudly rather than
             # silently retaining deleted rows; route deletes through a
-            # flagged column (delete.field, e.g. Debezium rewrite mode)
-            if recs.where(F.col("value").isNull()).limit(1).count():
-                raise SpecError(
-                    f"pipeline {spec.name!r}: parquet-sink cannot apply "
-                    "null-value tombstones (no partition value); use "
-                    "delete.field with flagged delete records"
-                )
+            # flagged column (delete.field, e.g. Debezium rewrite mode).
+            # raise_error fires in the merge's first pass, before it
+            # writes anything.
+            err = (
+                f"pipeline {spec.name!r}: parquet-sink cannot apply "
+                "null-value tombstones (no partition value); use "
+                "delete.field with flagged delete records"
+            )
+            value_type = recs.schema["value"].dataType
+            value = F.coalesce("value", F.raise_error(F.lit(err)).cast(value_type))
             merge_into_partitioned(
                 self.spark,
-                recs.select("value.*"),
+                recs.select(value.alias("value")).select("value.*"),
                 path,
                 spec.pk_fields,
                 partition_field,

@@ -257,3 +257,168 @@ def test_dedupe_partition_aware_ordering(spark, db):
     w = writer(db)
     w.process_batch(spark.createDataFrame(rows, schema))
     assert table_rows(db) == [(1, "new"), (2, "fresh")]
+
+
+def test_insert_mode_without_pk_inserts_every_record(spark, db):
+    """A sink without pk.fields has no key to collapse on: every record
+    of the batch is inserted, duplicates included (Connect's
+    insert.mode=insert, pk.mode=none)."""
+    w = writer(db, insert_mode="insert", pk=[])
+    w.process_batch(batch(spark, [(1, "a", 0), (2, "b", 1), (3, "c", 2), (3, "c", 3)]))
+    assert table_rows(db) == [(1, "a"), (2, "b"), (3, "c"), (3, "c")]
+
+
+def mixed_batch(spark, n_keys=40):
+    """Each key written three times over two source partitions, in
+    offset and timestamp order; every fifth key ends in a tombstone.
+    Returns the batch and the table it must leave behind."""
+    import datetime
+
+    t0 = datetime.datetime(2024, 1, 1)
+    schema = T.StructType(
+        [
+            T.StructField("key", T.StructType([T.StructField("id", T.IntegerType())])),
+            T.StructField("value", VALUE_SCHEMA, True),
+            T.StructField("partition", T.IntegerType()),
+            T.StructField("offset", T.LongType()),
+            T.StructField("timestamp", T.TimestampType()),
+        ]
+    )
+    rows = [
+        (
+            {"id": k},
+            None if j == 2 and k % 5 == 0 else {"id": k, "name": f"v{k}.{j}"},
+            (k + j) % 2,
+            10 * k + j,
+            t0 + datetime.timedelta(seconds=10 * k + j),
+        )
+        for k in range(n_keys)
+        for j in range(3)
+    ]
+    expected = [(k, f"v{k}.2") for k in range(n_keys) if k % 5]
+    return spark.createDataFrame(rows, schema), expected
+
+
+def test_one_keyed_shuffle_and_one_write_pass(spark, db, monkeypatch):
+    """A batch with ordering metadata, tombstones and delete.enabled is
+    one keyed exchange and one write action: at most two Spark jobs
+    (the shuffle map stage and the write)."""
+    records, expected = mixed_batch(spark)
+    plans = []
+    cls = type(records)
+    write = cls.foreachPartition
+
+    def spy(frame, f):
+        plans.append(frame._jdf.queryExecution().executedPlan().toString())
+        return write(frame, f)
+
+    monkeypatch.setattr(cls, "foreachPartition", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert-one-pass", "JdbcSinkWriter.process_batch")
+    try:
+        writer(db, num_writers=2).process_batch(records)
+        jobs = sc.statusTracker().getJobIdsForGroup("upsert-one-pass")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) <= 2
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1
+    assert table_rows(db) == expected
+
+
+def test_mixed_upserts_and_deletes_over_three_writers(spark, db):
+    w = writer(db, num_writers=3)
+    w.process_batch(batch(spark, [(k, f"old{k}", k) for k in range(40)]))
+    records, expected = mixed_batch(spark)
+    w.process_batch(records)
+    assert table_rows(db) == expected
+
+
+def test_null_key_tombstone_fails_its_partition_whole(spark, db):
+    """A keyless tombstone fails the batch, and the writer partition
+    that holds it commits none of its writes, the upsert before it
+    included: a partition's writes are one transaction, as a Connect
+    sink task writes a batch."""
+    schema = T.StructType(
+        [
+            T.StructField("key", T.StructType([T.StructField("id", T.IntegerType())])),
+            T.StructField("value", VALUE_SCHEMA, True),
+            T.StructField("offset", T.LongType()),
+        ]
+    )
+    rows = [({"id": 1}, {"id": 1, "name": "a"}, 0), ({"id": None}, None, 1)]
+    with pytest.raises(Exception, match="REPLICA IDENTITY"):
+        writer(db, num_writers=1).process_batch(spark.createDataFrame(rows, schema))
+    assert table_rows(db) == []
+
+
+def test_decimal_fields_reach_sqlite_as_exact_values(spark, tmp_path):
+    """An Avro jdbc-source over a decimal(10,2) column into an
+    auto-created SQLite jdbc-sink writes every row, each numerically
+    equal to the source value."""
+    from decimal import Decimal
+
+    from kafkaconnect_spark.streaming.engine import Engine
+
+    db = str(tmp_path / "dec.db")
+    url = "jdbc:sqlite:" + db
+    registry_url = f"file://{tmp_path}/registry.json"
+    amounts = [Decimal("0.01"), Decimal("-12.50"), Decimal("99999999.99"), Decimal("0.00")]
+    source = spark.createDataFrame(
+        [(i, a) for i, a in enumerate(amounts, 1)] + [(len(amounts) + 1, None)],
+        "id int, amount decimal(10,2)",
+    )
+    eng = Engine(
+        spark,
+        servers=f"file://{tmp_path}/topics",
+        checkpoint_root=tmp_path / "ckpt",
+        table_resolver=lambda t: source,
+        connection_factories={url: factory(db)},
+    )
+    avro = {
+        "value.converter": "io.confluent.connect.avro.AvroConverter",
+        "value.converter.schema.registry.url": registry_url,
+    }
+    eng.register(
+        {
+            "name": "dec_source",
+            "config": {
+                "connector.class": "io.confluent.connect.jdbc.JdbcSourceConnector",
+                "connection.url": "jdbc:mysql://fake:3306/om",
+                "topic.prefix": "dec_",
+                "table.whitelist": "payments",
+                "mode": "incrementing",
+                "incrementing.column.name": "id",
+                "transforms": "create_key, extract_key",
+                "transforms.create_key.type": "org.apache.kafka.connect.transforms.ValueToKey",
+                "transforms.create_key.fields": "id",
+                "transforms.extract_key.type": "org.apache.kafka.connect.transforms.ExtractField$Key",
+                "transforms.extract_key.field": "id",
+                **avro,
+            },
+        }
+    )
+    eng.run_once("dec_source")
+    # the sink reads its value schema from the registry at registration
+    eng.register(
+        {
+            "name": "dec_sink",
+            "config": {
+                "connector.class": "io.confluent.connect.jdbc.JdbcSinkConnector",
+                "topics": "dec_payments",
+                "connection.url": url,
+                "insert.mode": "upsert",
+                "pk.mode": "record_key",
+                "pk.fields": "id",
+                "auto.create": "true",
+                **avro,
+            },
+        }
+    )
+    eng.run_once("dec_sink")
+    with sqlite3.connect(db) as c:
+        got = dict(c.execute("SELECT id, amount FROM dec_payments").fetchall())
+    want = {r.id: r.amount for r in source.collect()}
+    assert got.keys() == want.keys()
+    for i, amount in want.items():
+        assert (got[i] is None) if amount is None else Decimal(str(got[i])) == amount
