@@ -102,10 +102,13 @@ every match — only the remedy is sized to the measured disease.
 from __future__ import annotations
 
 import warnings
+from collections import Counter
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkaconnect_spark.operators.dedup import _track_cached
 from kafkaconnect_spark.operators.index_base import (  # noqa: F401 — _table_path re-exported
     IdSet,
     IndexStore,
@@ -116,6 +119,7 @@ from kafkaconnect_spark.operators.index_base import (  # noqa: F401 — _table_p
     as_id_set,
     band_self_pairs,
     inline_rows,
+    partition_values,
 )
 
 DEFAULT_BAND_BUCKETS = 8
@@ -282,6 +286,23 @@ def build(
     STORE.build(index_dir, m, fill)
 
 
+def _band_rows(rows: list[tuple] | None, m: dict, npb: int) -> list | None:
+    """The collected (id, hash) rows banded driver-side — (id, [(band,
+    band_val), …]) per row, the exact values _banded computes — or
+    None unless every row is well-formed (_valid_batch_rows)."""
+    if not _valid_batch_rows(rows, m["bits"] // 4):
+        return None
+    return [(i, [(k, h[k * npb:(k + 1) * npb]) for k in range(m["bands"])]) for i, h in rows]
+
+
+def _band_counts(row_bands: list | None, skip=frozenset()) -> Counter | None:
+    """The batch multiplicity of each (band, band_val) over the banded
+    rows whose id is not in ``skip``; None when the rows are."""
+    if row_bands is None:
+        return None
+    return Counter(v for i, vs in row_bands if i not in skip for v in vs)
+
+
 def match(
     spark: SparkSession,
     index_dir: str,
@@ -291,14 +312,11 @@ def match(
     hot_df_cap: int | None = DEFAULT_HOT_DF_CAP,
     max_hot_pairs: int = DEFAULT_MAX_HOT_PAIRS,
     hot_route_min_pairs: int = SKEW_WARN_PAIRS,
-    precollected_rows: list | None = None,
 ) -> DataFrame:
     """Read-only near-dup fingerprint pairs (id_new, id_corpus,
     hamming ≤ max_hamming) of a batch against the CURRENT generation.
     Tombstoned — and ``exclude_ids`` (an IdSet, or a one-column
     frame) — corpus ids never become candidates.
-    ``precollected_rows``: the batch's (id, hash) rows when the caller
-    already collected them (the streaming SMT) — skips the collect.
 
     Plan shape (the r10 hot-value routing, sized r11 — see the module
     docstring): band the batch (narrow), then ONE union-tagged
@@ -327,6 +345,15 @@ def match(
       construction; the scan is linear and column-pruned). The salted
       spread is sized to the measured distinct-hash volume.
 
+    A bounded batch of well-formed (exact-width hex) hashes is
+    collected once and banded driver-side (guide §8 — decide with
+    small rows): the band-bucket hit set and the histogram's batch
+    half then cost no cluster job. Geometries with npb > 4 keep the
+    cluster plan outright: the driver's int(bv, 16) % band_buckets
+    replay is exact only while the band value fits an int —
+    _band_bucket_expr's conv→cast('int') NULLs values ≥ 2^31. Where
+    the histograms are computed never changes a result.
+
     Raises when the distinct-hash volume exceeds ``max_hot_pairs`` —
     fingerprints that cannot discriminate on this corpus belong to
     the MinHash index; raising the cap is the caller's explicit
@@ -335,83 +362,38 @@ def match(
     (the pure-equi-join r9 plan, unmeasured); ``hot_route_min_pairs=0``
     forces routing whenever any value is hot (the tests' exactness
     A/B)."""
-    from pyspark import StorageLevel
-
-    from kafkaconnect_spark.operators.dedup import _track_cached
-
     m = STORE.manifest(index_dir)
-    id_col, hash_col = m["id_col"], m["hash_col"]
-    if max_hamming is None:
-        max_hamming = m["max_hamming"]
-    npb = _check_geometry(m["bits"], m["bands"], max_hamming)
-    v = m["version"]
-    idx_hashes = STORE.read(spark, index_dir, "hashes", v)
-    # r11 (guide §8 — decide with small rows): a bounded batch is
-    # collected ONCE and its band values replayed driver-side — the
-    # bucket hit set and the skew histogram's batch half then cost
-    # zero cluster jobs (each was its own collect, and the histogram's
-    # union+groupBy materialized AQE shuffle stages as extra jobs).
-    # Engages only for batches under SMALL_ID_INLINE_CAP whose hashes
-    # are all well-formed (exact-width hex) — anything else keeps the
-    # r10 cluster plans. The joins/verify below are untouched either
-    # way; this changes where histograms are computed, never results.
-    # npb > 4 geometries keep the cluster plan outright: the driver's
-    # int(bv, 16) % band_buckets replay is exact only while the band
-    # value fits an int — _band_bucket_expr's conv→cast('int') NULLs
-    # values ≥ 2^31 on the cluster, and the two paths would silently
-    # diverge (r11 ADVICE)
-    # (r12 note: a match()-internal localCheckpoint of a bounded batch
-    # was tried here and MEASURED WORSE — multimodal_dedup_index
-    # 9.9 → 13.2 s: direct callers persist the derived hash frame
-    # themselves and run several matches over it, so the per-match
-    # re-materialization costs more than the per-action re-analysis it
-    # saves. The SMTs truncate once per micro-batch instead, which is
-    # the shape that measured faster.)
-    batch_rows = precollected_rows if npb <= 4 else None
-    if batch_rows is None and npb <= 4:
-        batch_rows = inline_rows(new_hashes, [id_col, hash_col])
-    if not _valid_batch_rows(batch_rows, m["bits"] // 4):
-        batch_rows = None
-    b_new = _banded(new_hashes, m["bands"], npb, id_col, hash_col).persist(
+    mh = m["max_hamming"] if max_hamming is None else max_hamming
+    npb = _check_geometry(m["bits"], m["bands"], mh)
+    rows = inline_rows(new_hashes, [m["id_col"], m["hash_col"]]) if npb <= 4 else None
+    b_new = _banded(new_hashes, m["bands"], npb, m["id_col"], m["hash_col"]).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    tracked = [b_new]
-    val_mult: dict | None = None
-    if batch_rows is not None:
-        from collections import Counter
+    out = _match(
+        spark, index_dir, m, new_hashes, b_new, _band_counts(_band_rows(rows, m, npb)), mh,
+        as_id_set(exclude_ids), hot_df_cap, max_hot_pairs, hot_route_min_pairs,
+    )
+    return _track_cached(out, [b_new])
 
-        val_mult = Counter()
-        for _i, h in batch_rows:
-            for b in range(m["bands"]):
-                val_mult[(b, h[b * npb:(b + 1) * npb])] += 1
+
+def _match(spark: SparkSession, index_dir: str, m: dict, new_hashes: DataFrame,
+           b_new: DataFrame, val_mult: Counter | None, max_hamming: int, exclude: IdSet | None,
+           hot_df_cap: int | None = DEFAULT_HOT_DF_CAP, max_hot_pairs: int = DEFAULT_MAX_HOT_PAIRS,
+           hot_route_min_pairs: int = SKEW_WARN_PAIRS) -> DataFrame:
+    """The match of a batch's derived frames against generation ``m``:
+    ``new_hashes`` (id, hash), ``b_new`` its banding and ``val_mult``
+    its band-value multiplicities when counted driver-side (None: the
+    cluster plans measure them). The result carries the candidate and
+    hot-path caches for release_cached."""
+    id_col, hash_col = m["id_col"], m["hash_col"]
+    if val_mult is not None:
         # int(bv, 16) % n replays _band_bucket_expr (conv hex→dec,
         # cast int, pmod) exactly for validated ≤4-nibble values
-        hit = sorted(
-            {int(bv, 16) % m["band_buckets"] for _b, bv in val_mult}
-        )
+        hit = sorted({int(bv, 16) % m["band_buckets"] for _b, bv in val_mult})
     else:
-        # null buckets (a NULL/short hash's band) match nothing in the
-        # isin prune below — drop them rather than crash sorted()
-        hit = sorted(
-            {
-                r[0]
-                for r in b_new.select(
-                    _band_bucket_expr(m["band_buckets"]).alias("bb")
-                )
-                .distinct()
-                .collect()
-                if r[0] is not None
-            }
-        )
-    idx_b = (
-        STORE.read(spark, index_dir, "bands", v)
-        .where(F.col("band_bucket").isin(hit))
-        .drop("band_bucket")
-    )
-    idx_b = STORE.gone(spark, index_dir, m).drop_from(idx_b, id_col)
-    exclude = as_id_set(exclude_ids)
-    if exclude is not None:
-        idx_b = exclude.drop_from(idx_b, id_col)
+        hit = partition_values(b_new, _band_bucket_expr(m["band_buckets"]))
+    gone = STORE.gone(spark, index_dir, m)
+    idx_b = STORE.scan(spark, index_dir, m, "bands", hit, gone, exclude)
     # -- band-value histogram: the routing + skew guard. With the
     # batch's multiplicities already counted driver-side the cluster
     # half shrinks to a corpus-only agg over idx_b pruned by a literal
@@ -495,17 +477,8 @@ def match(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    tracked.append(cands)
-    hit_hb = sorted(
-        {
-            r[0]
-            for r in cands.select(
-                _shingle_bucket_expr(m["hash_buckets"], "id_corpus").alias("hb")
-            )
-            .distinct()
-            .collect()
-        }
-    )
+    tracked = [cands]
+    hit_hb = partition_values(cands, _shingle_bucket_expr(m["hash_buckets"], "id_corpus"))
     # deliberately NO forced broadcast of cands, unlike _jaccard_verify:
     # minhash band hashes are md5-wide so candidate volume stays
     # near-linear there, but fingerprint bands are 2^band_bits-narrow
@@ -521,9 +494,7 @@ def match(
             "id_new",
         )
         .join(
-            idx_hashes.where(F.col("hash_bucket").isin(hit_hb))
-            .drop("hash_bucket")
-            .select(
+            STORE.scan(spark, index_dir, m, "hashes", hit_hb).select(
                 F.col(id_col).alias("id_corpus"), F.col(hash_col).alias("__hb")
             ),
             "id_corpus",
@@ -546,7 +517,7 @@ def match(
         hcd = (
             idx_b.join(hot_vals, ["band", "band_val"], "left_semi")
             .join(
-                idx_hashes.drop("hash_bucket").withColumnRenamed(
+                STORE.scan(spark, index_dir, m, "hashes", None).withColumnRenamed(
                     hash_col, "__hb"
                 ),
                 id_col,
@@ -707,10 +678,11 @@ def drop_generations(index_dir: str, keep: int = 1) -> dict:
 
 class _FingerprintDedup(StreamingDedup):
     """FingerprintDedupIndex plug-in for index_base.StreamingDedup: the
-    batch's (id, hash) rows are collected ONCE with its ids and serve
-    the within-batch guard and the corpus match's driver-side banding
-    (guide §8 — decide with small rows); self-candidates share a
-    (band, band_val) and verify by exact Hamming distance.
+    batch's (id, hash) rows are collected ONCE with its ids and banded
+    driver-side once, in ``sign``; the within-batch guard counts all of
+    them and the corpus match the survivors' (guide §8 — decide with
+    small rows). Self-candidates share a (band, band_val) and verify
+    by exact Hamming distance.
 
     Within-batch guard (r11): the self-join is batch-bounded but NOT
     skew-bounded — on template-text corpora hot band values put
@@ -753,20 +725,14 @@ class _FingerprintDedup(StreamingDedup):
         m = b.m
         b.hashes = hold(b.keyed)
         b.banded = _banded(b.hashes, m["bands"], b.npb, m["id_col"], m["hash_col"])
-        valid = b.ids.ids is not None and _valid_batch_rows(b.rows, m["bits"] // 4)
-        b.valid_rows = b.rows if valid else None
+        b.row_bands = _band_rows(b.rows if b.ids.ids is not None else None, m, b.npb)
 
     def guard(self, b):
-        from collections import Counter
-
         if self.match_kw.get("hot_df_cap", DEFAULT_HOT_DF_CAP) is None:
             return  # hot_df_cap=None disables the guard, both halves
         line = self.match_kw.get("max_hot_pairs", DEFAULT_MAX_HOT_PAIRS)
-        if b.valid_rows is not None:  # replay the banding driver-side
-            w = b.npb
-            vm = Counter(
-                (k, h[k * w:(k + 1) * w]) for _i, h in b.valid_rows for k in range(b.m["bands"])
-            ).values()
+        if b.row_bands is not None:
+            vm = _band_counts(b.row_bands).values()
         else:
             counts = b.banded.groupBy("band", "band_val").count()
             vm = [r[0] for r in counts.where("count > 1").select("count").collect()]
@@ -790,12 +756,14 @@ class _FingerprintDedup(StreamingDedup):
         )
 
     def match(self, b, drops):
-        # the survivors' rows: the collected batch minus the drops
-        gone, rows = set(drops.ids or ()), b.valid_rows if drops.ids is not None else None
-        return match(
-            b.spark, self.index_dir, drops.drop_from(b.hashes, b.m["id_col"]),
-            max_hamming=b.mh, exclude_ids=b.ids, **self.match_kw,
-            precollected_rows=None if rows is None else [r for r in rows if r[0] not in gone],
+        i = b.m["id_col"]
+        # the survivors' band values, counted from the rows sign banded
+        # (npb > 4 keeps the cluster plan, as in match)
+        counted = drops.ids is not None and b.npb <= 4
+        val_mult = _band_counts(b.row_bands, set(drops.ids)) if counted else None
+        return _match(
+            b.spark, self.index_dir, b.m, drops.drop_from(b.hashes, i),
+            drops.drop_from(b.banded, i), val_mult, b.mh, b.ids, **self.match_kw,
         )
 
     def add(self, b, skip):

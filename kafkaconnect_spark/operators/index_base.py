@@ -19,8 +19,9 @@ carry-forward), retention GC (storage bounded at keep+1 generations;
 erased bytes leave disk when the last generation carrying them falls
 out of the window), salted corpus-wide bucket writes (one task per
 bucket is a hard width ceiling), durable per-batch REPORTS with
-auto-fold retention, the bucket-pruned membership probe, and the
-streaming dedup skeleton (StreamingDedup) the three SMTs share.
+auto-fold retention, one partition-pruned scan behind every read of a
+stored table by a match or a membership probe (IndexStore.scan), and
+the streaming dedup skeleton (StreamingDedup) the three SMTs share.
 
 Everything here is geometry-agnostic: nothing knows about shingles,
 codes, or hex slices. All filesystem access goes through
@@ -671,7 +672,12 @@ class StreamingDedup:
     (a checkpoint trades recompute-on-executor-loss for speed, taken
     only on batch-bounded data; the SMT replays idempotently on a
     batch failure either way). Every id set is an IdSet, so the two
-    regimes share one code path.
+    regimes share one code path. The batch is derived once: each
+    plug-in hands the frames it holds straight to its module's match
+    core. Every cache the batch takes — the held frames, the
+    _track_cached intermediates of its pair frames, the report — is
+    released on every exit, a failed batch included: a leaked cache
+    would feed later plans silent fragment hits (dedup.carry_cached).
 
     Plug-in contract. A subclass is built with the index dir plus its
     factory's keyword arguments, which become attributes. It sets
@@ -688,7 +694,8 @@ class StreamingDedup:
       probe, over the partitions ``b.parts`` when a hook sets them
       (default: the ids' id-hash buckets);
     - ``self_pairs(b)``: verified within-batch pairs, ``cols`` shaped;
-    - ``match(b, drops)``: corpus pairs of the batch minus ``drops``;
+    - ``match(b, drops)``: corpus pairs of the batch minus ``drops``
+      (its module's private match core over the held frames);
     - ``add(b, skip)``: append the batch minus ``skip``;
     - ``reroute(exc)``: for a refusal of a type in ``refusals``, a
       transform that takes over the whole batch, or None to re-raise
@@ -716,8 +723,6 @@ class StreamingDedup:
 
         from pyspark import StorageLevel
 
-        from kafkaconnect_spark.operators.dedup import release_cached
-
         spark, mem = records.sparkSession, StorageLevel.MEMORY_AND_DISK
         _auto_compact_reports(spark, self.index_dir)
         b = SimpleNamespace(spark=spark, records=records, m=self.store.manifest(self.index_dir))
@@ -731,32 +736,33 @@ class StreamingDedup:
             held.append(df.localCheckpoint() if b.rows is not None else df.persist(mem))
             return held[-1]
 
+        def tracked(df: DataFrame) -> DataFrame:  # its _track_cached intermediates
+            held.extend(getattr(df, "_kc_cached", []))
+            return df
+
         fallback = None
         try:
             try:  # steps 2-4: a refusal here leaves the index untouched
                 self.sign(b, hold)
                 self.guard(b)
                 b.pre = IdSet.of(self.membership(b))
-                self_pairs = self.self_pairs(b)
+                self_pairs = tracked(self.self_pairs(b))
                 self_drops = _winner_rule_drops(self_pairs, b.pre, *self.cols[:2])
                 held.append(self_drops.persist(mem))
-                pairs = self.match(b, IdSet.of(self_drops, self.cols[0]))
+                pairs = tracked(self.match(b, IdSet.of(self_drops, self.cols[0])))
             except self.refusals as exc:
                 fallback = self.reroute(exc)
                 if fallback is None:
                     raise
             if fallback is None:  # steps 5-7
                 rep = self_drops.select(*self.cols).unionByName(pairs.select(*self.cols))
-                rep = rep.persist(mem)
+                held.append(rep.persist(mem))
                 report = f"reports/stream-{uuid.uuid4().hex[:12]}"
                 rep.write.mode("errorifexists").parquet(os.path.join(self.index_dir, report))
                 dropped = IdSet.of(rep, self.cols[0], narrow=True)
-                for f in (self_pairs, pairs):
-                    release_cached(f)
-                rep.unpersist()
                 survivors = dropped.drop_from(records, id_sql)
                 self.add(b, dropped.union(b.pre))
-        finally:
+        finally:  # on every exit, or a failed batch leaks its caches
             for f in held:
                 f.unpersist()
         return survivors if fallback is None else fallback(records)
@@ -833,6 +839,15 @@ def _commit_generation_table(
     ifs.replace(staging, dest)
 
 
+def partition_values(df: DataFrame, expr) -> list:
+    """The distinct non-null values of ``expr`` over ``df``, sorted —
+    the stored-table partitions a derived batch frame can touch (one
+    collect; the set is bounded by the table's pinned bucket count)."""
+    return sorted(
+        r[0] for r in df.select(expr.alias("__p")).distinct().collect() if r[0] is not None
+    )
+
+
 def id_buckets(spark: SparkSession, ids: IdSet, n_buckets: int) -> list:
     """The id-hash buckets (_shingle_bucket_expr) an id set can live
     in. Literal ids evaluate driver-side (local_bucket_set — no cluster
@@ -842,7 +857,7 @@ def id_buckets(spark: SparkSession, ids: IdSet, n_buckets: int) -> list:
 
     if ids.ids is not None:
         return local_bucket_set(spark, ids.ids, bucket, "id") if ids.ids else []
-    return sorted({r[0] for r in ids.frame.select(bucket("__id")).distinct().collect()})
+    return partition_values(ids.frame, bucket("__id"))
 
 
 # ---------------------------------------------------------------------------
@@ -1039,6 +1054,33 @@ class IndexStore:
         for f in futures:
             _move_staged(*f.result())
 
+    def scan(self, spark: SparkSession, index_dir: str, m: dict, table: str,
+             parts: list | None, *drop: IdSet | None) -> DataFrame:
+        """The one read of a stored table by a match or a probe: the
+        generation ``m`` names, in partitions ``parts`` only (None: all
+        of them), minus the ids of each IdSet in ``drop`` (None: none).
+
+        ``parts`` becomes a partition filter on the hive layout, so a
+        batch reads only the partitions its own keys can join: the band
+        buckets of its band values, the id-hash buckets of its
+        candidates or ids, pq's probed cells. Pruning never changes a
+        result; it only skips files no row of the batch can meet. The
+        one unpruned read is hamming's hot-value verify, whose groups
+        span every hash bucket by construction.
+
+        ``drop`` is applied before any candidate join or top-k: the
+        tombstone log (``gone``), so a deleted id stops matching before
+        any compact, and a caller's ``exclude_ids``, which the
+        streaming SMTs set to the batch's own ids so a replayed batch
+        matches exactly the pool the original run saw."""
+        t = next(t for t in self.tables if t.name == table)
+        df = self.read(spark, index_dir, table, m["version"])
+        if parts is not None:
+            df = df.where(F.col(t.part).isin(parts))
+        for ids in filter(None, drop):
+            df = ids.drop_from(df, m["id_col"])
+        return df
+
     def probe(self, spark: SparkSession, index_dir: str, m: dict, ids: IdSet,
               parts: list | None = None) -> DataFrame:
         """Which of ``ids`` the CURRENT generation's membership table
@@ -1049,8 +1091,7 @@ class IndexStore:
         t, i = self.membership, m["id_col"]
         if parts is None:
             parts = id_buckets(spark, ids, m[t.n_key])
-        stored = self.read(spark, index_dir, t.name, m["version"])
-        return ids.keep_in(stored.where(F.col(t.part).isin(parts)).select(i), i).distinct()
+        return ids.keep_in(self.scan(spark, index_dir, m, t.name, parts).select(i), i).distinct()
 
     def delete(self, spark: SparkSession, index_dir: str, ids) -> int:
         """Tombstone ids so they stop matching immediately (match and
@@ -1147,18 +1188,3 @@ class IndexStore:
                 "oldest_retained": gc["oldest_retained"],
             }
 
-
-def membership_probe(
-    spark: SparkSession,
-    index_dir: str,
-    ids: IdSet,
-    version: int,
-    table: str,
-    n_buckets: int,
-    bucket_col: str,
-    id_col: str,
-) -> DataFrame:
-    """IndexStore.probe over one id-hash-bucketed ``table`` named
-    directly (``bucket_col`` partitions it into ``n_buckets``)."""
-    store = IndexStore(__name__, (StoredTable(table, bucket_col, "n"),), (), "")
-    return store.probe(spark, index_dir, {"version": version, "id_col": id_col, "n": n_buckets}, ids)

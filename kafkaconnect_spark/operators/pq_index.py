@@ -66,6 +66,7 @@ across many appends.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -77,6 +78,7 @@ from kafkaconnect_spark.operators.index_base import (  # noqa: F401 — re-expor
     _table_path,
     as_id_set,
     compact_reports,
+    partition_values,
 )
 
 from kafkaconnect_spark.operators.similarity import (
@@ -248,7 +250,6 @@ def match(
     rerank: int = 30,
     query_id_col: str = "query_id",
     exclude_ids: DataFrame | IdSet | None = None,
-    precomputed_probes: DataFrame | None = None,
 ) -> DataFrame:
     """READ-ONLY IVF-PQ ANN against the stored codes. ``vectors`` is
     the caller's true-vector store for the exact re-rank (the index
@@ -269,72 +270,55 @@ def match(
     The probes frame feeds both the cell collect and the ADC join —
     it is persisted so the probe pipeline computes once (r8 ADVICE
     #5), tagged on the result for dedup.release_cached."""
-    from pyspark import StorageLevel
-
     from kafkaconnect_spark.operators.dedup import _track_cached
 
-    codes, m = _codes_table(spark, index_dir)
-    cents, books, d = _quantizers(m)
-    id_col, vec_col, n_sub = m["id_col"], m["vec_col"], m["n_sub"]
-    norm_sql, _ = _ivf_sql(cents)
-    # precomputed_probes: a caller-persisted probes frame for these
-    # queries (the streaming SMT computes probes once for its
-    # within-batch step and reuses them here filtered to survivors —
-    # without it the batch's probe pipeline ran twice per micro-batch);
-    # the caller owns its cache lifetime, so it is not tagged below
-    if precomputed_probes is not None:
-        probes = precomputed_probes
-        own_cache = []
-    else:
-        probes = _probes(
-            queries, cents, books, d, n_probe, query_id_col, vec_col
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        own_cache = [probes]
-    # the probed-cell set is bounded by n_cells (a manifest constant) —
-    # collect it and push it as a PARTITION filter on the hive-
-    # partitioned codes table: steady-state search reads only the
-    # probed fraction of the stored codes (r7 judge directive #1).
-    hit = sorted(
-        {r[0] for r in probes.select("cell").distinct().collect()}
+    m = STORE.manifest(index_dir)
+    probes = _probes(queries, *_quantizers(m), n_probe, query_id_col, m["vec_col"]).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    codes = codes.where(F.col("cell").isin(hit))
-    codes = STORE.gone(spark, index_dir, m).drop_from(codes, id_col)
-    exclude = as_id_set(exclude_ids)
-    if exclude is not None:
-        codes = exclude.drop_from(codes, id_col)
+    cells = partition_values(probes, F.col("cell"))
+    out = _match(spark, index_dir, m, probes, cells, vectors, k, rerank, query_id_col,
+                 as_id_set(exclude_ids))
+    return _track_cached(out, [probes])
+
+
+def _match(spark: SparkSession, index_dir: str, m: dict, probes: DataFrame, cells: list,
+           vectors: DataFrame, k: int, rerank: int, query_id_col: str,
+           exclude: IdSet | None) -> DataFrame:
+    """ANN of a derived probes frame against generation ``m``: ADC over
+    the stored codes of the probed ``cells`` (IndexStore.scan), exact
+    re-rank, top ``k`` per query."""
+    gone = STORE.gone(spark, index_dir, m)
+    codes = STORE.scan(spark, index_dir, m, "codes", cells, gone, exclude)
+    norm_sql, _ = _ivf_sql(_quantizers(m)[0])
     sl = _adc_rerank(
-        codes, probes, vectors, n_sub, rerank, id_col, vec_col, query_id_col, norm_sql
+        codes, probes, vectors, m["n_sub"], rerank, m["id_col"], m["vec_col"], query_id_col,
+        norm_sql,
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    out = (
+    return (
         sl.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(query_id_col, "neighbor_id", "cosine", "adc_dist", "rank")
     )
-    return _track_cached(out, own_cache)
 
 
-def append(spark: SparkSession, index_dir: str, new_vecs: DataFrame,
-           precomputed_coded: DataFrame | None = None) -> None:
+def append(spark: SparkSession, index_dir: str, new_vecs: DataFrame) -> None:
     """Code a batch against the MANIFEST quantizers and add it to the
     current generation — a batch-sized narrow map stage; the corpus is
-    never read, let alone re-coded. A tombstoned id re-appended here
+    never read, let alone re-coded. The batch is coded under the
+    writer lock, against the quantizers of the generation it joins
+    (a retrain replaces them). A tombstoned id re-appended here
     stays suppressed until the next compact clears its tombstone
-    (tombstone wins within a generation), exactly as in lsh_index.
-
-    ``precomputed_coded``: a caller-persisted coded frame for exactly
-    the rows to add (the streaming SMT filters its already-coded
-    batch) — skips re-coding; the caller owns the cache lifetime."""
+    (tombstone wins within a generation), exactly as in lsh_index."""
     with STORE.writing(index_dir) as m:
-        coded = precomputed_coded
-        if coded is None:
-            cents, books, d = _quantizers(m)
-            vecs = new_vecs.where(F.size(m["vec_col"]) > 0).select(
-                F.col(m["id_col"]), F.col(m["vec_col"])
-            )
-            coded = _coded(vecs, cents, books, d, m["n_sub"], m["id_col"], m["vec_col"])
+        cents, books, d = _quantizers(m)
+        vecs = new_vecs.where(F.size(m["vec_col"]) > 0).select(
+            F.col(m["id_col"]), F.col(m["vec_col"])
+        )
+        coded = _coded(vecs, cents, books, d, m["n_sub"], m["id_col"], m["vec_col"])
         STORE.append(spark, index_dir, m, {"codes": coded})
 
 
@@ -430,6 +414,7 @@ class _SemDeDup(StreamingDedup):
         # found; one whose VECTOR changed may land elsewhere and read as
         # fresh — the conservative outcome)
         b.parts = sorted(c for s, c in hist if s == "b")
+        b.cells = sorted(c for s, c in hist if s == "p")  # the corpus match's partitions
         if self.hist is None or self.hist_version != b.m["version"]:
             self.hist, self.hist_version = _cell_hist(b.codes), b.m["version"]
         probes = [(c, n) for (s, c), n in hist.items() if s == "p"]
@@ -474,30 +459,26 @@ class _SemDeDup(StreamingDedup):
         )
 
     def match(self, b, drops):
-        from kafkaconnect_spark.operators.dedup import carry_cached
-
         st = self.vector_store
         st = b.spark.read.parquet(st) if isinstance(st, str) else st()
-        raw = match(
-            b.spark, self.index_dir, drops.drop_from(b.vecs, "query_id"),
+        raw = _match(
+            b.spark, self.index_dir, b.m, drops.drop_from(b.probes, "query_id"), b.cells,
             _rerank_store(st, b.vecs, b.m["id_col"], b.m["vec_col"], b.ids),
-            k=1, n_probe=self.n_probe, rerank=self.rerank, exclude_ids=b.ids,
-            precomputed_probes=drops.drop_from(b.probes, "query_id"),
+            1, self.rerank, "query_id", b.ids,
         )
-        return carry_cached(raw.where(F.col("cosine") >= self.threshold), raw)
+        return raw.where(F.col("cosine") >= self.threshold)
 
     def add(self, b, skip):
-        from pyspark import StorageLevel
-
-        # append() codes only non-empty vectors — the delta skips the
-        # (typically empty) set of empty-vector ids too
+        # the index codes only non-empty vectors (build, append) — the
+        # delta skips the (typically empty) set of empty-vector ids too
         empty = IdSet.of(b.vecs.where(F.size(b.m["vec_col"]) == 0), "query_id", narrow=True)
         delta = skip.union(empty).drop_from(b.coded, b.m["id_col"])
         delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         # a failed append must not leave a histogram that UNDERCOUNTS
         # the stored codes (it would void the guard's upper bound)
         hist, self.hist = self.hist, None
-        append(b.spark, self.index_dir, None, precomputed_coded=delta)
+        with STORE.writing(self.index_dir) as m:
+            STORE.append(b.spark, self.index_dir, m, {"codes": delta})
         for c, n in _cell_hist(delta).items():
             hist[c] = hist.get(c, 0) + n
         self.hist = hist
@@ -590,8 +571,6 @@ def retrain(
     floats each); re-coding is the same single map stage as build —
     everything corpus-linear, measured in SCALE_LADDER.json
     (pq_retrain, r9)."""
-    from pyspark import StorageLevel
-
     held = []
 
     def derive(m, gone):

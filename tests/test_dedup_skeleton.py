@@ -224,3 +224,84 @@ def test_crash_replay_matches_the_clean_run(
     monkeypatch.setattr(index_base, "_move_staged", real_move)
     assert [_run(spark, kind, d, "b1"), _run(spark, kind, d, "b2")] == clean_surv
     assert _stored_rows(spark, kind, d) == clean_rows
+
+
+# Spark jobs of one b1 batch per SMT when each match hand-wrote its own
+# stored-table reads and partition collects (commit 7fdbe46)
+_JOBS_BEFORE = {"lsh": 40, "pq": 36, "hamming": 32}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_one_bounded_batch_runs_no_more_jobs(spark, tmp_path, kind):
+    d = _build(spark, tmp_path, kind)
+    records = _frame(spark, kind, "b1").select(F.struct("*").alias("value"))
+    smt, sc, group = _transform(kind, d), spark.sparkContext, f"smt-jobs-{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        out = smt(records)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert {r["value"][0] for r in out.collect()} == {20, 30}
+    assert 0 < jobs <= _JOBS_BEFORE[kind]
+
+
+def _exchanges(df) -> list[str]:
+    """Exchange nodes of df's physical plan above its cache and
+    checkpoint leaves. An AQE wrapper is looked through: Spark also
+    wraps a plain scan of an AQE-planned cache, with no exchange."""
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if "Exchange" in name:
+            found.append(name)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_narrow_collects_plan_no_exchange(spark, tmp_path, monkeypatch, kind):
+    """inline_rows(narrow=True) drops AQE for its collect, which is only
+    safe on an exchange-free plan: every such frame of one batch must
+    plan without an Exchange."""
+    d = _build(spark, tmp_path, kind)
+    real, seen = index_base.inline_rows, []
+
+    def spy(df, cols, cap=None, narrow=False):
+        if narrow:
+            seen.append(_exchanges(df))
+        return real(df, cols, cap, narrow)
+
+    monkeypatch.setattr(index_base, "inline_rows", spy)
+    assert _run(spark, kind, d, "b1") == {20, 30}
+    assert seen and seen == [[]] * len(seen)
+
+
+def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch):
+    """A corpus match that raises after the within-batch pairs are
+    materialized must leave none of the batch's caches behind."""
+    from pyspark import StorageLevel
+
+    from kafkaconnect_spark.operators import dedup
+
+    d = _build(spark, tmp_path, "lsh")
+    tagged, real_track = [], dedup._track_cached
+
+    def track(result, cached):
+        tagged.extend(cached)
+        return real_track(result, cached)
+
+    def failing_match(*a, **k):
+        raise RuntimeError("injected match failure")
+
+    monkeypatch.setattr(dedup, "_track_cached", track)
+    monkeypatch.setattr(lsh_index, "_match", failing_match)
+    with pytest.raises(RuntimeError, match="injected match failure"):
+        _run(spark, "lsh", d, "b1")
+    assert tagged  # the within-batch verify's candidate cache
+    assert [f.storageLevel for f in tagged] == [StorageLevel.NONE] * len(tagged)

@@ -5,11 +5,12 @@ partition-pruned match, tombstones, compact + retention GC."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from kafkaconnect_spark.operators import hamming_index, index_fs
+from kafkaconnect_spark.operators import hamming_index, index_fs, lsh_index, pq_index
 from kafkaconnect_spark.operators.dedup import release_cached
 
 
@@ -70,15 +71,68 @@ def test_banded_join_is_recall_exact_under_the_guarantee(spark, tmp_path):
     assert got == want
 
 
-def test_match_scan_is_band_bucket_pruned(spark, tmp_path):
-    d = str(tmp_path / "ham")
-    hamming_index.build(_hashes(spark, CORPUS), d, bits=64, bands=8,
-                        max_hamming=4)
-    assert index_fs.partition_subdirs(os.path.join(d, "bands", "v1"))
-    res = hamming_index.match(spark, d, _hashes(spark, BATCH[:1]))
+def _stored_scans(plan: str, d: str) -> list[tuple[str, str]]:
+    """(table, partition-filter text) of each plan scan of a table
+    stored under ``d``."""
+    out = []
+    for line in plan.splitlines():
+        loc = re.search(r"Location: \w+\(\d+ paths\)\[file:([^\],]+)", line)
+        if loc and loc.group(1).startswith(d + os.sep):
+            table = os.path.relpath(loc.group(1), d).split(os.sep)[0]
+            out.append((table, line.split("PartitionFilters: ")[1].split("PushedFilters")[0]))
+    return out
+
+
+@pytest.fixture
+def full_scan_paths(spark):
+    """Plans render whole scan paths (they abbreviate past 100 chars,
+    once per plan node, so this holds for the whole test)."""
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "hamming", "hamming_hot", "pq"])
+def test_match_scans_are_partition_pruned(spark, tmp_path, full_scan_paths, kind):
+    """Every scan of a stored table in one match's plan carries a
+    partition filter on that table's partition column (IndexStore.scan).
+    The one unpruned read is hamming's hot-value verify of ``hashes``,
+    whose groups span every hash bucket."""
+    d = str(tmp_path / kind)
+    if kind == "lsh":
+        docs = spark.createDataFrame(
+            [(i, f"a b c d e f g h {i}") for i in range(12)], "doc_id long, text string"
+        )
+        lsh_index.build(docs, d, num_hashes=16, bands=4, n=3)
+        mod, res = lsh_index, lsh_index.match(spark, d, docs.where("doc_id < 3"))
+    elif kind == "pq":
+        vecs = spark.createDataFrame(
+            [(i, [float((i * 7 + k) % 5) for k in range(4)]) for i in range(24)],
+            "vec_id long, embedding array<double>",
+        )
+        pq_index.build(vecs, d, n_cells=4, n_sub=2, n_codes=4)
+        q = vecs.where("vec_id < 3").withColumnRenamed("vec_id", "query_id")
+        mod, res = pq_index, pq_index.match(spark, d, q, vecs, k=2, n_probe=2)
+    else:
+        hot = kind == "hamming_hot"
+        rows = _skewed_corpus() if hot else CORPUS
+        corpus = [r for r in rows if r[0] % 10 != 0] if hot else rows
+        batch = [r for r in rows if r[0] % 10 == 0] if hot else BATCH[:1]
+        hamming_index.build(_hashes(spark, corpus), d, bits=64, bands=8, max_hamming=4)
+        kw = {"hot_df_cap": 2, "hot_route_min_pairs": 0} if hot else {}
+        mod, res = hamming_index, hamming_index.match(spark, d, _hashes(spark, batch), **kw)
+    assert index_fs.partition_subdirs(os.path.join(d, mod.STORE.tables[-1].name, "v1"))
     plan = res._jdf.queryExecution().executedPlan().toString()
     release_cached(res)
-    assert "band_bucket" in plan  # partition filter reached the scan
+    part = {t.name: t.part for t in mod.STORE.tables}
+    scans = _stored_scans(plan, d)
+    assert {t for t, _ in scans} == set(part)
+    # a value filter on the partition column: not just the isnotnull a
+    # join infers, nor a dynamic-pruning subquery
+    unpruned = {t for t, f in scans if not re.search(rf"\b{part[t]}#\d+ (IN \(|= )", f)}
+    assert unpruned == ({"hashes"} if kind == "hamming_hot" else set())
 
 
 def test_lifecycle_delete_compact_gc_add(spark, tmp_path):
@@ -267,9 +321,9 @@ def test_driver_side_banding_equals_cluster_plan(spark, tmp_path, monkeypatch):
 
 
 def test_empty_batch_matches_nothing(spark, tmp_path):
-    """A zero-row micro-batch (routine for streaming; also reached via
-    precollected_rows=[]) must return an empty result, not raise on an
-    empty inline predicate (r11 ADVICE: pred='' → ParseException)."""
+    """A zero-row micro-batch (routine for streaming) is collected as
+    zero rows and must return an empty result, not raise on an empty
+    inline predicate (r11 ADVICE: pred='' → ParseException)."""
     d = str(tmp_path / "ham")
     hamming_index.build(_hashes(spark, CORPUS), d, bits=64, bands=8,
                         max_hamming=4)
@@ -277,9 +331,6 @@ def test_empty_batch_matches_nothing(spark, tmp_path):
     res = hamming_index.match(spark, d, empty)
     assert res.collect() == []
     release_cached(res)
-    res2 = hamming_index.match(spark, d, empty, precollected_rows=[])
-    assert res2.collect() == []
-    release_cached(res2)
 
 
 def test_wide_band_geometry_keeps_the_cluster_plan(spark, tmp_path,

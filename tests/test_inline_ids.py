@@ -176,13 +176,7 @@ def test_membership_probe_literal_matches_join_path(spark, tmp_path):
     from kafkaconnect_spark.operators import lsh_index
 
     def probe(ids):
-        return {
-            r.doc_id
-            for r in index_base.membership_probe(
-                spark, d, ids, m["version"], "shingles",
-                m["shingle_buckets"], "shingle_bucket", "doc_id",
-            ).collect()
-        }
+        return {r.doc_id for r in lsh_index.STORE.probe(spark, d, m, ids).collect()}
 
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=f"alpha beta gamma delta {i} epsilon zeta") for i in range(30)]
