@@ -665,7 +665,7 @@ def compact(
     out = STORE.rewrite(spark, index_dir, keep_generations)
     return {
         "version": out["version"],
-        "n_hashes": STORE.read(spark, index_dir, "hashes", out["version"]).count(),
+        "n_hashes": STORE.read(spark, index_dir, "hashes", STORE.manifest(index_dir)).count(),
         "n_tombstones_dropped": out["n_tombstones_dropped"],
         "oldest_retained": out["oldest_retained"],
     }

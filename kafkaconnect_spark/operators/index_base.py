@@ -38,6 +38,7 @@ report dirs and compact_reports).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import sys
@@ -176,34 +177,6 @@ def _sql_id_literal(v) -> str:
     raise TypeError(f"unsupported id literal type {type(v).__name__}")
 
 
-@contextlib.contextmanager
-def _no_aqe(spark):
-    """Scope-disable AQE for the exchange-free bounded collects below:
-    their plan is scan → LocalLimit → coalesce(1) — no exchange, so
-    AQE has nothing to adapt, yet wrapping it costs a SECOND cluster
-    job per collect (measured r12: 10 inline collects = 20 jobs /
-    0.26 s each under AQE vs 10 jobs / 0.18 s without; the SMTs run
-    10-30 such collects per replay). Results are identical — the
-    toggle only removes the AdaptiveSparkPlan wrapper. The conf is
-    session-global, but every call site collects from the driver main
-    thread (the staged-write pool never overlaps an inline collect —
-    the caller blocks on it), and the finally restores the old value
-    on any exit."""
-    key = "spark.sql.adaptive.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:  # noqa: BLE001 — unknown default: leave AQE alone
-        old = None
-    if old != "true":
-        yield
-        return
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def inline_rows(
     df: DataFrame,
     cols: list[str],
@@ -212,21 +185,25 @@ def inline_rows(
 ) -> list[tuple] | None:
     """Up to ``cap`` (default: SMALL_ID_INLINE_CAP, read at call time)
     rows of ``df[cols]`` as Python tuples, or None when the frame has
-    more (callers keep their cluster plans). One bounded job:
+    more (callers keep their cluster plans). One bounded collect:
     `limit(cap + 1)` stops the scan early however large the frame is.
-    limit → coalesce(1) → collect runs as ONE job; a bare
-    limit(cap+1).collect() instead runs executeTake's incremental
-    partition probing — measured 4+ jobs per call at 32 partitions.
     Rows are neither deduplicated nor validated.
 
     ``narrow=True`` = the CALLER asserts df's plan is exchange-free
-    (plain scan/filter/project, or a materialized cache) — the collect
-    then runs without the AQE wrapper job (see _no_aqe). Never set it
-    on a frame that joins/aggregates: those want AQE's runtime
-    broadcast (a blanket wrap measured WORSE end-to-end, r12)."""
+    (plain scan/filter/project, or a materialized cache). The collect
+    is then select → coalesce(1) → limit: one partition feeds the
+    limit, so it runs as ONE job with no exchange, and AQE (which only
+    wraps plans that have one) adds no job either — measured 58 → 23 ms
+    over a checkpoint and 103 → 78 ms over a pruned scan against the
+    limit-first form. A frame that joins or aggregates keeps limit →
+    coalesce(1), since coalescing first would run its last stage as a
+    single task; there the limit adds a SinglePartition exchange, which
+    AQE runs as a job of its own (a bare limit(cap+1).collect() would
+    instead run executeTake's incremental partition probing — 4+ jobs
+    per call at 32 partitions). No session conf is touched either way."""
     cap = SMALL_ID_INLINE_CAP if cap is None else cap
-    with _no_aqe(df.sparkSession) if narrow else contextlib.nullcontext():
-        rows = df.select(*cols).limit(cap + 1).coalesce(1).collect()
+    df = df.select(*cols)
+    rows = (df.coalesce(1).limit(cap + 1) if narrow else df.limit(cap + 1).coalesce(1)).collect()
     if len(rows) > cap:
         return None
     return [tuple(r) for r in rows]
@@ -368,28 +345,27 @@ def as_id_set(ids) -> IdSet | None:
     return ids if ids is None or isinstance(ids, IdSet) else IdSet.wrap(ids)
 
 
-def tombstone_set(spark: SparkSession, tomb_dir: str) -> IdSet:
-    """The tombstone log as an IdSet: literals when small (the common
-    case is EMPTY — zero join operators), else the log itself, with
-    the broadcast hint only under TOMBSTONE_BROADCAST_MAX_BYTES."""
-    ids = small_tombstone_ids(spark, tomb_dir)
+def tombstone_set(log: DataFrame, tomb_dir: str) -> IdSet:
+    """The tombstone log ``log`` (a read of ``tomb_dir``) as an IdSet:
+    literals when small (the common case is EMPTY — zero join
+    operators), else the log itself, with the broadcast hint only
+    under TOMBSTONE_BROADCAST_MAX_BYTES."""
+    ids = small_tombstone_ids(log, tomb_dir)
     if ids is not None:
         return IdSet(ids)
     small = ifs.dir_bytes(tomb_dir) <= TOMBSTONE_BROADCAST_MAX_BYTES
-    return IdSet.wrap(spark.read.parquet(tomb_dir), broadcast=small)
+    return IdSet.wrap(log, broadcast=small)
 
 
-def small_tombstone_ids(
-    spark: SparkSession, tomb_dir: str, cap: int | None = None
-) -> list | None:
-    """Tombstoned ids as literals when the log is small (the common
-    case is EMPTY — zero join operators instead of a broadcast
-    anti-join per consuming action). None = oversized log; callers
-    keep the `_maybe_broadcast_tombstones` join path."""
+def small_tombstone_ids(log: DataFrame, tomb_dir: str, cap: int | None = None) -> list | None:
+    """Tombstoned ids of ``log`` (a read of ``tomb_dir``) as literals
+    when the log is small (the common case is EMPTY — zero join
+    operators instead of a broadcast anti-join per consuming action).
+    None = oversized log; callers keep the `_maybe_broadcast_tombstones`
+    join path."""
     if ifs.dir_bytes(tomb_dir) > TOMBSTONE_BROADCAST_MAX_BYTES:
         return None
-    df = spark.read.parquet(tomb_dir)
-    return inline_ids(df, df.columns[0], cap, narrow=True)  # plain scan
+    return inline_ids(log, log.columns[0], cap, narrow=True)  # plain scan
 
 
 def local_bucket_set(
@@ -617,6 +593,49 @@ def _auto_compact_reports(spark: SparkSession, index_dir: str) -> None:
         compact_reports(spark, index_dir)
 
 
+_THREAD_PROPERTIES = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+def _concurrently(sc, calls: list[Callable]) -> list:
+    """Run zero-argument calls at the same time, the first on this
+    thread and each other one on a worker thread, and wait for all of
+    them. Returns their futures, all done, in call order
+    (``f.result()`` re-raises a call's error). Spark local properties
+    are per thread, so each worker first takes this thread's job group
+    and job description: bench and UI attribution, and the step
+    labels, carry over to the jobs the workers run."""
+    from concurrent.futures import Future, ThreadPoolExecutor
+
+    props = {k: sc.getLocalProperty(k) for k in _THREAD_PROPERTIES}
+
+    def run(call):
+        for k, v in props.items():
+            sc.setLocalProperty(k, v)
+        return call()
+
+    here = Future()
+    with ThreadPoolExecutor(max_workers=max(1, len(calls) - 1)) as pool:
+        rest = [pool.submit(run, c) for c in calls[1:]]
+        try:
+            here.set_result(calls[0]())
+        except Exception as exc:  # noqa: BLE001 — reported like a worker's error
+            here.set_exception(exc)
+    return [here, *rest]
+
+
+@contextlib.contextmanager
+def _described(sc, label: str):
+    """Run the block under the job description ``label`` (this
+    thread's), restoring the previous one on any exit."""
+    key = "spark.job.description"
+    old = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(key, old)
+
+
 class StreamingDedup:
     """The streaming ingest-dedup SMT skeleton shared by DedupIndex
     (lsh_index), SemDeDupIndex (pq_index) and FingerprintDedupIndex
@@ -641,11 +660,18 @@ class StreamingDedup:
     4. CORPUS match of the self-survivors with the batch's own ids
        EXCLUDED from the candidate pool before any candidate join or
        top-k (the tombstone pattern);
-    5. write the drop report — rows (new id, mate id, score) for both
-       kinds, to ``reports/stream-<hex>`` with errorifexists — and
-       collect the dropped ids from the same materialized rows;
+    5. the drop report — rows (new id, mate id, score) for both kinds —
+       is persisted, and collecting its dropped ids fills that cache;
     6. the survivors = the records minus the dropped ids;
-    7. ``add`` the survivors not already in the index.
+    7. side by side: write the report to ``reports/stream-<hex>`` with
+       errorifexists, and ``add`` the survivors not already in the
+       index. Both finish before the call returns (callers read the new
+       report dir when it does); the first error fails the batch.
+
+    Each step runs under the job description ``smt:<module>:<step>``
+    (keyed, sign, guard, membership, self, match, report, add),
+    restored afterwards, so the UI and event log say which step a job
+    served. The job group is left alone: callers attribute jobs by it.
 
     Replay argument (exactly-once via an idempotent sink — Structured
     Streaming's contract). A replayed batch reaches the same verdict:
@@ -657,12 +683,19 @@ class StreamingDedup:
     stored bytes stay identical. This needs "present" to imply "fully
     appended": every plug-in's ``add`` commits its MEMBERSHIP table
     last, so a crash inside ``add`` leaves the id absent (its other
-    rows merely invisible) and the replay re-appends it. The dropped
-    ids are materialized (literals, or an eager localCheckpoint past
-    the cap) before ``add`` and never re-read an index table, so the
-    returned survivors — consumed lazily after this call — cannot be
-    refreshByPath-invalidated by the append into re-matching against
-    the post-append generation.
+    rows merely invisible) and the replay re-appends it. The report
+    and the append are independent, so a crash can leave either one
+    without the other. A report without its append is replayed as
+    before: the replay appends and writes a second report dir with the
+    same rows. An append whose report never landed (the report may now
+    land after ``add`` commits) leaves membership holding only the
+    original run's winners, so the replay reaches the same verdict and
+    writes the report itself. The dropped ids are materialized
+    (literals, or an eager localCheckpoint past the cap) before
+    ``add`` starts, and the collect that builds them computes every
+    partition of the persisted report, so neither the report write nor
+    the returned survivors — consumed lazily after this call — re-read
+    an index table while ``add`` appends to it.
 
     Bounded batches (ids within SMALL_ID_INLINE_CAP) hold the plug-in's
     derived frames behind eager localCheckpoints: downstream actions
@@ -724,12 +757,18 @@ class StreamingDedup:
         from pyspark import StorageLevel
 
         spark, mem = records.sparkSession, StorageLevel.MEMORY_AND_DISK
+        sc, name = spark.sparkContext, self.store.module.rsplit(".", 1)[-1]
+
+        def step(label: str):
+            return _described(sc, f"smt:{name}:{label}")
+
         _auto_compact_reports(spark, self.index_dir)
         b = SimpleNamespace(spark=spark, records=records, m=self.store.manifest(self.index_dir))
-        keyed, id_sql = self.keyed(b)
-        b.keyed = keyed.persist(mem)
-        b.rows = inline_rows(b.keyed, keyed.columns[: self.row_width], narrow=True)
-        b.ids = IdSet.from_rows(b.rows, b.keyed, keyed.columns[0])
+        with step("keyed"):
+            keyed, id_sql = self.keyed(b)
+            b.keyed = keyed.persist(mem)
+            b.rows = inline_rows(b.keyed, keyed.columns[: self.row_width], narrow=True)
+            b.ids = IdSet.from_rows(b.rows, b.keyed, keyed.columns[0])
         held = [b.keyed]
 
         def hold(df: DataFrame) -> DataFrame:
@@ -743,25 +782,41 @@ class StreamingDedup:
         fallback = None
         try:
             try:  # steps 2-4: a refusal here leaves the index untouched
-                self.sign(b, hold)
-                self.guard(b)
-                b.pre = IdSet.of(self.membership(b))
-                self_pairs = tracked(self.self_pairs(b))
-                self_drops = _winner_rule_drops(self_pairs, b.pre, *self.cols[:2])
-                held.append(self_drops.persist(mem))
-                pairs = tracked(self.match(b, IdSet.of(self_drops, self.cols[0])))
+                with step("sign"):
+                    self.sign(b, hold)
+                with step("guard"):
+                    self.guard(b)
+                with step("membership"):  # a literal-id probe is a pruned scan + InSet
+                    b.pre = IdSet.of(self.membership(b), narrow=b.ids.ids is not None)
+                with step("self"):
+                    self_pairs = tracked(self.self_pairs(b))
+                    self_drops = _winner_rule_drops(self_pairs, b.pre, *self.cols[:2])
+                    held.append(self_drops.persist(mem))
+                    drops = IdSet.of(self_drops, self.cols[0])
+                with step("match"):
+                    pairs = tracked(self.match(b, drops))
             except self.refusals as exc:
                 fallback = self.reroute(exc)
                 if fallback is None:
                     raise
             if fallback is None:  # steps 5-7
-                rep = self_drops.select(*self.cols).unionByName(pairs.select(*self.cols))
-                held.append(rep.persist(mem))
-                report = f"reports/stream-{uuid.uuid4().hex[:12]}"
-                rep.write.mode("errorifexists").parquet(os.path.join(self.index_dir, report))
-                dropped = IdSet.of(rep, self.cols[0], narrow=True)
+                with step("report"):
+                    rep = self_drops.select(*self.cols).unionByName(pairs.select(*self.cols))
+                    held.append(rep.persist(mem))
+                    dropped = IdSet.of(rep, self.cols[0])
                 survivors = dropped.drop_from(records, id_sql)
-                self.add(b, dropped.union(b.pre))
+                report = os.path.join(self.index_dir, f"reports/stream-{uuid.uuid4().hex[:12]}")
+
+                def write() -> None:
+                    with step("report"):
+                        rep.write.mode("errorifexists").parquet(report)
+
+                def add() -> None:
+                    with step("add"):
+                        self.add(b, dropped.union(b.pre))
+
+                for f in _concurrently(sc, [add, write]):
+                    f.result()
         finally:  # on every exit, or a failed batch leaks its caches
             for f in held:
                 f.unpersist()
@@ -902,19 +957,33 @@ class IndexStore:
     GC (``drop_generations``). The modules keep only what differs:
     signing/coding, match, and their streaming plug-in.
 
-    Append deltas are cast to the stored schema of the live generation
-    dir, cached per dir (``schemas``: a generation's schema is fixed
-    once written — deltas are cast TO it and rewrites open a NEW v{N} —
-    so the per-append footer read + file listing was pure repeated
-    driver latency, r11). ``build`` clears its index dir's entries: a
-    rebuild at the same path may store different types. No DataFrame
-    handles are cached: appends move part files into the live dir, so
-    a handle would serve a stale file listing."""
+    Every read of a stored table or tombstone log (``read``) is given
+    the schema the store caches for that generation dir (``schemas``),
+    so only a generation's first read in a process infers one (a
+    parquet footer job, 75–93 ms; a pinned read is no job and ~10 ms).
+    Append deltas are cast to the same cached schema. A generation's
+    schema is fixed once written: deltas are cast TO it and rewrites
+    open a NEW v{N}. A rebuild at the same path may store different
+    types, so ``build`` writes a fresh ``build`` id into the manifest
+    and the cache key is (dir, build id): a rebuild by this process or
+    any other reads afresh. A manifest without the id (written before
+    build ids existed) keys by dir alone.
+
+    ``gone`` caches a literal tombstone set per log dir and build id,
+    served again while the dir's parquet file listing (and the size
+    limits that made it literal) are unchanged.
+    ``delete`` adds uuid-named part files, so a delete by any process
+    misses the cache; an oversized (frame-form) log is never cached.
+    Both caches fill without a lock: threads racing on one key store
+    equal values, and a lost entry only costs one more read.
+    No DataFrame handles are cached: appends move part files into the
+    live dir, so a handle would serve a stale file listing."""
 
     def __init__(self, module: str, tables: tuple[StoredTable, ...],
                  required: tuple[str, ...], why: str):
         self.module, self.tables, self.why = module, tables, why
-        self.schemas: dict[str, object] = {}
+        self.schemas: dict[tuple[str, str | None], object] = {}
+        self.tombs: dict[tuple[str, str | None], tuple[tuple, IdSet]] = {}
         self.membership = tables[0]
         self.required = (*required, *(t.n_key for t in tables))
         self.dirs = (*(t.name for t in tables), "tombstones")
@@ -937,12 +1006,36 @@ class IndexStore:
         with _writer_lock(index_dir):
             yield self.manifest(index_dir)
 
-    def read(self, spark: SparkSession, index_dir: str, table: str, version: int) -> DataFrame:
-        return spark.read.parquet(_table_path(index_dir, table, version))
+    def read(self, spark: SparkSession, index_dir: str, table: str, m: dict) -> DataFrame:
+        """The generation ``m`` names of ``table`` — a declared table or
+        "tombstones" — read with its cached stored schema; the first
+        read of a generation infers it and fills the cache."""
+        path = _table_path(index_dir, table, m["version"])
+        key = (path, m.get("build"))
+        schema = self.schemas.get(key)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path)
+        df = spark.read.parquet(path)
+        self.schemas[key] = df.schema
+        return df
 
     def gone(self, spark: SparkSession, index_dir: str, m: dict) -> IdSet:
-        """The current tombstone log as an IdSet (tombstone_set)."""
-        return tombstone_set(spark, _table_path(index_dir, "tombstones", m["version"]))
+        """The current tombstone log as an IdSet (tombstone_set): the
+        cached literal set while the log's file listing, and the two
+        limits that chose its form (read at call time, like every cap
+        here), are unchanged. The listing is taken before the read, so
+        a delete landing in between only makes the next call read
+        again."""
+        tomb_dir = _table_path(index_dir, "tombstones", m["version"])
+        key = (tomb_dir, m.get("build"))
+        state = (ifs.parquet_files(tomb_dir), SMALL_ID_INLINE_CAP, TOMBSTONE_BROADCAST_MAX_BYTES)
+        hit = self.tombs.get(key)
+        if hit is not None and hit[0] == state:
+            return hit[1]
+        gone = tombstone_set(self.read(spark, index_dir, "tombstones", m), tomb_dir)
+        if gone.ids is not None:
+            self.tombs[key] = (state, gone)
+        return gone
 
     def live_ids(self, spark: SparkSession, index_dir: str, m: dict,
                  gone: DataFrame | None = None) -> DataFrame:
@@ -951,8 +1044,9 @@ class IndexStore:
         i = m["id_col"]
         if gone is None:
             tomb_dir = _table_path(index_dir, "tombstones", m["version"])
-            gone = _maybe_broadcast_tombstones(spark.read.parquet(tomb_dir), tomb_dir)
-        ids = self.read(spark, index_dir, self.membership.name, m["version"]).select(i)
+            tomb = self.read(spark, index_dir, "tombstones", m)
+            gone = _maybe_broadcast_tombstones(tomb, tomb_dir)
+        ids = self.read(spark, index_dir, self.membership.name, m).select(i)
         return ids.distinct().join(gone, i, "left_anti")
 
     def _parted(self, df: DataFrame, t: StoredTable, m: dict) -> DataFrame:
@@ -960,17 +1054,16 @@ class IndexStore:
 
     def build(self, index_dir: str, m: dict, fill) -> None:
         """Generation v1. Under the writer lock: clear a crashed build's
-        debris and this dir's cached schemas, then ``fill(write)`` —
-        the module's code — writes each table through ``write(name,
-        df)`` (bucketed and spread by _spread_for_write; returns the
-        stored read-back) and may add manifest fields to ``m``. The
-        store then writes the empty tombstone log (the membership
-        table's stored id type) and commits ``m`` as version 1."""
+        debris and give ``m`` a fresh ``build`` id (the schema and
+        tombstone caches key by it), then ``fill(write)`` — the
+        module's code — writes each table through ``write(name, df)``
+        (bucketed and spread by _spread_for_write; returns the stored
+        read-back) and may add manifest fields to ``m``. The store then
+        writes the empty tombstone log (the membership table's stored
+        id type) and commits ``m`` as version 1."""
         with _writer_lock(index_dir):
             _clear_manifestless_debris(index_dir, self.dirs)
-            root = os.path.join(index_dir, "")
-            for k in [k for k in self.schemas if k.startswith(root)]:
-                del self.schemas[k]
+            m["build"] = uuid.uuid4().hex
             stored = {}
 
             def write(name: str, df: DataFrame) -> DataFrame:
@@ -978,7 +1071,7 @@ class IndexStore:
                 path = _table_path(index_dir, name, 1)
                 _spread_for_write(self._parted(df, t, m), m[t.n_key], t.part, m["id_col"]) \
                     .write.mode("errorifexists").partitionBy(t.part).parquet(path)
-                stored[name] = df.sparkSession.read.parquet(path)
+                stored[name] = self.read(df.sparkSession, index_dir, name, {**m, "version": 1})
                 return stored[name]
 
             fill(write)
@@ -999,52 +1092,36 @@ class IndexStore:
         reads as absent, so a replay re-appends it ("present" implies
         "fully appended" — the StreamingDedup replay argument)."""
         order = (*self.tables[1:], self.membership)
-        self._stage_then_move(spark, index_dir, m["version"], [
+        self._stage_then_move(spark, index_dir, m, [
             (self._parted(deltas[t.name], t, m).repartition(m[t.n_key], t.part), t.name, t.part)
             for t in order if t.name in deltas
         ])
 
-    def _stage(self, df: DataFrame, index_dir: str, table: str, version: int,
+    def _stage(self, df: DataFrame, index_dir: str, table: str, m: dict,
                part: str | None) -> tuple[str, str]:
         """Cast to the stored schema (widening only —
         _cast_to_stored_schema) and write to a uuid staging dir, with
         the live table's hive layout. Returns (staging, dest)."""
-        dest = _table_path(index_dir, table, version)
-        schema = self.schemas.get(dest)
-        if schema is None:
-            schema = self.schemas[dest] = df.sparkSession.read.parquet(dest).schema
+        schema = self.read(df.sparkSession, index_dir, table, m).schema
         df = _cast_to_stored_schema(df, schema, table, partition_col=part)
         staging = os.path.join(index_dir, ".staging", uuid.uuid4().hex[:12])
         writer = df.write.mode("errorifexists")
         (writer.partitionBy(part) if part else writer).parquet(staging)
-        return staging, dest
+        return staging, _table_path(index_dir, table, m["version"])
 
-    def _stage_then_move(self, spark: SparkSession, index_dir: str, version: int,
+    def _stage_then_move(self, spark: SparkSession, index_dir: str, m: dict,
                          deltas: list[tuple[DataFrame, str, str | None]]) -> None:
         """Stage each (delta, table, part) — the staging writes overlap
-        in a thread pool (guide §2.6: each is a small job whose tail
-        leaves the pool idle, and the deltas have no data dependence) —
-        then move their part files into the live dirs IN LIST ORDER
-        (the crash-ordering contract). The non-atomic window narrows
-        from a full Spark write to a handful of renames. Job-group and
-        description properties are copied into the workers so bench/UI
-        attribution is unchanged; if any staging fails, none commits."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        sc = spark.sparkContext
-        props = {
-            k: sc.getLocalProperty(k)
-            for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-        }
-
-        def stage(df, table, part):
-            for k, v in props.items():
-                if v is not None:
-                    sc.setLocalProperty(k, v)
-            return self._stage(df, index_dir, table, version, part)
-
-        with ThreadPoolExecutor(max_workers=len(deltas)) as pool:
-            futures = [pool.submit(stage, *d) for d in deltas]
+        on threads (_concurrently; guide §2.6: each is a small job whose
+        tail leaves the pool idle, and the deltas have no data
+        dependence) — then move their part files into the live dirs IN
+        LIST ORDER (the crash-ordering contract). The non-atomic window
+        narrows from a full Spark write to a handful of renames. If any
+        staging fails, none commits."""
+        futures = _concurrently(spark.sparkContext, [
+            functools.partial(self._stage, df, index_dir, table, m, part)
+            for df, table, part in deltas
+        ])
         errors = [f.exception() for f in futures if f.exception() is not None]
         if errors:  # sweep what staged (the next lock acquisition would too)
             for f in futures:
@@ -1074,7 +1151,7 @@ class IndexStore:
         streaming SMTs set to the batch's own ids so a replayed batch
         matches exactly the pool the original run saw."""
         t = next(t for t in self.tables if t.name == table)
-        df = self.read(spark, index_dir, table, m["version"])
+        df = self.read(spark, index_dir, table, m)
         if parts is not None:
             df = df.where(F.col(t.part).isin(parts))
         for ids in filter(None, drop):
@@ -1087,11 +1164,14 @@ class IndexStore:
         holds, reading only its partitions ``parts`` — by default the
         ids' own id-hash buckets (exact whatever the content: the
         partition key is an id hash); pq passes the batch's coded
-        cells. Literal ids make it ONE narrow job."""
+        cells. An id stored in several rows comes back once per row:
+        the consumer dedups (ids_from_rows, or IdSet.from_rows past the
+        cap), so literal ids make it ONE narrow job — a pruned scan and
+        an InSet filter, no aggregate."""
         t, i = self.membership, m["id_col"]
         if parts is None:
             parts = id_buckets(spark, ids, m[t.n_key])
-        return ids.keep_in(self.scan(spark, index_dir, m, t.name, parts).select(i), i).distinct()
+        return ids.keep_in(self.scan(spark, index_dir, m, t.name, parts).select(i), i)
 
     def delete(self, spark: SparkSession, index_dir: str, ids) -> int:
         """Tombstone ids so they stop matching immediately (match and
@@ -1100,8 +1180,8 @@ class IndexStore:
         Returns the number newly tombstoned after de-dup against the
         existing log."""
         with self.writing(index_dir) as m:
-            v, i = m["version"], m["id_col"]
-            existing = self.read(spark, index_dir, "tombstones", v)
+            i = m["id_col"]
+            existing = self.read(spark, index_dir, "tombstones", m)
             if isinstance(ids, DataFrame):
                 fresh = ids.select(F.col(ids.columns[0]).alias(i))
             else:
@@ -1109,7 +1189,7 @@ class IndexStore:
             fresh = fresh.distinct().join(existing, i, "left_anti")
             n_new = fresh.count()
             if n_new:
-                self._stage_then_move(spark, index_dir, v, [(fresh, "tombstones", None)])
+                self._stage_then_move(spark, index_dir, m, [(fresh, "tombstones", None)])
             return n_new
 
     def drop_generations(self, index_dir: str, keep: int) -> dict:
@@ -1163,7 +1243,7 @@ class IndexStore:
             def compacted(m, gone):  # each stored table's compact row rule
                 out = {}
                 for t in self.tables:
-                    df = self.read(spark, index_dir, t.name, v)
+                    df = self.read(spark, index_dir, t.name, m)
                     df = df.dropDuplicates([i]) if t.by_id else df.distinct()
                     out[t.name] = df.join(gone, i, "left_anti")
                 return out, m

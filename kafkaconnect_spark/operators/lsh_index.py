@@ -171,14 +171,15 @@ def _check_params(manifest: dict, num_hashes, bands, n) -> tuple[int, int, int]:
 def _tables(spark: SparkSession, index_dir: str) -> tuple[DataFrame, DataFrame, dict]:
     m = STORE.manifest(index_dir)
     return (
-        STORE.read(spark, index_dir, "shingles", m["version"]),
-        STORE.read(spark, index_dir, "bands", m["version"]),
+        STORE.read(spark, index_dir, "shingles", m),
+        STORE.read(spark, index_dir, "bands", m),
         m,
     )
 
 
 def _tombstones(spark: SparkSession, index_dir: str, version: int) -> DataFrame:
-    return STORE.read(spark, index_dir, "tombstones", version)
+    m = {**STORE.manifest(index_dir), "version": version}
+    return STORE.read(spark, index_dir, "tombstones", m)
 
 
 def build(

@@ -66,6 +66,8 @@ across many appends.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -78,6 +80,7 @@ from kafkaconnect_spark.operators.index_base import (  # noqa: F401 — re-expor
     _table_path,
     as_id_set,
     compact_reports,
+    ids_from_rows,
     partition_values,
 )
 
@@ -237,7 +240,7 @@ def build(
 
 def _codes_table(spark: SparkSession, index_dir: str) -> tuple[DataFrame, dict]:
     m = STORE.manifest(index_dir)
-    return STORE.read(spark, index_dir, "codes", m["version"]), m
+    return STORE.read(spark, index_dir, "codes", m), m
 
 
 def match(
@@ -379,7 +382,7 @@ class _SemDeDup(StreamingDedup):
     hist = hist_version = None
 
     def keyed(self, b):
-        b.codes = STORE.read(b.spark, self.index_dir, "codes", b.m["version"])
+        b.codes = STORE.read(b.spark, self.index_dir, "codes", b.m)
         id_type = b.codes.schema[b.m["id_col"]].dataType
         rid = f"cast(value.{self.id_field} as {id_type.simpleString()})"
         return b.records.select(
@@ -398,16 +401,26 @@ class _SemDeDup(StreamingDedup):
 
     def guard(self, b):
         import warnings
-        from collections import Counter
 
-        sides = b.probes.select(F.lit("p").alias("s"), "cell").unionByName(
-            b.coded.select(F.lit("b").alias("s"), "cell")
+        none = F.lit(None)
+        sides = b.probes.select(F.lit("p").alias("s"), "cell", none.alias("id")).unionByName(
+            b.coded.select(F.lit("b").alias("s"), "cell", F.col(b.m["id_col"]).alias("id"))
         )
-        # bounded batch: ONE narrow collect counted driver-side (a
-        # groupBy materializes an AQE shuffle stage as its own job)
-        hist = Counter(map(tuple, sides.collect())) if b.rows is not None else {
-            (r[0], r[1]): r[2] for r in sides.groupBy("s", "cell").count().collect()
-        }
+        b.coded_ids = None
+        if b.rows is not None:
+            # bounded batch: ONE narrow collect, counted driver-side (a
+            # groupBy materializes an AQE shuffle stage as its own job).
+            # Its coded (id, cell) rows and the ids of empty vectors
+            # ("e") also serve add's delta histogram and empty skip.
+            empty = b.vecs.where(F.size(b.m["vec_col"]) == 0).select(
+                F.lit("e").alias("s"), none.alias("cell"), F.col("query_id").alias("id")
+            )
+            rows = sides.unionByName(empty).collect()
+            hist = Counter((s, c) for s, c, _i in rows if s != "e")
+            b.coded_ids = [(i, c) for s, c, i in rows if s == "b"]
+            b.empty_ids = [(i,) for s, _c, i in rows if s == "e"]
+        else:
+            hist = {(r[0], r[1]): r[2] for r in sides.groupBy("s", "cell").count().collect()}
         # membership probes the codes of the batch's own coded cells
         # (manifest quantizers are deterministic, so a redelivered id
         # with identical content re-codes to the same cell and is always
@@ -470,19 +483,33 @@ class _SemDeDup(StreamingDedup):
 
     def add(self, b, skip):
         # the index codes only non-empty vectors (build, append) — the
-        # delta skips the (typically empty) set of empty-vector ids too
-        empty = IdSet.of(b.vecs.where(F.size(b.m["vec_col"]) == 0), "query_id", narrow=True)
+        # delta skips the (typically empty) set of empty-vector ids too.
+        # With the guard's rows and literal ids, the empty set and the
+        # delta's cell histogram come from those rows (a null id stays
+        # in the delta, as in the anti-join drop_from applies);
+        # otherwise both are cluster plans.
+        rows = b.coded_ids if skip.ids is not None else None
+        empty_ids = None if rows is None else ids_from_rows(b.empty_ids)
+        counts = None
+        if empty_ids is None:
+            empty = IdSet.of(b.vecs.where(F.size(b.m["vec_col"]) == 0), "query_id", narrow=True)
+        else:
+            empty, out = IdSet(empty_ids), {*skip.ids, *empty_ids}
+            counts = Counter(c for i, c in rows if i is None or i not in out)
         delta = skip.union(empty).drop_from(b.coded, b.m["id_col"])
-        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+        if counts is None:
+            delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         # a failed append must not leave a histogram that UNDERCOUNTS
         # the stored codes (it would void the guard's upper bound)
         hist, self.hist = self.hist, None
         with STORE.writing(self.index_dir) as m:
             STORE.append(b.spark, self.index_dir, m, {"codes": delta})
-        for c, n in _cell_hist(delta).items():
+        if counts is None:
+            counts = _cell_hist(delta)
+            delta.unpersist()
+        for c, n in counts.items():
             hist[c] = hist.get(c, 0) + n
         self.hist = hist
-        delta.unpersist()
 
 
 def streaming_semdedup_transform(

@@ -10,15 +10,22 @@ two id-set regimes and under injected crashes.
   two table renames inside add must replay to the clean run's state:
   a later near-duplicate of the crashed doc is dropped, and every
   stored table holds the clean run's distinct rows.
+- One bounded batch runs fewer Spark jobs than before, touches no
+  session conf, labels its jobs by step, and runs beside another
+  SMT's batch on a second thread with the sequential answer.
+- The store's caches: a delete through another store reaches the next
+  batch, and a second batch infers no stored schema.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
 
 from kafkaconnect_spark.operators import (
     hamming_index,
@@ -226,9 +233,10 @@ def test_crash_replay_matches_the_clean_run(
     assert _stored_rows(spark, kind, d) == clean_rows
 
 
-# Spark jobs of one b1 batch per SMT when each match hand-wrote its own
-# stored-table reads and partition collects (commit 7fdbe46)
-_JOBS_BEFORE = {"lsh": 40, "pq": 36, "hamming": 32}
+# Spark jobs of one b1 batch per SMT before pinned-schema reads, the
+# cached tombstone set, one-job narrow collects and the aggregate-free
+# membership probe (commit 7d6f5d8); every SMT must now run fewer
+_JOBS_BEFORE = {"lsh": 40, "pq": 34, "hamming": 31}
 
 
 @pytest.mark.parametrize("kind", KINDS)
@@ -243,7 +251,7 @@ def test_one_bounded_batch_runs_no_more_jobs(spark, tmp_path, kind):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert {r["value"][0] for r in out.collect()} == {20, 30}
-    assert 0 < jobs <= _JOBS_BEFORE[kind]
+    assert 0 < jobs < _JOBS_BEFORE[kind]
 
 
 def _exchanges(df) -> list[str]:
@@ -266,9 +274,10 @@ def _exchanges(df) -> list[str]:
 
 @pytest.mark.parametrize("kind", KINDS)
 def test_narrow_collects_plan_no_exchange(spark, tmp_path, monkeypatch, kind):
-    """inline_rows(narrow=True) drops AQE for its collect, which is only
-    safe on an exchange-free plan: every such frame of one batch must
-    plan without an Exchange."""
+    """inline_rows(narrow=True) coalesces to one partition before its
+    limit, which runs the frame's last stage as a single task: that is
+    only right on an exchange-free plan, so every such frame of one
+    batch must plan without an Exchange."""
     d = _build(spark, tmp_path, kind)
     real, seen = index_base.inline_rows, []
 
@@ -305,3 +314,111 @@ def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch):
         _run(spark, "lsh", d, "b1")
     assert tagged  # the within-batch verify's candidate cache
     assert [f.storageLevel for f in tagged] == [StorageLevel.NONE] * len(tagged)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_a_batch_sets_no_session_conf(spark, tmp_path, monkeypatch, kind):
+    """Session confs are shared by every thread of the driver, so a
+    batch must not toggle one (two pipelines run their SMT chains on
+    their own threads)."""
+    d = _build(spark, tmp_path, kind)
+    calls = []
+    real = type(spark.conf).set
+
+    def spy(self, key, value=None):
+        calls.append(key)
+        return real(self, key, value)
+
+    monkeypatch.setattr(type(spark.conf), "set", spy)
+    assert _run(spark, kind, d, "b1") == {20, 30}
+    assert calls == []
+
+
+def _run_with_report(spark, kind, d, part):
+    return _run(spark, kind, d, part), _report_rows(spark, d)
+
+
+def test_two_smts_on_two_threads_match_sequential_runs(spark, tmp_path):
+    """An lsh batch and a pq batch running at once on two threads, over
+    separate index dirs, give the survivors and report rows of the
+    same batches run one after the other."""
+    seq = {k: _run_with_report(spark, k, _build(spark, tmp_path / "seq", k), "b1")
+           for k in ("lsh", "pq")}
+    dirs = {k: _build(spark, tmp_path / "par", k) for k in ("lsh", "pq")}
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = {k: pool.submit(_run_with_report, spark, k, d, "b1") for k, d in dirs.items()}
+    assert {k: f.result() for k, f in futures.items()} == seq
+    assert seq["lsh"][0] == seq["pq"][0] == {20, 30}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_each_step_labels_its_jobs(spark, tmp_path, monkeypatch, kind):
+    """Every step runs under the job description smt:<module>:<step>,
+    the report write and add's staging writes on their threads too,
+    and the caller's description is back when the batch returns."""
+    d, sc = _build(spark, tmp_path, kind), spark.sparkContext
+    key, seen, writes = "spark.job.description", [], []
+    real_rows, real_write = index_base.inline_rows, DataFrameWriter.parquet
+
+    def rows_spy(df, cols, cap=None, narrow=False):
+        seen.append(sc.getLocalProperty(key))
+        return real_rows(df, cols, cap, narrow)
+
+    def write_spy(self, path, *a, **k):
+        writes.append((os.path.relpath(path, d).split(os.sep)[0], sc.getLocalProperty(key)))
+        return real_write(self, path, *a, **k)
+
+    monkeypatch.setattr(index_base, "inline_rows", rows_spy)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_spy)
+    sc.setLocalProperty(key, "caller")
+    try:
+        assert _run(spark, kind, d, "b1") == {20, 30}
+        assert sc.getLocalProperty(key) == "caller"
+    finally:
+        sc.setLocalProperty(key, None)
+    label = f"smt:{kind}_index:"
+    assert {label + s for s in ("keyed", "membership", "self", "report")} <= set(seen)
+    assert all(x.startswith(label) for x in seen)
+    assert sorted(set(writes)) == [(".staging", label + "add"), ("reports", label + "report")]
+
+
+def _other_store(kind) -> index_base.IndexStore:
+    """A second store over the same tables: another process's view."""
+    st = {"lsh": lsh_index, "pq": pq_index, "hamming": hamming_index}[kind].STORE
+    return index_base.IndexStore(st.module, st.tables, (), st.why)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_a_delete_by_another_store_reaches_the_next_batch(spark, tmp_path, kind):
+    """The tombstone set is cached while the log's file listing holds:
+    a delete through a second store between two batches adds a part
+    file, so the second batch reads the log again. Doc 30, appended by
+    the first batch, is deleted; its near-duplicate 40 then survives."""
+    d = _build(spark, tmp_path, kind)
+    assert _run(spark, kind, d, "b1") == {20, 30}
+    assert _other_store(kind).delete(spark, d, [30]) == 1
+    assert _run(spark, kind, d, "b2") == {40}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_a_second_batch_infers_no_stored_schema(spark, tmp_path, monkeypatch, kind):
+    """After a first batch, each stored table and tombstone log read by
+    the next batch is given its cached schema: no parquet read under
+    the index dir runs schema inference (a job per read)."""
+    d = _build(spark, tmp_path, kind)
+    assert _run(spark, kind, d, "b1") == {20, 30}
+    inferred, real_schema, real_parquet = [], DataFrameReader.schema, DataFrameReader.parquet
+
+    def schema(self, s):
+        self._pinned = True
+        return real_schema(self, s)
+
+    def parquet(self, *paths, **k):
+        if not getattr(self, "_pinned", False):
+            inferred.extend(p for p in paths if p.startswith(os.path.join(d, "")))
+        return real_parquet(self, *paths, **k)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    assert _run(spark, kind, d, "b2") == set()
+    assert inferred == []

@@ -1,7 +1,7 @@
 """The generational index store (operators/index_base.IndexStore)
 behind the three persisted indexes: pinned layout keys in the
-manifest, the stored-schema cache across a same-path rebuild, and the
-bucket count pq's rewrites re-spread at."""
+manifest, the stored-schema cache across a same-path rebuild (by this
+store or another), and the bucket count pq's rewrites re-spread at."""
 
 from __future__ import annotations
 
@@ -103,3 +103,33 @@ def test_pq_rewrites_spread_at_the_build_n_buckets(spark, tmp_path, monkeypatch)
     pq_index.retrain(spark, d, _vecs(spark, range(12)), train_rounds=1)
     assert seen == [("cell", 3), ("cell", 3)]
     assert pq_index._read_manifest(d)["n_buckets"] == 3
+
+
+def _other_store(mod) -> index_base.IndexStore:
+    """A second store over the same tables: another process's view."""
+    st = mod.STORE
+    return index_base.IndexStore(st.module, st.tables, (), st.why)
+
+
+def test_a_rebuild_by_another_store_is_read_with_its_new_schema(spark, tmp_path, monkeypatch):
+    """Stored reads use the store's cached schema, keyed by the
+    manifest's build id: an index rebuilt at the same path with
+    another id type by a second store (another process, whose rebuild
+    cannot clear this store's cache) is read with the new type by
+    this store's next scan and probe."""
+    d, first = str(tmp_path / "ham"), hamming_index.STORE
+    hamming_index.build(_hashes(spark, [1, 2], "int"), d)
+    m = first.manifest(d)
+    assert first.scan(spark, d, m, "hashes", None).schema["doc_id"].dataType.simpleString() == "int"
+    shutil.rmtree(d)
+    monkeypatch.setattr(hamming_index, "STORE", _other_store(hamming_index))
+    hamming_index.build(_hashes(spark, [1, 2, 3], "bigint"), d)
+    monkeypatch.undo()
+    m = first.manifest(d)
+    scanned = first.scan(spark, d, m, "hashes", None)
+    assert scanned.schema["doc_id"].dataType.simpleString() == "bigint"
+    assert {r.doc_id for r in scanned.collect()} == {1, 2, 3}
+    probed = first.probe(spark, d, m, index_base.IdSet([2, 3, 4]))
+    assert probed.schema["doc_id"].dataType.simpleString() == "bigint"
+    assert {r.doc_id for r in probed.collect()} == {2, 3}
+

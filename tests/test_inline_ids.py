@@ -200,11 +200,15 @@ def test_small_tombstone_ids_inline_and_size_gate(spark, tmp_path, monkeypatch):
     lsh_index.build(docs, d, num_hashes=8, bands=4, n=3, threshold=0.2)
     v = lsh_index._read_manifest(d)["version"]
     tomb_dir = index_base._table_path(d, "tombstones", v)
-    assert index_base.small_tombstone_ids(spark, tomb_dir) == []  # empty log
+
+    def log():
+        return spark.read.parquet(tomb_dir)
+
+    assert index_base.small_tombstone_ids(log(), tomb_dir) == []  # empty log
     lsh_index.delete(spark, d, [3, 5])
-    assert index_base.small_tombstone_ids(spark, tomb_dir) == [3, 5]
+    assert index_base.small_tombstone_ids(log(), tomb_dir) == [3, 5]
     monkeypatch.setattr(index_base, "TOMBSTONE_BROADCAST_MAX_BYTES", 0)
-    assert index_base.small_tombstone_ids(spark, tomb_dir) is None
+    assert index_base.small_tombstone_ids(log(), tomb_dir) is None
 
 
 def test_stage_pair_then_move_commits_first_table_first(spark, tmp_path, monkeypatch):
