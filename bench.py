@@ -1,6 +1,7 @@
 """Headline benchmark: runs the engine's flagship queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[N] (N =
+session.cpus(): $SPARK_GRAFT_CPUS, else this process's cores) and
+prints ONE JSON line.
 
 Each query is forced with a noop sink write (full execution, no
 driver-side collect). Metric = total wall seconds across queries.
@@ -17,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafkaconnect_spark.queries import QUERY_CATALOG, orders_profile_approx
-from kafkaconnect_spark.session import get_spark
+from kafkaconnect_spark.session import cpus, get_spark
 
 # bench-only queries: in the headline set for a perf number but NOT in
 # the driver catalog (approximate results have no value-hash oracle;
@@ -230,7 +231,6 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:  # path merely contains 'sf' (e.g. /mnt/sfdata)
@@ -243,7 +243,7 @@ def main() -> None:
     # of jobs and stages survives until the end-of-run fetch.
     spark = get_spark(
         "kafkaconnect-spark-bench",
-        master=f"local[{cpus}]",
+        master=f"local[{cpus()}]",
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": "0",
@@ -373,7 +373,7 @@ def main() -> None:
         stage_metrics = None
     if stage_metrics:
         out["stage_metrics"] = stage_metrics
-    # ladder mode (tools/scale_ladder.py): SPARK_GRAFT_BENCH_OUT
+    # ladder mode (python tools/scale_ladder.py headline): SPARK_GRAFT_BENCH_OUT
     # redirects the full record and suppresses vs_prev — a generated-
     # data run must neither overwrite the committed driver-data
     # baseline nor be compared against it
@@ -620,7 +620,7 @@ def _calibrate(spark) -> dict:
         # recorded so cross-round normalization is only trusted
         # between like-for-like runs (an 8-cpu smoke's shuffle probe
         # is not comparable to the 32-cpu round bench)
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": cpus(),
     }
 
 

@@ -209,6 +209,29 @@ def inline_rows(
     return [tuple(r) for r in rows]
 
 
+def plans_exchange(df: DataFrame) -> bool:
+    """Whether computing ``df`` runs an Exchange. Its physical plan is
+    walked through AQE wrappers and into every cache whose buffers are
+    not built yet: reading a persisted but unmaterialized aggregate
+    still runs that aggregate's shuffle. A built cache or checkpoint
+    is a leaf."""
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if "Exchange" in name:
+            return True
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name == "InMemoryTableScanExec":
+            rel = node.relation()
+            if not rel.cacheBuilder().isCachedColumnBuffersLoaded():
+                todo.append(rel.cachedPlan())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
 def ids_from_rows(rows: list[tuple], idx: int = 0) -> list | None:
     """The distinct non-null values of column ``idx`` of collected rows
     as sorted literals, or None when a value is not an int/str id type
@@ -767,7 +790,9 @@ class StreamingDedup:
         with step("keyed"):
             keyed, id_sql = self.keyed(b)
             b.keyed = keyed.persist(mem)
-            b.rows = inline_rows(b.keyed, keyed.columns[: self.row_width], narrow=True)
+            # text-mode fingerprints key by a groupBy: collect those limit-first
+            narrow = not plans_exchange(b.keyed)
+            b.rows = inline_rows(b.keyed, keyed.columns[: self.row_width], narrow=narrow)
             b.ids = IdSet.from_rows(b.rows, b.keyed, keyed.columns[0])
         held = [b.keyed]
 

@@ -21,7 +21,15 @@ import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def cpus() -> int:
+    """The core count the engine plans for: ``SPARK_GRAFT_CPUS`` when it
+    is set, else the cores this process may run on (etlbench's rule).
+    The one reader of that variable."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = cpus()
 
 _SIZE_SUFFIX = {"": 1, "b": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
@@ -51,7 +59,6 @@ def get_spark(
     On a real cluster, ``master`` comes from the environment /
     spark-submit; tests pass ``local[N]`` explicitly.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config(
@@ -78,7 +85,7 @@ def get_spark(
     if master:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{cpus()}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -71,9 +71,10 @@ _VEC = {
     "b1": [(10, _unit(0)), (20, _unit(4)), (21, _unit(4)), (30, _unit(5))],
     "b2": [(40, _unit(5))],
 }
-_ROWS = {"lsh": _TEXT, "pq": _VEC, "hamming": _HASH}
+_ROWS = {"lsh": _TEXT, "pq": _VEC, "hamming": _HASH, "hamming_text": _TEXT}
 _SCHEMA = {
     "lsh": "doc_id long, text string",
+    "hamming_text": "doc_id long, text string",
     "pq": "vec_id long, embedding array<double>",
     "hamming": "doc_id long, phash string",
 }
@@ -101,6 +102,10 @@ def _build(spark, root, kind) -> str:
         ).write.parquet(d + "_store")
         pq_index.build(corpus, d, n_cells=4, n_sub=2, n_codes=4, dim=DIM)
     else:
+        if kind == "hamming_text":
+            from kafkaconnect_spark.operators.dedup import simhash_hex64
+
+            corpus = simhash_hex64(corpus).withColumnRenamed("simhash_hex", "phash")
         hamming_index.build(corpus, d, bits=64, bands=8, max_hamming=4)
     return d
 
@@ -112,6 +117,8 @@ def _transform(kind, d):
         return pq_index.streaming_semdedup_transform(
             d, d + "_store", threshold=0.999, n_probe=4, rerank=20
         )
+    if kind == "hamming_text":
+        return hamming_index.streaming_fingerprint_dedup_transform(d, text_field="text")
     return hamming_index.streaming_fingerprint_dedup_transform(d, hash_field="phash")
 
 
@@ -255,9 +262,11 @@ def test_one_bounded_batch_runs_no_more_jobs(spark, tmp_path, kind):
 
 
 def _exchanges(df) -> list[str]:
-    """Exchange nodes of df's physical plan above its cache and
-    checkpoint leaves. An AQE wrapper is looked through: Spark also
-    wraps a plain scan of an AQE-planned cache, with no exchange."""
+    """Exchange nodes of df's physical plan above its checkpoint and
+    built-cache leaves. An AQE wrapper is looked through: Spark also
+    wraps a plain scan of an AQE-planned cache, with no exchange. A
+    cache whose buffers are not built yet is looked into, since its
+    first read runs the cached plan."""
     found, todo = [], [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
@@ -265,6 +274,10 @@ def _exchanges(df) -> list[str]:
         if name == "AdaptiveSparkPlanExec":
             todo.append(node.executedPlan())
             continue
+        if name == "InMemoryTableScanExec":
+            rel = node.relation()
+            if not rel.cacheBuilder().isCachedColumnBuffersLoaded():
+                todo.append(rel.cachedPlan())
         if "Exchange" in name:
             found.append(name)
         kids = node.children()
@@ -272,23 +285,25 @@ def _exchanges(df) -> list[str]:
     return found
 
 
-@pytest.mark.parametrize("kind", KINDS)
+@pytest.mark.parametrize("kind", KINDS + ("hamming_text",))
 def test_narrow_collects_plan_no_exchange(spark, tmp_path, monkeypatch, kind):
     """inline_rows(narrow=True) coalesces to one partition before its
     limit, which runs the frame's last stage as a single task: that is
     only right on an exchange-free plan, so every such frame of one
-    batch must plan without an Exchange."""
+    batch must plan without an Exchange. The text-mode fingerprint SMT
+    keys its batch by SimHash's groupBy(id), which is persisted but not
+    yet built when its rows are collected."""
     d = _build(spark, tmp_path, kind)
     real, seen = index_base.inline_rows, []
 
     def spy(df, cols, cap=None, narrow=False):
-        if narrow:
-            seen.append(_exchanges(df))
+        seen.append((narrow, _exchanges(df)))
         return real(df, cols, cap, narrow)
 
     monkeypatch.setattr(index_base, "inline_rows", spy)
     assert _run(spark, kind, d, "b1") == {20, 30}
-    assert seen and seen == [[]] * len(seen)
+    assert seen[0][0] == (kind != "hamming_text")  # the keyed collect
+    assert [ex for narrow, ex in seen if narrow] == [[]] * sum(n for n, _ in seen)
 
 
 def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch):

@@ -21,7 +21,8 @@ Default out_dir: /root/repo/.data/gen_sf{sf} (gitignored).
 
 NOT a replacement for the driver data — correctness gates still run
 on /root/testdata; this exists purely so bench ratios at 10× scale
-are measured numbers (tools/scale_ladder.py).
+are measured numbers (python tools/scale_ladder.py <section>, which
+generates what its preset row needs through gen()).
 """
 
 from __future__ import annotations

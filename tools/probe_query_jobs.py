@@ -28,26 +28,19 @@ def _jobs(spark):
         return json.loads(r.read().decode())
 
 
-def _ts(s: str) -> float:
-    # REST timestamps: 2026-08-17T12:34:56.789GMT
-    from datetime import datetime
-
-    return datetime.strptime(s.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z").timestamp()
-
-
 def main() -> int:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else "/root/testdata/sf0.1"
     cold = "--cold" in sys.argv
 
+    from etlbench.trace import job_gaps, rest_time
     from kafkaconnect_spark.operators.dedup import release_cached
     from kafkaconnect_spark.queries import QUERY_CATALOG
-    from kafkaconnect_spark.session import get_spark
+    from kafkaconnect_spark.session import cpus, get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
         "kc-probe-jobs",
-        master=f"local[{cpus}]",
+        master=f"local[{cpus()}]",
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0",
                     "spark.ui.retainedJobs": "100000",
                     "spark.ui.retainedStages": "100000"},
@@ -71,15 +64,12 @@ def main() -> int:
     jobs.sort(key=lambda j: j["jobId"])
     rows = []
     for j in jobs:
-        t0, t1 = _ts(j["submissionTime"]), _ts(j["completionTime"])
+        t0, t1 = rest_time(j["submissionTime"]), rest_time(j["completionTime"])
         rows.append((j["jobId"], t0, t1, t1 - t0,
                      (j.get("name") or j.get("description") or "")[:110]))
-    total_job = sum(r[3] for r in rows)
-    gaps = []
-    for a, b in zip(rows, rows[1:]):
-        gaps.append(b[1] - a[2])
+    total_job, gaps = job_gaps([{"start": r[1], "end": r[2]} for r in rows])
     print(f"\n{len(rows)} jobs, job-time total {total_job:.2f}s, "
-          f"inter-job gap total {sum(gaps):.2f}s  (wall {wall:.2f}s)")
+          f"inter-job gap total {gaps:.2f}s  (wall {wall:.2f}s)")
     print(f"{'job':>4} {'dur_s':>7} {'gap_before':>10}  description")
     prev_end = None
     for jid, t0, t1, dur, desc in rows:

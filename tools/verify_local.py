@@ -87,13 +87,13 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
-    from kafkaconnect_spark.session import get_spark
+    from kafkaconnect_spark.session import cpus, get_spark
 
     # no console progress bar: its \r-joined text would share a line
     # with the pass/FAIL lines a captured log is read for
     spark = get_spark(
         "verify-local",
-        master="local[8]",
+        master=f"local[{cpus()}]",
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
